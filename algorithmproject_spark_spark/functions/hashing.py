@@ -11,31 +11,24 @@ raises), is exact, and therefore hash-comparable against a DuckDB
 oracle computing the same fold — which is what makes MinHash-LSH a
 *correctness-gated* operator here rather than a trust-me one.
 
+Each kernel is SQL TEXT: ``ss_*`` for Spark (parsed once by
+``F.expr``/``selectExpr`` — the Column API would cost one py4j
+round-trip per nested ``F.*`` call, seconds of driver time per
+text-hash query build) and ``sql_*`` for the DuckDB oracle.
+
 MOD = 2^31 - 1 (Mersenne prime): keeps a*h + b products under 2^62, no
 BIGINT overflow for any multiplier < 2^31.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 MOD = 2_147_483_647  # 2^31 - 1
 MULT = 31
 GRAM_MULT = 1_000_003  # combines token hashes into n-gram hashes
 
 
-def char_fold_hash(col: Column, mult: int = MULT, mod: int = MOD) -> Column:
-    """Polynomial hash of a string column, computed as a sequential
-    fold — identical left-to-right order in any engine."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda ch: F.ascii(ch).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(mult) + c) % F.lit(mod),
-    )
-
-
 def sql_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
-    """DuckDB twin of :func:`char_fold_hash`.
+    """DuckDB twin of :func:`ss_char_fold_hash`.
 
     Empty-string edge (round-9 review finding): both engines split ''
     into [''], but Spark ``ascii('')`` is 0 while DuckDB ``unicode('')``
@@ -52,33 +45,28 @@ def sql_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
     )
 
 
-def token_hash_array(tokens: Column, mult: int = MULT, mod: int = MOD) -> Column:
-    """Hash every token of an array column (nested HOF — still no UDF)."""
-    return F.transform(tokens, lambda t: char_fold_hash(t, mult, mod))
-
-
-# --------------------------------------------------------------------------
-# Spark-SQL TEXT twins (ss_*) of the Column builders above — same
-# rationale as functions/vectors.py's ss_* family: the Column API costs
-# one py4j round-trip per nested F.* call, which for the text-hash
-# pipelines means seconds of DRIVER time per query build; one F.expr()
-# parse of the identical expression is milliseconds. The parsed trees
-# resolve to the same Catalyst operators with the same fold order and
-# integer ops, so results are bit-identical (oracle-gated on every
-# consumer).
-# --------------------------------------------------------------------------
-
-
 def ss_bind(expr: str, var: str, body: str) -> str:
-    """Text twin of :func:`bind_once`: evaluate ``expr`` once, bind it
-    to lambda variable ``var`` inside ``body``."""
+    """Evaluate ``expr`` ONCE per row and bind the VALUE to lambda
+    variable ``var`` inside ``body``.
+
+    Why this exists: Catalyst's CollapseProject inlines a projected
+    expression into every downstream reference, and
+    InferFiltersFromGenerate copies a generator's child into a Filter
+    — an expression referenced k times is EVALUATED k times. For the
+    interpreted HOF hash pipelines here that multiplies the per-char
+    fold ~30× (measured: doc_dup_span_stats gram build 5.6 s → 0.6 s
+    at sf0.1 after binding). ``transform`` over a 1-element array
+    binds the value to a lambda VARIABLE — references inside ``body``
+    are O(1) variable lookups, not subtree re-evaluations — making
+    this a zero-shuffle, engine-side common-subexpression barrier."""
     return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
 
 
 def ss_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
-    """Spark-SQL text twin of :func:`char_fold_hash` (same sequential
-    fold; ``ascii('')`` is 0 in Spark so no empty-token CASE needed —
-    that guard is DuckDB-side only)."""
+    """Polynomial hash of a string expression, computed as a sequential
+    fold — identical left-to-right order in any engine. ``ascii('')``
+    is 0 in Spark, so no empty-token CASE is needed — that guard is
+    DuckDB-side only."""
     return (
         f"aggregate(transform(split({expr}, ''), "
         f"c_ -> CAST(ascii(c_) AS BIGINT)), CAST(0 AS BIGINT), "
@@ -87,18 +75,27 @@ def ss_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
 
 
 def ss_token_hash_array(tokens: str, mult: int = MULT, mod: int = MOD) -> str:
-    """Text twin of :func:`token_hash_array`."""
+    """Hash every token of an array expression (nested HOF — no UDF)."""
     return f"transform({tokens}, t_ -> {ss_char_fold_hash('t_', mult, mod)})"
 
 
 def ss_gram_hash_array(
     th: str, n: int, mult: int = GRAM_MULT, mod: int = MOD
 ) -> str:
-    """Text twin of :func:`gram_hash_array` over an already-bound
-    token-hash array variable ``th`` — identical n-1 zip_with passes
-    over shifted slices (same fold math). The count/slice expressions
-    are textually repeated; they are O(1) array-length reads, not the
-    upstream fold the Column form's bind protects."""
+    """n-gram hashes composed from an already-bound token-hash array
+    variable ``th`` (bind it with :func:`ss_bind`: the composition
+    references it 2(n-1) times).
+
+    Formulated as n-1 ``zip_with`` passes over shifted slices rather
+    than an ``aggregate`` per window: HOF lambdas are interpreted (not
+    codegen'd), so per-window aggregates cost ~50 expression
+    evaluations each — the zip_with form does 3 array ops per ROW and
+    measured ~30× faster at sf0.1. Fold math:
+    ((h0*G + h1) % M * G + h2) % M.
+
+    ``greatest(count, 0)`` makes short docs yield empty arrays instead
+    of tripping ANSI slice errors (and avoids Spark's descending
+    ``sequence(1, 0)`` trap)."""
     count = f"greatest(size({th}) - {n - 1}, 0)"
     acc = f"slice({th}, 1, {count})"
     for k in range(1, n):
@@ -110,7 +107,7 @@ def ss_gram_hash_array(
 
 
 def ss_minhash_value(hashes: str, a: int, b: int, mod: int = MOD) -> str:
-    """Text twin of :func:`minhash_value` — same affine map + array_min."""
+    """min over the token-hash array of one affine permutation."""
     return f"array_min(transform({hashes}, h_ -> ({a} * h_ + {b}) % {mod}))"
 
 
@@ -118,61 +115,10 @@ def sql_token_hash_array(tokens_expr: str, mult: int = MULT, mod: int = MOD) -> 
     return f"list_transform({tokens_expr}, t_ -> {sql_char_fold_hash('t_', mult, mod)})"
 
 
-def bind_once(col: Column, f) -> Column:
-    """Evaluate ``col`` ONCE per row and hand the bound VALUE to ``f``.
-
-    Why this exists: Catalyst's CollapseProject inlines a projected
-    expression into every downstream reference, and
-    InferFiltersFromGenerate copies a generator's child into a Filter
-    — an expression referenced k times is EVALUATED k times. For the
-    interpreted HOF hash pipelines here that multiplies the per-char
-    fold ~30× (measured: doc_dup_span_stats gram build 5.6 s → 0.6 s
-    at sf0.1 after binding). ``transform`` over a 1-element array
-    binds the value to a lambda VARIABLE — references inside ``f`` are
-    O(1) variable lookups, not subtree re-evaluations — making this a
-    zero-shuffle, engine-side common-subexpression barrier.
-    """
-    return F.get(F.transform(F.array(col), f), 0)
-
-
-def gram_hash_array(
-    token_hashes: Column, n: int, mult: int = GRAM_MULT, mod: int = MOD
-) -> Column:
-    """n-gram hashes composed from token hashes.
-
-    Formulated as n-1 ``zip_with`` passes over shifted slices rather
-    than an ``aggregate`` per window: HOF lambdas are interpreted (not
-    codegen'd), so per-window aggregates cost ~50 expression
-    evaluations each — the zip_with form does 3 array ops per ROW and
-    measured ~30× faster at sf0.1. Fold math is identical:
-    ((h0*G + h1) % M * G + h2) % M.
-
-    The input array is bound once (:func:`bind_once`) because the
-    composition references it 2(n-1) times — inlined, Catalyst would
-    re-run the full upstream token-hash fold per reference.
-
-    ``greatest(count, 0)`` makes short docs yield empty arrays instead
-    of tripping ANSI slice errors (and avoids Spark's descending
-    ``sequence(1, 0)`` trap).
-    """
-
-    def compose(th: Column) -> Column:
-        count = F.greatest(F.size(th) - F.lit(n - 1), F.lit(0))
-        acc = F.slice(th, 1, count)
-        for k in range(1, n):
-            nxt = F.slice(th, F.lit(k + 1), count)
-            acc = F.zip_with(
-                acc, nxt, lambda a, b: (a * F.lit(mult) + b) % F.lit(mod)
-            )
-        return acc
-
-    return bind_once(token_hashes, compose)
-
-
 def sql_gram_hash_array(
     th_expr: str, n: int, mult: int = GRAM_MULT, mod: int = MOD
 ) -> str:
-    """DuckDB twin of :func:`gram_hash_array`."""
+    """DuckDB twin of :func:`ss_gram_hash_array`."""
     return (
         f"list_transform(range(1, len({th_expr}) - {n} + 2), "
         f"i__ -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice({th_expr}, i__, i__ + {n - 1})), "
@@ -191,13 +137,6 @@ MINHASH_PARAMS: tuple[tuple[int, int], ...] = (
     (1549515967, 849514053), (482105297, 1285211813), (1941871225, 206090445),
     (866745923, 1634032507),
 )
-
-
-def minhash_value(hashes: Column, a: int, b: int, mod: int = MOD) -> Column:
-    """min over the token-hash array of one affine permutation."""
-    return F.array_min(
-        F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(mod))
-    )
 
 
 def sql_minhash_value(hashes_expr: str, a: int, b: int, mod: int = MOD) -> str:

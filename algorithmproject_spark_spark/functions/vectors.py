@@ -6,13 +6,18 @@ vector ops — its nearest analogue is mllib sparse vectors,
 folds (``zip_with`` + ``aggregate``), not exploded group-sums: a fold
 adds left-to-right, so the result is bit-identical across engines and
 partitionings, which makes cosine similarity oracle-checkable without
-tolerance hacks. EMB_DIM-wide vectors keep the fold cheap; for very
-wide vectors swap in a pandas_udf without changing call sites.
+tolerance hacks. EMB_DIM-wide vectors keep the fold cheap.
+
+Each kernel is SQL TEXT: ``ss_*`` for Spark and ``sql_*`` for the
+DuckDB oracle. Building the folds through the Column API costs one
+py4j round-trip per nested ``F.*`` call — thousands per ANN-family
+query, measured at 4-12 s of DRIVER time per query at sf0.1 (more than
+the queries' execution; on a cluster the driver pays it before any
+task can launch). One ``F.expr``/``selectExpr`` parse of the text moves
+construction into the JVM parser: one round-trip, milliseconds.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
 
 #: dimensionality of the ``embeddings.embedding`` fixture column —
 #: single source of truth for every ANN/prototype module (the round-7
@@ -20,131 +25,25 @@ from pyspark.sql import Column, functions as F
 EMB_DIM = 64
 
 
-def to_double(vec: Column | str) -> Column:
-    """array<float> → array<double>; per-element widening is exact.
-
-    Pass a COLUMN NAME (str) to build the expression as one F.expr()
-    parse instead of py4j calls — same resolved expression, cheaper
-    construction (see the ss_* section below)."""
-    if isinstance(vec, str):
-        return F.expr(ss_to_double(vec))
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def _dot_d(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two already-widened arrays."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(ss_dot(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm_d(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(ss_norm(a))
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return _dot_d(to_double(a), to_double(b))
-
-
-def norm(a: Column) -> Column:
-    return _norm_d(to_double(a))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """dot/(|a||b|) with each vector widened ONCE via lambda binding —
-    naive composition would inline to_double into the dot fold and both
-    norm folds (CollapseProject duplicates aliases per reference); the
-    arithmetic and fold order are identical, so values are unchanged.
-
-    String inputs (column names) take the one-parse F.expr path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(ss_cosine(a, b))
-    return F.element_at(
-        F.transform(
-            F.array(to_double(a)),
-            lambda va: F.element_at(
-                F.transform(
-                    F.array(to_double(b)),
-                    lambda vb: _dot_d(va, vb) / (_norm_d(va) * _norm_d(vb)),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-
-
-def l2sq(a: Column | str, b: Column | str) -> Column:
-    """Squared L2 distance between two vectors, sequential fold over
-    once-widened arrays (same binding discipline as :func:`cosine`).
-
-    String inputs (column names) take the one-parse F.expr path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(ss_l2sq(a, b))
-    return F.element_at(
-        F.transform(
-            F.array(to_double(a)),
-            lambda va: F.element_at(
-                F.transform(
-                    F.array(to_double(b)),
-                    lambda vb: F.aggregate(
-                        F.zip_with(va, vb, lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0),
-                        lambda acc, d: acc + d,
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-
-
-# --------------------------------------------------------------------------
-# Spark-SQL TEXT twins (ss_*) of the Column builders above.
-#
-# Building the fold kernels through the Column API costs one py4j
-# round-trip per nested F.* call — thousands per ANN-family query,
-# measured at 4-12 s of DRIVER time per query at sf0.1 (more than the
-# queries' execution; the bench's timed window includes plan
-# construction, and on a cluster the driver pays it before any task can
-# launch). Emitting the identical expression as ONE Spark-SQL string
-# parsed by F.expr() moves construction into the JVM parser: one
-# round-trip, milliseconds. The parsed trees resolve to the same
-# Catalyst operators with the same fold order and the same IEEE ops, so
-# results are bit-identical — enforced by the oracle gate on every
-# consumer (optimization guide §1/§4: the Python boundary is the cost,
-# cross it once).
-# --------------------------------------------------------------------------
-
-
 def ss_fmt(x: float) -> str:
     """Shortest-repr double literal with Spark's D suffix. Python repr
     round-trips the exact IEEE double, and the JVM parses the same
-    shortest decimal back to the same bits — identical to what
-    F.lit(x) ships."""
+    shortest decimal back to the same bits."""
     return repr(float(x)) + "D"
 
 
 def ss_arr(vals) -> str:
-    """array(...) of double literals — evaluates to the same value as
-    F.array(*[F.lit(x) ...]) (and constant-folds to one Literal)."""
+    """array(...) of double literals (constant-folds to one Literal)."""
     return "array(" + ", ".join(ss_fmt(v) for v in vals) + ")"
 
 
 def ss_to_double(expr: str) -> str:
-    """Text twin of :func:`to_double`."""
+    """array<float> → array<double>; per-element widening is exact."""
     return f"transform({expr}, x -> CAST(x AS DOUBLE))"
 
 
 def ss_dot(a: str, b: str) -> str:
-    """Text twin of :func:`_dot_d` (same sequential fold)."""
+    """Dot product of two already-widened arrays (sequential fold)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         f"(acc, v) -> acc + v)"
@@ -152,12 +51,16 @@ def ss_dot(a: str, b: str) -> str:
 
 
 def ss_norm(a: str) -> str:
-    """Text twin of :func:`_norm_d`."""
+    """L2 norm of an already-widened array (sequential fold)."""
     return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
 def ss_cosine(a: str, b: str) -> str:
-    """Text twin of :func:`cosine` (same once-widened lambda binding)."""
+    """dot/(|a||b|) with each vector widened ONCE via lambda binding —
+    naive composition would inline the widening into the dot fold and
+    both norm folds (CollapseProject duplicates aliases per reference);
+    the arithmetic and fold order are identical, so values are
+    unchanged."""
     return (
         f"element_at(transform(array({ss_to_double(a)}), va -> "
         f"element_at(transform(array({ss_to_double(b)}), vb -> "
@@ -167,7 +70,8 @@ def ss_cosine(a: str, b: str) -> str:
 
 
 def ss_l2sq(a: str, b: str) -> str:
-    """Text twin of :func:`l2sq` (same sequential fold order)."""
+    """Squared L2 distance between two vectors, sequential fold over
+    once-widened arrays (same binding discipline as :func:`ss_cosine`)."""
     return (
         f"element_at(transform(array({ss_to_double(a)}), va -> "
         f"element_at(transform(array({ss_to_double(b)}), vb -> "
@@ -203,7 +107,7 @@ def sql_cosine(a: str, b: str) -> str:
 
 
 def sql_l2sq(a: str, b: str) -> str:
-    """DuckDB twin of :func:`l2sq` (same sequential fold order)."""
+    """DuckDB twin of :func:`ss_l2sq` (same sequential fold order)."""
     return (
         f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
         f"list_transform(range(1, len({a}) + 1), "

@@ -28,20 +28,17 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    micros,
     sql_hash_mod,
     sql_micros,
+    ss_hash_mod,
     ss_micros,
 )
 from algorithmproject_spark_spark.functions.vectors import (
     EMB_DIM,
-    cosine,
     sql_cosine,
     ss_arr,
     ss_cosine,
     ss_to_double,
-    to_double,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -89,20 +86,8 @@ def cells_for(n_vectors: int, target_cell_size: int = TARGET_CELL_SIZE) -> int:
 CENTROIDS: tuple[tuple[float, ...], ...] = centroids_for(K_CELLS)
 
 
-def _l2sq(v: Column, centroid: tuple[float, ...]) -> Column:
-    """Sequential-fold squared L2 distance to a fixed centroid."""
-    cl = F.array(*[F.lit(x) for x in centroid])
-    return F.aggregate(
-        F.zip_with(v, cl, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 def _ss_l2sq(v: str, centroid: tuple[float, ...]) -> str:
-    """Spark-SQL text twin of :func:`_l2sq` (see vectors.py ss_*
-    rationale: one F.expr parse instead of ~70 py4j calls per
-    centroid)."""
+    """Sequential-fold squared L2 distance to a fixed centroid."""
     return (
         f"aggregate(zip_with({v}, {ss_arr(centroid)}, "
         f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, d) -> acc + d)"
@@ -120,38 +105,14 @@ def _sql_l2sq(emb: str, centroid: tuple[float, ...]) -> str:
     )
 
 
-def _enc_array_from(
-    emb: Column, cents: Sequence[tuple[float, ...]]
-) -> Column:
+def _ss_enc_array_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
     """array of BIGINT encodings dist_e6 * k + cell, one per centroid.
     dist ≤ 4·DIM → dist_e6·k < 2^31·... stays far inside BIGINT.
 
     The widened vector is bound through a 1-element ``transform`` lambda
-    so the 64-cast ``to_double`` runs once, not once per centroid fold
+    so the 64-cast widening runs once, not once per centroid fold
     (CollapseProject inlines projected/nested aliases per reference).
     """
-    k = len(cents)
-    return F.element_at(
-        F.transform(
-            F.array(to_double(emb)),
-            lambda v: F.array(
-                *[
-                    micros(_l2sq(v, c)) * F.lit(k) + F.lit(i)
-                    for i, c in enumerate(cents)
-                ]
-            ),
-        ),
-        1,
-    )
-
-
-def _enc_array(emb: Column, k: int = K_CELLS) -> Column:
-    return _enc_array_from(emb, centroids_for(k))
-
-
-def _ss_enc_array_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
-    """Spark-SQL text twin of :func:`_enc_array_from`: identical
-    once-widened lambda binding and per-centroid encodings."""
     k = len(cents)
     parts = ", ".join(
         f"{ss_micros(_ss_l2sq('v', c))} * {k} + {i}"
@@ -163,15 +124,24 @@ def _ss_enc_array_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
     )
 
 
+def _ss_cell_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
+    return (
+        f"CAST(array_min({_ss_enc_array_from(emb, cents)}) "
+        f"% {len(cents)} AS INT)"
+    )
+
+
 def ss_cell(emb: str, k: int = K_CELLS) -> str:
-    """Spark-SQL text twin of :func:`cell_col`."""
-    cents = centroids_for(k)
-    return f"CAST(array_min({_ss_enc_array_from(emb, cents)}) % {k} AS INT)"
+    """Nearest-centroid cell id (exact integer argmin)."""
+    return _ss_cell_from(emb, centroids_for(k))
 
 
 def ss_probe_cells(emb: str, k: int = K_CELLS) -> str:
-    """Spark-SQL text twin of :func:`probe_cells_col` (same bound-sort
-    binding)."""
+    """The NPROBE nearest cell ids for a query vector.
+
+    The sorted encoding array is lambda-bound: each of the NPROBE
+    ``element_at`` references would otherwise re-sort — and re-compute —
+    the whole k-fold encoding array."""
     cents = centroids_for(k)
     inner = f"array_sort({_ss_enc_array_from(emb, cents)})"
     parts = ", ".join(
@@ -210,70 +180,24 @@ def sql_probe_cells_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
     return f"[{parts}]"
 
 
-def cell_col(emb: Column | str, k: int = K_CELLS) -> Column:
-    """Nearest-centroid cell id (exact integer argmin). Pass
-    ``k=cells_for(n_vectors)`` to keep cell sizes bounded at scale.
-    A string input (column name) takes the one-parse F.expr path."""
-    if isinstance(emb, str):
-        return F.expr(ss_cell(emb, k))
-    return (F.array_min(_enc_array(emb, k)) % F.lit(k)).cast("int")
+def cell_col(emb: str, k: int = K_CELLS) -> Column:
+    """Nearest-centroid cell id of embedding column ``emb``. Pass
+    ``k=cells_for(n_vectors)`` to keep cell sizes bounded at scale."""
+    return F.expr(ss_cell(emb, k))
 
 
-def cell_col_from(emb: Column | str, cents: Sequence[tuple[float, ...]]) -> Column:
+def cell_col_from(emb: str, cents: Sequence[tuple[float, ...]]) -> Column:
     """Nearest-centroid cell for an EXPLICIT centroid set — the
-    assignment column for exported/learned centroids. A string input
-    (column name) takes the one-parse F.expr path."""
-    if isinstance(emb, str):
-        return F.expr(
-            f"CAST(array_min({_ss_enc_array_from(emb, cents)}) "
-            f"% {len(cents)} AS INT)"
-        )
-    return (F.array_min(_enc_array_from(emb, cents)) % F.lit(len(cents))).cast(
-        "int"
-    )
+    assignment column for exported/learned centroids."""
+    return F.expr(_ss_cell_from(emb, cents))
 
 
 def sql_cell(emb: str) -> str:
     return f"CAST(list_min({_sql_enc_array(emb)}) % {K_CELLS} AS INT)"
 
 
-def probe_cells_col_from(
-    emb: Column | str, cents: Sequence[tuple[float, ...]]
-) -> Column:
-    """The NPROBE nearest cell ids for a query vector.
-
-    The sorted encoding array is lambda-bound: each of the NPROBE
-    ``element_at`` references would otherwise re-sort — and re-compute —
-    the whole k-fold encoding array. A string input (column name)
-    takes the one-parse F.expr path."""
-    if isinstance(emb, str):
-        inner = f"array_sort({_ss_enc_array_from(emb, cents)})"
-        parts = ", ".join(
-            f"CAST(element_at(s, {i + 1}) % {len(cents)} AS INT)"
-            for i in range(NPROBE)
-        )
-        return F.expr(
-            f"element_at(transform(array({inner}), s -> array({parts})), 1)"
-        )
-    k = len(cents)
-    return F.element_at(
-        F.transform(
-            F.array(F.array_sort(_enc_array_from(emb, cents))),
-            lambda s: F.array(
-                *[
-                    (F.element_at(s, i + 1) % F.lit(k)).cast("int")
-                    for i in range(NPROBE)
-                ]
-            ),
-        ),
-        1,
-    )
-
-
-def probe_cells_col(emb: Column | str, k: int = K_CELLS) -> Column:
-    if isinstance(emb, str):
-        return F.expr(ss_probe_cells(emb, k))
-    return probe_cells_col_from(emb, centroids_for(k))
+def probe_cells_col(emb: str, k: int = K_CELLS) -> Column:
+    return F.expr(ss_probe_cells(emb, k))
 
 
 def sql_probe_cells(emb: str) -> str:
@@ -395,17 +319,8 @@ INIT_CENTS_E6: tuple[tuple[int, ...], ...] = tuple(
 )
 
 
-def _emb_e6(emb: Column) -> Column:
-    """array<double> → offset-scaled array<bigint> (exact, portable)."""
-    return F.transform(
-        to_double(emb),
-        lambda x: F.floor(x * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-        + F.lit(E6_OFFSET),
-    )
-
-
 def _ss_emb_e6(emb: str) -> str:
-    """Spark-SQL text twin of :func:`_emb_e6`."""
+    """array<double> → offset-scaled array<bigint> (exact, portable)."""
     return (
         f"transform({ss_to_double(emb)}, "
         f"x -> CAST(floor(x * 1000000.0D + 0.5D) AS BIGINT) + {E6_OFFSET})"
@@ -417,7 +332,9 @@ def _ss_arr_int(vals: Sequence[int]) -> str:
 
 
 def _ss_enc_int(v: str, cents: Sequence[Sequence[int]]) -> str:
-    """Spark-SQL text twin of :func:`_enc_int` (same BIGINT fold)."""
+    """min over centroids of BIGINT encoding dist²·k + cell_id, where v
+    is an already-bound array<bigint>. dist² ≤ 64·(2e6)² ≈ 2.6e14, ×k
+    stays far inside BIGINT (ANSI-safe)."""
     k = len(cents)
     encs = ", ".join(
         f"aggregate(zip_with({v}, {_ss_arr_int(c)}, "
@@ -429,7 +346,8 @@ def _ss_enc_int(v: str, cents: Sequence[Sequence[int]]) -> str:
 
 
 def _ss_bound_enc(e6: str, cents: Sequence[Sequence[int]]) -> str:
-    """Spark-SQL text twin of :func:`_bound_enc`."""
+    """Bind e6 through a 1-element lambda so the 64-element array is
+    evaluated once, not once per centroid fold (CollapseProject)."""
     return (
         f"element_at(transform(array({e6}), "
         f"v -> {_ss_enc_int('v', cents)}), 1)"
@@ -440,31 +358,6 @@ def _sql_emb_e6(emb: str) -> str:
     return (
         f"list_transform({emb}, x_ -> "
         f"CAST(floor(CAST(x_ AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) + {E6_OFFSET})"
-    )
-
-
-def _enc_int(v: Column, cents: Sequence[Sequence[int]]) -> Column:
-    """min over centroids of BIGINT encoding dist²·k + cell_id, where v
-    is an already-bound array<bigint>. dist² ≤ 64·(2e6)² ≈ 2.6e14, ×k
-    stays far inside BIGINT (ANSI-safe)."""
-    k = len(cents)
-    encs = []
-    for i, c in enumerate(cents):
-        cl = F.array(*[F.lit(int(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, cl, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + t,
-        )
-        encs.append(d * F.lit(k) + F.lit(i))
-    return F.array_min(F.array(*encs))
-
-
-def _bound_enc(e6: Column, cents: Sequence[Sequence[int]]) -> Column:
-    """Bind e6 through a 1-element lambda so the 64-element array is
-    evaluated once, not once per centroid fold (CollapseProject)."""
-    return F.element_at(
-        F.transform(F.array(e6), lambda v: _enc_int(v, cents)), 1
     )
 
 
@@ -479,7 +372,7 @@ def lloyd_kmeans(
     (the bounded, documented collect pattern — k·dim ints, never data-
     sized). Empty cells keep their previous centroid."""
     fit = (
-        emb.filter(hash_mod("vec_id", fit_mod) == 0)
+        emb.filter(F.expr(ss_hash_mod("vec_id", fit_mod)) == 0)
         .select(F.expr(_ss_emb_e6("embedding")).alias("e6"))
         .cache()
     )
@@ -675,8 +568,8 @@ def kmeans_cells(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feat = emb.withColumn("features", array_to_vector(to_double("embedding")))
-    fit_input = feat.filter(hash_mod("vec_id", fit_mod) == 0) if fit_mod > 1 else feat
+    feat = emb.withColumn("features", array_to_vector(F.expr(ss_to_double("embedding"))))
+    fit_input = feat.filter(F.expr(ss_hash_mod("vec_id", fit_mod)) == 0) if fit_mod > 1 else feat
     # Tiny-input guard (edge-sweep finding): pyspark.ml KMeans aborts
     # when the fit input has fewer rows than k (and requires k >= 2).
     # Probe with limit(k).count(): it returns min(k, n_fit) exactly —

@@ -36,14 +36,13 @@ import random
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import micros, sql_micros, ss_micros
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
     EMB_DIM,
-    l2sq,
     sql_l2sq,
     ss_arr,
+    ss_l2sq,
     ss_to_double,
-    to_double,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -65,66 +64,12 @@ CODEBOOKS: tuple[tuple[tuple[float, ...], ...], ...] = tuple(
 )
 
 
-def _cb_lit(j: int) -> Column:
-    """Codebook j as ONE nested literal array<array<double>> — a single
-    Literal node feeding a single-lambda transform, instead of K
+def _ss_cb(j: int) -> str:
+    """Codebook j as ONE nested array<array<double>> — constant-folds
+    to a single Literal feeding a single-lambda transform, instead of K
     separate fold subtrees over K·SUB_DIM CreateArray nodes. Expression
     tree (and task-binary/codegen) size drops ~16×; the per-code fold
     copies cost ~13 s of plan overhead at sf0.1 before compaction."""
-    return F.lit([list(cvec) for cvec in CODEBOOKS[j]])
-
-
-def _fold_l2(sub: Column, cb: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(sub, cb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
-def _dists_2d(v: Column) -> Column:
-    """array[j][c] of micros(subspace distance) for a bound widened
-    vector — the shared PQ kernel: M transform-lambdas, one fold each.
-    The subvector slices are bound once through the inner lambda."""
-    subs = F.array(*[F.slice(v, j * SUB_DIM + 1, SUB_DIM) for j in range(M_SUB)])
-    return F.element_at(
-        F.transform(
-            F.array(subs),
-            lambda s: F.array(
-                *[
-                    F.transform(
-                        _cb_lit(j),
-                        lambda cb: micros(_fold_l2(F.element_at(s, j + 1), cb)),
-                    )
-                    for j in range(M_SUB)
-                ]
-            ),
-        ),
-        1,
-    )
-
-
-def _enc_from_dists(dists: Column) -> Column:
-    """array of M argmin encodings d·K + c from the 2-D distance array
-    (two-arg transform lambda supplies the code index)."""
-    return F.transform(
-        dists,
-        lambda dj: F.array_min(
-            F.transform(dj, lambda d, i: d * F.lit(K_PQ) + i.cast("long"))
-        ),
-    )
-
-
-# Spark-SQL TEXT twins (see functions/vectors.py ss_* rationale: the
-# Column forms of these kernels cost thousands of py4j round-trips —
-# the measured bulk of this family's bench time at sf0.1; the text
-# forms parse once in the JVM and resolve to the identical Catalyst
-# trees, so values are bit-exact).
-
-
-def _ss_cb(j: int) -> str:
-    """Codebook j as array(array(...)) text — constant-folds to the
-    same nested-array value `_cb_lit` ships as one Literal."""
     return "array(" + ", ".join(ss_arr(cvec) for cvec in CODEBOOKS[j]) + ")"
 
 
@@ -136,7 +81,9 @@ def _ss_fold_l2(sub: str, cb: str) -> str:
 
 
 def _ss_dists_2d(v: str) -> str:
-    """Text twin of :func:`_dists_2d` for a bound widened vector."""
+    """array[j][c] of micros(subspace distance) for a bound widened
+    vector — the shared PQ kernel: M transform-lambdas, one fold each.
+    The subvector slices are bound once through the inner lambda."""
     subs = "array(" + ", ".join(
         f"slice({v}, {j * SUB_DIM + 1}, {SUB_DIM})" for j in range(M_SUB)
     ) + ")"
@@ -149,7 +96,8 @@ def _ss_dists_2d(v: str) -> str:
 
 
 def _ss_enc_from_dists(dists: str) -> str:
-    """Text twin of :func:`_enc_from_dists`."""
+    """array of M argmin encodings d·K + c from the 2-D distance array
+    (two-arg transform lambda supplies the code index)."""
     return (
         f"transform({dists}, dj -> array_min("
         f"transform(dj, (d, i) -> d * {K_PQ} + CAST(i AS BIGINT))))"
@@ -166,7 +114,7 @@ def ss_d2(emb: str) -> str:
 
 
 def ss_pq_code_array(emb: str) -> str:
-    """Text twin of :func:`pq_code_array`."""
+    """array<int> of the M per-subspace PQ codes for one embedding."""
     return (
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> transform({_ss_enc_from_dists(_ss_dists_2d('v'))}, "
@@ -175,9 +123,7 @@ def ss_pq_code_array(emb: str) -> str:
 
 
 def ss_pq_pack(emb: str) -> str:
-    """Text twin of :func:`pq_pack` (same double lambda binding; the
-    named_struct resolves to the same CreateNamedStruct as
-    F.struct(...alias...))."""
+    """struct(packed_code, recon_err_e6) text (see :func:`pq_pack`)."""
     enc_arr = (
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> {_ss_enc_from_dists(_ss_dists_2d('v'))}), 1)"
@@ -227,57 +173,23 @@ def _sql_enc_j(emb: str, j: int) -> str:
     return f"list_min([{parts}])"
 
 
-def pq_pack(emb: Column | str) -> Column:
+def pq_pack(emb: str) -> Column:
     """struct(packed_code, recon_err_e6): the 32-bit packed code and the
     total squared reconstruction error in micros.
 
     Double lambda binding: the widened vector feeds M×K folds once, and
     the 8-element enc array feeds the 16 pack/err references once.
     enc % K is the code; enc >> 4 recovers micros(dist) exactly (enc is
-    nonnegative and K is a power of two). A string input (column name)
-    takes the one-parse F.expr path.
+    nonnegative and K is a power of two).
     """
-    if isinstance(emb, str):
-        return F.expr(ss_pq_pack(emb))
+    return F.expr(ss_pq_pack(emb))
 
-    def pack(e: Column) -> Column:
-        packed = F.lit(0).cast("long")
-        err = F.lit(0).cast("long")
-        for j in range(M_SUB):
-            enc = F.element_at(e, j + 1)
-            packed = packed + (enc % K_PQ) * F.lit(K_PQ**j)
-            err = err + F.shiftright(enc, 4)
-        return F.struct(packed.alias("packed_code"), err.alias("recon_err_e6"))
-
-    enc_arr = F.element_at(
-        F.transform(
-            F.array(to_double(emb)),
-            lambda v: _enc_from_dists(_dists_2d(v)),
-        ),
-        1,
-    )
-    return F.element_at(F.transform(F.array(enc_arr), pack), 1)
-
-
-def pq_code_array(emb: Column | str) -> Column:
+def pq_code_array(emb: str) -> Column:
     """array<int> of the M per-subspace PQ codes for one embedding —
     the map-only encoding kernel, kept as one compact column for
     symmetric (all-pairs) consumers like the knn_label_noise
-    prefilter. A string input takes the one-parse F.expr path."""
-    if isinstance(emb, str):
-        return F.expr(ss_pq_code_array(emb))
-    return F.element_at(
-        F.transform(
-            F.array(to_double(emb)),
-            lambda v: F.transform(
-                _enc_from_dists(_dists_2d(v)),
-                lambda e: (e % K_PQ).cast("int"),
-            ),
-        ),
-        1,
-    )
-
-
+    prefilter."""
+    return F.expr(ss_pq_code_array(emb))
 def sql_pq_code_array(emb: str) -> str:
     """DuckDB twin of :func:`pq_code_array`."""
     return (
@@ -501,7 +413,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            micros(l2sq("q_emb", "embedding")).alias("l2_e6"),
+            F.expr(ss_micros(ss_l2sq("q_emb", "embedding"))).alias("l2_e6"),
         )
     )
     w = W.partitionBy("q_id").orderBy(F.asc("l2_e6"), F.asc("neighbor_id"))

@@ -23,8 +23,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 from algorithmproject_spark_spark.functions.hashing import (
-    char_fold_hash,
     sql_char_fold_hash,
+    ss_char_fold_hash,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -52,7 +52,7 @@ def cms_counters(
     1 — the compacted-distribution form: feeding a pre-aggregated
     (item, count) relation yields the IDENTICAL counter table while the
     d-way explode runs over |vocab| rows, not the corpus."""
-    h = char_fold_hash(F.col(col))
+    h = F.expr(ss_char_fold_hash(col))
     rows = F.array(
         *[
             F.struct(
@@ -130,7 +130,7 @@ def words_countmin_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters = cms_counters(wc, "word", weight="exact_n")
 
     topw = wc.orderBy(F.desc("exact_n"), F.asc("word")).limit(20)
-    h = char_fold_hash(F.col("word"))
+    h = F.expr(ss_char_fold_hash("word"))
     probe_rows = F.array(
         *[
             F.struct(F.lit(i).alias("row"), _bucket(h, a, b).alias("bucket"))

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -74,7 +74,7 @@ def grouped_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     prepped = ev.select(
         "event_type",
-        scaled_long("value", 100).alias("v"),
+        F.expr(ss_scaled_long("value", 100)).alias("v"),
         ((F.col("user_id") % 5) + 1).alias("w"),
     )
     return prepped.groupBy("event_type").agg(

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.vectors import EMB_DIM, to_double
+from algorithmproject_spark_spark.functions.vectors import EMB_DIM, ss_to_double
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -72,7 +72,7 @@ def _tdiv(a: int, b: int) -> int:
 def quant_col(emb: Column) -> Column:
     """array<long> of milli-quantized components."""
     return F.transform(
-        to_double(emb),
+        F.transform(emb, lambda x: x.cast("double")),
         lambda x: F.floor(x * F.lit(float(Q_SCALE)) + F.lit(0.5)).cast(
             "long"
         ),
@@ -81,8 +81,6 @@ def quant_col(emb: Column) -> Column:
 
 def ss_quant(emb: str) -> str:
     """Spark-SQL text twin of :func:`quant_col` (r13 one-parse)."""
-    from algorithmproject_spark_spark.functions.vectors import ss_to_double
-
     return (
         f"transform({ss_to_double(emb)}, "
         f"x -> CAST(floor(x * {float(Q_SCALE)!r}D + 0.5D) AS BIGINT))"

@@ -176,7 +176,7 @@ def salted_join(
     "oracle",
 )
 def salted_join_order_priority(spark: _SS, sf_dir: str) -> _DF:
-    from algorithmproject_spark_spark.functions.numeric import scaled_long
+    from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
     from algorithmproject_spark_spark.sources.catalog import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -188,5 +188,5 @@ def salted_join_order_priority(spark: _SS, sf_dir: str) -> _DF:
     joined = salted_join(li, orders, "o_orderkey", buckets=8)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_lines"),
-        F.sum(scaled_long("l_quantity", 100)).alias("qty_c2"),
+        F.expr(f"sum({ss_scaled_long('l_quantity', 100)})").alias("qty_c2"),
     )

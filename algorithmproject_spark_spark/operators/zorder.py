@@ -95,13 +95,6 @@ def sql_zvalue16(a_expr: str, b_expr: str) -> str:
     return f"({sql_spread_bits16(a_expr)} | ({sql_spread_bits16(b_expr)} << 1))"
 
 
-# ONE exact-div implementation repo-wide: a local (num - num%den)/den
-# copy would silently go inexact past 2^53 (double `/` + cast).
-from algorithmproject_spark_spark.functions.numeric import (  # noqa: E402
-    floordiv as _floordiv,
-)
-
-
 def rank16_exact(col: Column, vmin: Column, vmax: Column) -> Column:
     """Scale a BIGINT dimension to 0..65535 with exact integer math:
     ``(x - min) * 65535 div (max - min)`` (the degenerate max==min
@@ -109,10 +102,13 @@ def rank16_exact(col: Column, vmin: Column, vmax: Column) -> Column:
 
     Overflow contract: ``(max - min) * 65535`` must stay below 2^63 —
     i.e. the dimension's RANGE below ~1.4e14. Timestamps therefore
-    enter as epoch SECONDS (range ~3e7/year), never micros."""
+    enter as epoch SECONDS (range ~3e7/year), never micros.
+
+    The quotient is SQL's exact ``div``; a (num - num%den)/den copy
+    would silently go inexact past 2^53 (double ``/`` + cast)."""
     rng = vmax - vmin
     return F.when(rng <= F.lit(0), F.lit(0).cast("long")).otherwise(
-        _floordiv((col - vmin) * F.lit(65535), rng)
+        F.call_function("div", (col - vmin) * F.lit(65535), rng)
     )
 
 

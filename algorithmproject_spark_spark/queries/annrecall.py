@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
+from algorithmproject_spark_spark.functions.vectors import ss_cosine
 from algorithmproject_spark_spark.registry import REGISTRY, register
 
 
@@ -211,9 +212,10 @@ def ann_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(
                 F.when(
                     F.col("bf_rk") == 1,
-                    floordiv(
-                        F.lit(1_000_000).cast("long"),
-                        F.col("a_rk").cast("long"),
+                    F.expr(
+                        ss_floordiv(
+                            "CAST(1000000 AS BIGINT)", "CAST(a_rk AS BIGINT)"
+                        )
                     ),
                 )
             ),
@@ -268,9 +270,8 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = approx.select(
         "q_id",
         "neighbor_id",
-        floordiv(
-            F.lit(1_000_000).cast("long"),
-            (F.lit(RRF_K) + F.col("rk")).cast("long"),
+        F.expr(
+            ss_floordiv("CAST(1000000 AS BIGINT)", f"CAST({RRF_K} + rk AS BIGINT)")
         ).alias("pts"),
     )
     fused = contrib.groupBy("q_id", "neighbor_id").agg(
@@ -324,8 +325,6 @@ def _sql_trunc_topk() -> str:
 
 
 def _install_matryoshka() -> None:
-    from algorithmproject_spark_spark.functions.numeric import micros
-    from algorithmproject_spark_spark.functions.vectors import cosine
     from algorithmproject_spark_spark.queries.similarity import (
         N_QUERIES,
         TOP_K,
@@ -369,10 +368,8 @@ def _install_matryoshka() -> None:
             .select(
                 "q_id",
                 F.col("vec_id").alias("neighbor_id"),
-                micros(
-                    cosine(
-                        F.col("q_emb"), F.slice(F.col("embedding"), 1, d)
-                    )
+                F.expr(
+                    ss_micros(ss_cosine("q_emb", f"slice(embedding, 1, {d})"))
                 ).alias("cosine_e6"),
             )
         )

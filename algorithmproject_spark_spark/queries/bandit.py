@@ -31,13 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    hash_mod,
-    micros,
-    ppm,
     sql_hash_mod,
     sql_micros,
     sql_ppm,
+    ss_floordiv,
+    ss_hash_mod,
+    ss_micros,
+    ss_ppm,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -66,7 +66,7 @@ def _policy_arm(name: str):
     if name == "always_0":
         return F.lit(0).cast("long")
     if name == "user_hash":
-        return hash_mod("user_id", N_ARMS).cast("long")
+        return F.expr(ss_hash_mod("user_id", N_ARMS)).cast("long")
     # pmod-style double-% — see _sql_policy_arm's note (negative values
     # must land in [0, N_ARMS) or they can never match a logged arm)
     band = F.call_function(
@@ -128,8 +128,8 @@ def events_bandit_replay_eval(
         "event_id",
         "user_id",
         "value",
-        hash_mod("event_id", N_ARMS).cast("long").alias("logged_arm"),
-        micros(F.col("value")).alias("reward_micros"),
+        F.expr(ss_hash_mod("event_id", N_ARMS)).cast("long").alias("logged_arm"),
+        F.expr(ss_micros("value")).alias("reward_micros"),
     )
     pol_structs = F.array(
         *[
@@ -142,19 +142,18 @@ def events_bandit_replay_eval(
     flags = ev.select(
         "logged_arm", "reward_micros", F.explode(pol_structs).alias("p")
     ).select("logged_arm", "reward_micros", "p.policy", "p.pol_arm")
-    matched = F.sum(
-        F.when(F.col("pol_arm") == F.col("logged_arm"), 1).otherwise(0)
-    ).cast("long")
-    matched_reward = F.sum(
-        F.when(
-            F.col("pol_arm") == F.col("logged_arm"), F.col("reward_micros")
-        ).otherwise(0)
+    matched = (
+        "CAST(sum(CASE WHEN (pol_arm = logged_arm) THEN 1 ELSE 0 END) AS BIGINT)"
+    )
+    matched_reward = (
+        "sum(CASE WHEN (pol_arm = logged_arm) THEN reward_micros ELSE 0 END)"
     )
     return flags.groupBy("policy").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        matched.alias("n_matched"),
-        ppm(matched, F.count(F.lit(1))).alias("match_ppm"),
-        F.when(matched > 0, floordiv(matched_reward, matched))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("value_micros"),
+        F.expr(matched).alias("n_matched"),
+        F.expr(ss_ppm(matched, "count(1)")).alias("match_ppm"),
+        F.expr(
+            f"CASE WHEN {matched} > 0 THEN {ss_floordiv(matched_reward, matched)}"
+            " ELSE CAST(NULL AS BIGINT) END"
+        ).alias("value_micros"),
     )

@@ -20,7 +20,7 @@ DuckDB oracle under any partitioning:
   significant digit distribution of event values vs Benford's law —
   the classic fabricated-data detector. The digit comes from the
   STRING of the exact cents integer (functions/numeric.py::
-  scaled_long), never from float→string (Spark renders 1e4 as
+  ss_scaled_long), never from float→string (Spark renders 1e4 as
   "10000.0", DuckDB as "10000.0" only sometimes — engine float
   formatting is not a contract; BIGINT formatting is).
 
@@ -35,10 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    scaled_long,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -93,9 +90,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src",
             "dst",
             "cnt",
-            floordiv(F.col("cnt") * F.lit(1_000_000), F.col("n")).alias(
-                "p_e6"
-            ),
+            F.expr(ss_floordiv("cnt * 1000000", "n")).alias("p_e6"),
         )
     )
 
@@ -161,7 +156,7 @@ def user_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.log(F.col("n")) * F.lit(1e6) + F.lit(0.5)).cast(
                     "long"
                 )
-                - floordiv(F.col("s_e6"), F.col("n"))
+                - F.expr(ss_floordiv("s_e6", "n"))
             ).alias("entropy_e6"),
         )
         .orderBy(F.desc("entropy_e6"), F.asc("user_id"))
@@ -336,7 +331,7 @@ _BENFORD_PERMILLE = {
 def events_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("value")
     cents = ev.filter(F.col("value") > 0).select(
-        scaled_long("value").alias("cents")
+        F.expr(ss_scaled_long("value")).alias("cents")
     )
     digits = cents.filter(F.col("cents") > 0).select(
         F.substring(F.col("cents").cast("string"), 1, 1)
@@ -355,9 +350,7 @@ def events_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return obs.crossJoin(F.broadcast(tot)).select(
         "digit",
         "n_obs",
-        floordiv(F.col("n_obs") * F.lit(1000), F.col("n")).alias(
-            "obs_permille"
-        ),
+        F.expr(ss_floordiv("n_obs * 1000", "n")).alias("obs_permille"),
         benford[F.col("digit")].cast("long").alias("benford_permille"),
     )
 
@@ -527,10 +520,7 @@ def events_position_attribution(
             F.lit(400_000),
         )
         .otherwise(
-            floordiv(
-                F.lit(200_000).cast("long"),
-                (F.col("k") - 2).cast("long"),
-            )
+            F.expr(ss_floordiv("CAST(200000 AS BIGINT)", "CAST(k - 2 AS BIGINT)"))
         )
     )
     return ranked.select(
@@ -751,18 +741,15 @@ def events_session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_ev"),
         (F.max("us") - F.min("us")).cast("long").alias("dur_us"),
     )
-    n_sessions = F.count(F.lit(1)).cast("long")
-    from algorithmproject_spark_spark.functions.numeric import floordiv as _fd
-
     return per.groupBy("user_id").agg(
-        n_sessions.alias("n_sessions"),
+        F.count(F.lit(1)).cast("long").alias("n_sessions"),
         F.sum("n_ev").cast("long").alias("n_events"),
         F.sum(F.when(F.col("n_ev") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_bounce"),
         F.max("n_ev").cast("long").alias("max_session_events"),
         F.max("dur_us").cast("long").alias("max_session_dur_us"),
-        _fd(F.sum("n_ev") * F.lit(1_000_000), n_sessions).alias(
-            "events_per_session_e6"
-        ),
+        F.expr(
+            ss_floordiv("sum(n_ev) * 1000000", "CAST(count(1) AS BIGINT)")
+        ).alias("events_per_session_e6"),
     )

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.queries.behavior import ACTIVITY_WINDOW
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -148,12 +148,13 @@ def user_churn_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "n_active_days",
         "n_types",
-        floordiv(
-            F.col("n_events") * F.lit(1_000).cast("long"),
-            F.col("n_active_days"),
+        F.expr(
+            ss_floordiv("n_events * CAST(1000 AS BIGINT)", "n_active_days")
         ).alias("events_per_active_day_e3"),
-        floordiv(
-            F.col("n_active_days") * F.lit(1_000).cast("long"), tenure
+        F.expr(
+            ss_floordiv(
+                "n_active_days * CAST(1000 AS BIGINT)", "max_day - first_day + 1"
+            )
         ).alias("active_share_e3"),
         # all-63-days mask is BIGINT max; mask+1 would raise on ANSI
         # overflow — the full window is its own case (CASE branches

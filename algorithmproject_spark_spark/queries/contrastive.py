@@ -31,10 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    sql_hash_mod,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.queries.chunking import (
     sliding_chunks,
     _sql_sliding_chunks,
@@ -98,15 +95,13 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("pos_hash").isNotNull())
     dict_ = (
         chunks.filter(F.col("chunk_idx") == 0)
-        .groupBy(hash_mod("doc_id", NEG_BUCKETS).alias("bucket"))
+        .groupBy(F.expr(ss_hash_mod("doc_id", NEG_BUCKETS)).alias("bucket"))
         .agg(
             F.min("doc_id").cast("long").alias("neg_doc_id"),
             F.min_by("chunk_hash", "doc_id").alias("neg_hash"),
         )
     )
-    probe = hash_mod(
-        F.col("doc_id") * F.lit(NEG_MIX) + F.col("anchor_idx"), NEG_BUCKETS
-    )
+    probe = F.expr(ss_hash_mod(f"doc_id * {NEG_MIX} + anchor_idx", NEG_BUCKETS))
     return (
         adj.join(F.broadcast(dict_), probe == dict_["bucket"])
         .filter(F.col("neg_doc_id") != F.col("doc_id"))

@@ -34,10 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    ppm,
     sql_ppm,
     sql_ratio_e6,
+    ss_floordiv,
+    ss_ppm,
+    ss_ratio_e6,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -105,7 +106,7 @@ def vocab_coverage_curve(docs: DataFrame) -> DataFrame:
         ranked.filter(F.array_contains(ladder, F.col("rk")))
         .select(
             F.col("rk").alias("v"),
-            ppm(F.col("cum"), F.col("n")).alias("coverage_ppm"),
+            F.expr(ss_ppm("cum", "n")).alias("coverage_ppm"),
         )
         .orderBy("v")
     )
@@ -145,7 +146,7 @@ def key_skew_report(df: DataFrame, key: str) -> DataFrame:
         "p50_c",
         "p99_c",
         "max_c",
-        ppm(F.col("max_c"), F.col("n_rows")).alias("top1_share_ppm"),
+        F.expr(ss_ppm("max_c", "n_rows")).alias("top1_share_ppm"),
     )
 
 
@@ -176,9 +177,7 @@ def seqlen_bucket_waste(docs: DataFrame) -> DataFrame:
         "bucket_len",
         "n_docs",
         "pad_tokens",
-        ppm(
-            F.col("pad_tokens"), F.col("pad_tokens") + F.col("kept")
-        ).alias("waste_ppm"),
+        F.expr(ss_ppm("pad_tokens", "pad_tokens + kept")).alias("waste_ppm"),
     ).orderBy("bucket_len")
 
 
@@ -328,9 +327,7 @@ def _register() -> None:
             # exact `div 2` (the sum is always even) — double `/` + cast
             # truncates vs DuckDB's rounding cast past 2^53, exactly
             # the regime a blow-up estimator exists to warn about
-            floordiv(
-                F.sum(F.col("c") * (F.col("c") - 1)), F.lit(2)
-            ).alias("distinct_pairs"),
+            F.expr(ss_floordiv("sum(c * (c - 1))", "2")).alias("distinct_pairs"),
             F.max("c").alias("max_key_rows"),
         ).select(
             "n_keys",
@@ -338,9 +335,8 @@ def _register() -> None:
             "selfjoin_rows",
             "distinct_pairs",
             "max_key_rows",
-            ppm(
-                F.col("max_key_rows") * F.col("max_key_rows"),
-                F.col("selfjoin_rows"),
+            F.expr(
+                ss_ppm("max_key_rows * max_key_rows", "selfjoin_rows")
             ).alias("top_key_cost_ppm"),
         )
 
@@ -389,12 +385,10 @@ BURST_TOPK = 50
     ),
 )
 def token_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ratio_e6, not tf*1e6//df: per-token tf exceeds ~9.2e12 at the
+    # ss_ratio_e6, not tf*1e6//df: per-token tf exceeds ~9.2e12 at the
     # 100 TB design point and the naive product wraps BIGINT (r9
-    # advice); ppm() is also out — its count ≤ total precondition is
+    # advice); ss_ppm is also out — its count ≤ total precondition is
     # violated by tf ≥ df by definition.
-    from algorithmproject_spark_spark.functions.numeric import ratio_e6
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -409,7 +403,7 @@ def token_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token",
             "tf",
             "df",
-            ratio_e6(F.col("tf"), F.col("df")).alias("burstiness_e6"),
+            F.expr(ss_ratio_e6("tf", "df")).alias("burstiness_e6"),
         )
         .orderBy(F.col("burstiness_e6").desc(), "token")
         .limit(BURST_TOPK)
@@ -461,16 +455,16 @@ def vocab_richness_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
     f = t.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    one = F.sum((F.col("tf") == 1).cast("long")).cast("long")
-    two = F.sum((F.col("tf") == 2).cast("long")).cast("long")
-    v = F.count(F.lit(1)).cast("long")
-    n = F.sum("tf").cast("long")
-    chao1 = v + floordiv(one * (one - F.lit(1)), (two + F.lit(1)) * F.lit(2))
+    one = "CAST(sum(CAST((tf = 1) AS BIGINT)) AS BIGINT)"
+    two = "CAST(sum(CAST((tf = 2) AS BIGINT)) AS BIGINT)"
+    v = "CAST(count(1) AS BIGINT)"
+    n = "CAST(sum(tf) AS BIGINT)"
+    chao1 = f"{v} + {ss_floordiv(f'{one} * ({one} - 1)', f'({two} + 1) * 2')}"
     return f.agg(
-        v.alias("vocab"),
-        n.alias("n_tokens"),
-        one.alias("f1"),
-        two.alias("f2"),
-        chao1.alias("chao1_vocab_est"),
-        ppm(one, n).alias("unseen_mass_ppm"),
+        F.expr(v).alias("vocab"),
+        F.expr(n).alias("n_tokens"),
+        F.expr(one).alias("f1"),
+        F.expr(two).alias("f2"),
+        F.expr(chao1).alias("chao1_vocab_est"),
+        F.expr(ss_ppm(one, n)).alias("unseen_mass_ppm"),
     )

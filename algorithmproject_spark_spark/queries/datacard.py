@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import floordiv
 from algorithmproject_spark_spark.registry import REGISTRY, register
 from algorithmproject_spark_spark.sources.catalog import load_table
 

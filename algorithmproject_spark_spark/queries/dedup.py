@@ -31,7 +31,9 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import (
     sql_hash_mod,
+    ss_hash_mod,
     ss_micros,
+    ss_ppm,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -73,10 +75,10 @@ def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(chars × shingle_width) per doc.
     """
     tok = _token_hashes(spark, sf_dir)
-    # one-parse text twin (r12); `th` is a bare column reference so the
+    # one-parse text (r12); `th` is a bare column reference so the
     # textual repetition inside the gram composition is O(1) reads, not
-    # upstream fold re-evaluation (the bind_once concern of the Column
-    # form does not apply to a materialized column)
+    # upstream fold re-evaluation (no ss_bind needed for a materialized
+    # column)
     sh = tok.select(
         "doc_id",
         F.expr(
@@ -876,8 +878,6 @@ INCR_NEW_FROM = 8  # hash_mod(doc_id, 10) >= 8 → the "new batch" (~20%)
     "size at equal bucket occupancy",
 )
 def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.functions.numeric import hash_mod
-
     sig = minhash_signatures(spark, sf_dir)
     sh = _shingle_hashes(spark, sf_dir)
     n_bands = N_HASHES // BAND_ROWS
@@ -893,7 +893,7 @@ def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", F.posexplode(band_keys).alias("band_idx", "band_key")
     )
-    is_new = hash_mod("doc_id", INCR_SPLIT_MOD) >= INCR_NEW_FROM
+    is_new = F.expr(ss_hash_mod("doc_id", INCR_SPLIT_MOD)) >= INCR_NEW_FROM
     new_bands = bands.filter(is_new).select(
         F.col("doc_id").alias("new_id"), "band_idx", "band_key"
     )
@@ -1276,9 +1276,7 @@ _QD_REP = (
 )
 def quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from algorithmproject_spark_spark.functions.numeric import micros, ppm
 
-    from algorithmproject_spark_spark.functions.numeric import ss_ppm
 
     docs = load_table(spark, sf_dir, "documents")
     # cache(): the ratio relation feeds BOTH the cut-point aggregation
@@ -1375,26 +1373,20 @@ def neardup_flavor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.lit(1).alias("in_sh")
     )
     j = mh.join(sh_p, ["doc_a", "doc_b"], "full_outer")
-    both = F.sum(
-        (F.col("in_mh").isNotNull() & F.col("in_sh").isNotNull()).cast("long")
-    )
-    only_mh = F.sum(
-        (F.col("in_mh").isNotNull() & F.col("in_sh").isNull()).cast("long")
-    )
-    only_sh = F.sum(
-        (F.col("in_mh").isNull() & F.col("in_sh").isNotNull()).cast("long")
-    )
-    n_union = F.count(F.lit(1))
-    from algorithmproject_spark_spark.functions.numeric import ppm as _ppm
-
+    both = "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
     return j.agg(
-        both.alias("n_both"),
-        only_mh.alias("n_minhash_only"),
-        only_sh.alias("n_simhash_only"),
-        n_union.cast("long").alias("n_union"),
-        F.when(n_union > 0, _ppm(both, n_union))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("agreement_ppm"),
+        F.expr(both).alias("n_both"),
+        F.expr(
+            "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NULL)) AS BIGINT))"
+        ).alias("n_minhash_only"),
+        F.expr(
+            "sum(CAST(((in_mh IS NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
+        ).alias("n_simhash_only"),
+        F.expr("CAST(count(1) AS BIGINT)").alias("n_union"),
+        F.expr(
+            f"CASE WHEN count(1) > 0 THEN {ss_ppm(both, 'count(1)')}"
+            " ELSE CAST(NULL AS BIGINT) END"
+        ).alias("agreement_ppm"),
     )
 
 

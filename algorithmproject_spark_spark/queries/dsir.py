@@ -38,7 +38,7 @@ from algorithmproject_spark_spark.functions.hashing import (
     sql_token_hash_array,
     ss_token_hash_array,
 )
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.functions.text import tokenize
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -81,9 +81,7 @@ def bucket_weights(long: DataFrame, weight: str | None = None) -> DataFrame:
         "b",
         "raw_b",
         "tgt_b",
-        floordiv(F.col("tgt_b") * F.lit(1_000_000), F.col("raw_b")).alias(
-            "w_ppm"
-        ),
+        F.expr(ss_floordiv("tgt_b * 1000000", "raw_b")).alias("w_ppm"),
     )
 
 
@@ -153,7 +151,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "n_tokens",
-        floordiv(F.col("s"), F.col("n_tokens")).alias("dsir_avg_ppm"),
+        F.expr(ss_floordiv("s", "n_tokens")).alias("dsir_avg_ppm"),
     )
 
 

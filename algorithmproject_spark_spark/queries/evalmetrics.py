@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.registry import REGISTRY, register
 
 _LANG_ID_SQL = REGISTRY["doc_lang_id"].oracle
@@ -138,11 +138,12 @@ def langid_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_tp", F.lit(0).cast("long")).alias("n_tp"),
         )
     )
-    e6 = F.lit(1_000_000).cast("long")
+    e6 = "CAST(1000000 AS BIGINT)"
 
-    def ratio(num, den):
-        return F.when(den > 0, floordiv(num, den)).otherwise(
-            F.lit(0).cast("long")
+    def ratio(num: str, den: str) -> F.Column:
+        return F.expr(
+            f"CASE WHEN {den} > 0 THEN {ss_floordiv(num, den)}"
+            " ELSE CAST(0 AS BIGINT) END"
         )
 
     return j.select(
@@ -150,12 +151,11 @@ def langid_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_true",
         "n_pred",
         "n_tp",
-        ratio(F.col("n_tp") * e6, F.col("n_pred")).alias("precision_e6"),
-        ratio(F.col("n_tp") * e6, F.col("n_true")).alias("recall_e6"),
-        ratio(
-            F.lit(2).cast("long") * F.col("n_tp") * e6,
-            F.col("n_true") + F.col("n_pred"),
-        ).alias("f1_e6"),
+        ratio(f"n_tp * {e6}", "n_pred").alias("precision_e6"),
+        ratio(f"n_tp * {e6}", "n_true").alias("recall_e6"),
+        ratio(f"CAST(2 AS BIGINT) * n_tp * {e6}", "(n_true + n_pred)").alias(
+            "f1_e6"
+        ),
     )
 
 
@@ -203,7 +203,7 @@ def langid_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _pairs(spark, sf_dir)
-    e6 = F.lit(1_000_000).cast("long")
+    e6 = "CAST(1000000 AS BIGINT)"
     tot = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(F.col("t") == F.col("p"), 1).otherwise(0))
@@ -223,10 +223,12 @@ def langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.join(cols, "cls")
         .crossJoin(F.broadcast(tot))
         .select(
-            floordiv(
-                floordiv(F.col("n_true") * e6, F.col("n"))
-                * floordiv(F.col("n_pred") * e6, F.col("n")),
-                e6,
+            F.expr(
+                ss_floordiv(
+                    f"{ss_floordiv(f'n_true * {e6}', 'n')}"
+                    f" * {ss_floordiv(f'n_pred * {e6}', 'n')}",
+                    e6,
+                )
             ).alias("term")
         )
         .agg(
@@ -235,18 +237,17 @@ def langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pe_e6")
         )
     )
-    po = floordiv(F.col("agree") * e6, F.col("n"))
     combined = tot.crossJoin(F.broadcast(pe)).select(
         F.col("n").alias("n_docs"),
-        po.alias("po_e6"),
+        F.expr(ss_floordiv(f"agree * {e6}", "n")).alias("po_e6"),
         "pe_e6",
     )
-    den = e6 - F.col("pe_e6")
-    num = F.col("po_e6") - F.col("pe_e6")
-    kappa = (
-        F.when(den == 0, F.lit(0).cast("long"))
-        .when(num >= 0, floordiv(num * e6, den))
-        .otherwise(-floordiv(-num * e6, den))
+    den = f"({e6} - pe_e6)"
+    num = "(po_e6 - pe_e6)"
+    kappa = F.expr(
+        f"CASE WHEN {den} = 0 THEN CAST(0 AS BIGINT)"
+        f" WHEN {num} >= 0 THEN {ss_floordiv(f'{num} * {e6}', den)}"
+        f" ELSE -{ss_floordiv(f'-{num} * {e6}', den)} END"
     )
     return combined.select(
         "n_docs", "po_e6", "pe_e6", kappa.alias("kappa_e6")

@@ -10,7 +10,7 @@ model. Q near 0 means the "communities" are no better than random
 wiring; the per-community rows localize which clusters are real
 (template families) and which are bridge artifacts.
 
-Exactness: both fractions are ppm via the overflow-safe ``ppm()``
+Exactness: both fractions are ppm via the overflow-safe ``ss_ppm``
 helper, and the expected term squares the ppm RATE (the modeleval
 Gini trick), so every intermediate is bounded by 1e12 regardless of
 graph size. The per-community contribution q_ppm floors twice
@@ -30,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    ppm,
-    sql_ppm,
-    ss_ppm,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_ppm, ss_ppm
 from algorithmproject_spark_spark.queries.dedup import (
     jaccard_pairs_above,
     sql_dup_pairs_cte,

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import ppm, sql_ppm
+from algorithmproject_spark_spark.functions.numeric import sql_ppm, ss_ppm
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.queries.qualitymodel import (
     _sql_quality_prefix,
@@ -106,14 +106,17 @@ def source_score_ks_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "score_ppm", F.coalesce("c", F.lit(0)).alias("c"))
     )
     w = W.partitionBy("source").orderBy("score_ppm")
+    w_sql = "PARTITION BY source ORDER BY score_ppm"
     cdf = grid.select(
         "source",
         "score_ppm",
-        ppm(
-            F.sum("c").over(w.rowsBetween(W.unboundedPreceding, 0)),
-            F.sum("c").over(
-                w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-            ),
+        F.expr(
+            ss_ppm(
+                f"sum(c) OVER ({w_sql} ROWS BETWEEN UNBOUNDED PRECEDING"
+                " AND CURRENT ROW)",
+                f"sum(c) OVER ({w_sql} ROWS BETWEEN UNBOUNDED PRECEDING"
+                " AND UNBOUNDED FOLLOWING)",
+            )
         ).alias("cdf_ppm"),
         F.sum("c")
         .over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))

@@ -45,19 +45,14 @@ from pyspark.sql.window import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
-from algorithmproject_spark_spark.functions.numeric import (
-    micros,
-    sql_micros,
-    ss_micros,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
-    _dot_d,
-    _norm_d,
     sql_dot,
     sql_norm,
     sql_to_double,
     ss_dot,
-    to_double,
+    ss_norm,
+    ss_to_double,
 )
 from algorithmproject_spark_spark.operators.annivf import (
     K_CELLS,
@@ -156,9 +151,9 @@ def _prefiltered_exact_pairs(
         "vec_id",
         "label",
         cell_col("embedding", n_cells).alias("cell"),
-        to_double("embedding").alias("we"),
+        F.expr(ss_to_double("embedding")).alias("we"),
         pq_code_array("embedding").alias("codes"),
-    ).withColumn("nrm", _norm_d("we"))
+    ).withColumn("nrm", F.expr(ss_norm("we")))
     # Pin the coded relation: Catalyst does not dedupe identical
     # self-join subtrees, so without this both pair-join sides re-run
     # the 128-fold PQ encode and the cell argmin over the full corpus.

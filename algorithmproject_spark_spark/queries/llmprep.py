@@ -29,11 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    hash_mod,
-    micros,
     sql_hash_mod,
     sql_micros,
+    ss_hash_mod,
+    ss_micros,
 )
 from algorithmproject_spark_spark.functions.text import ngrams, sql_ngrams, tokenize
 from algorithmproject_spark_spark.registry import register
@@ -134,14 +133,14 @@ def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top_bigram_n",
         F.when(
             F.col("n_bigrams") > 0,
-            micros(F.col("top_bigram_n").cast("double") / F.col("n_bigrams")),
+            F.expr(ss_micros("CAST(top_bigram_n AS DOUBLE) / n_bigrams")),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("top_bigram_frac_e6"),
-        micros(
-            F.lit(1.0) - F.col("n_distinct").cast("double") / F.col("n_tokens")
+        F.expr(
+            ss_micros("1.0D - CAST(n_distinct AS DOUBLE) / n_tokens")
         ).alias("dup_token_frac_e6"),
-        micros(F.col("sum_len").cast("double") / F.col("n_tokens")).alias(
+        F.expr(ss_micros("CAST(sum_len AS DOUBLE) / n_tokens")).alias(
             "mean_word_len_e6"
         ),
     )
@@ -262,7 +261,7 @@ def embedding_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return base.select(
         "vec_id",
-        micros(F.col("m")).alias("max_abs_e6"),
+        F.expr(ss_micros("m")).alias("max_abs_e6"),
         n_sat.alias("n_saturated"),
         F.floor(sse * F.lit(1000000000.0) + F.lit(0.5)).cast("long").alias("sse_e9"),
     )
@@ -409,11 +408,11 @@ def doc_pii_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from algorithmproject_spark_spark.functions.vectors import (  # noqa: E402
-    _norm_d,
     sql_dot,
     sql_norm,
     sql_to_double,
-    to_double,
+    ss_norm,
+    ss_to_double,
 )
 from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
     K_CELLS,
@@ -739,9 +738,9 @@ def embedding_semantic_dedup(
         emb.select(
             "vec_id",
             cell_col("embedding", k).alias("cell"),
-            to_double("embedding").alias("we"),
+            F.expr(ss_to_double("embedding")).alias("we"),
         )
-        .withColumn("nrm", _norm_d("we"))
+        .withColumn("nrm", F.expr(ss_norm("we")))
     )
     cn = tracked_cache(cn)  # encode+norm once: the group input and the output
     cs = semdedup_subcells(cn, cell_cap)
@@ -805,7 +804,7 @@ _ORD_MULT = 2246822519  # independent of hash_mod's multiplier
 )
 def corpus_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shard = hash_mod("doc_id", _SHARDS)
+    shard = F.expr(ss_hash_mod("doc_id", _SHARDS))
     ordkey = ((F.col("doc_id") % F.lit(999983)) * F.lit(_ORD_MULT)) % F.lit(1000000007)
     w = W.partitionBy(shard).orderBy(ordkey, "doc_id")
     return docs.select(
@@ -902,7 +901,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lit(x) for kv in MIXTURE_QUOTAS.items() for x in kv]
     )
     w = W.partitionBy("source").orderBy(
-        hash_mod("doc_id", 1000003), F.col("doc_id")
+        F.expr(ss_hash_mod("doc_id", 1000003)), F.col("doc_id")
     )
     return (
         docs.select(
@@ -951,7 +950,7 @@ SPLIT_VAL_LT = 90    # [80,90) val, [90,100) test
 )
 def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))
@@ -994,7 +993,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))

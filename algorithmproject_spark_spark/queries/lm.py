@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import floordiv, micros
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -106,10 +106,7 @@ def _doc_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .withColumn(
             "term_e6",
-            micros(
-                F.col("c_dt").cast("double")
-                * (F.log(F.col("n")) - F.log(F.col("c_t")))
-            ),
+            F.expr(ss_micros("CAST(c_dt AS DOUBLE) * (ln(n) - ln(c_t))")),
         )
     )
     perdoc = terms.groupBy("doc_id").agg(
@@ -119,7 +116,7 @@ def _doc_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return perdoc.select(
         "doc_id",
         "n_tok",
-        floordiv(F.col("s_e6"), F.col("n_tok")).alias("xent_e6"),
+        F.expr(ss_floordiv("s_e6", "n_tok")).alias("xent_e6"),
     )
 
 
@@ -167,7 +164,7 @@ def corpus_xent_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _doc_xent(spark, sf_dir)
         .withColumn(
-            "band_idx", floordiv(F.col("xent_e6"), F.lit(BAND_NATS_E6))
+            "band_idx", F.expr(ss_floordiv("xent_e6", str(BAND_NATS_E6)))
         )
         .groupBy("band_idx")
         .agg(
@@ -268,17 +265,13 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den_x = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    den_y = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-        "double"
-    )
+    num = "CAST(n * sxy - sx * sy AS DOUBLE)"
+    den_x = "CAST(n * sxx - sx * sx AS DOUBLE)"
+    den_y = "CAST(n * syy - sy * sy AS DOUBLE)"
     return s.select(
         F.col("n").alias("n_vocab"),
-        micros(num / den_x).alias("slope_e6"),
-        micros((num * num) / (den_x * den_y)).alias("r2_e6"),
+        F.expr(ss_micros(f"{num} / {den_x}")).alias("slope_e6"),
+        F.expr(ss_micros(f"({num} * {num}) / ({den_x} * {den_y})")).alias(
+            "r2_e6"
+        ),
     )

@@ -29,10 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    sql_hash_mod,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.queries.spandedup import (
     merge_spans,
     sql_merge_spans,
@@ -44,7 +41,7 @@ MASK_W = 3  # span width (the paper's mean span length)
 MASK_START_PCT = 5  # % of positions that start a span
 _ID_P = 1_000_003  # doc-id pre-reduction (BIGINT-safe products)
 # Mixing prime — MUST differ from numeric.HASH_REDUCE (1_000_003):
-# hash_mod reduces its key mod HASH_REDUCE first, so a doc term
+# ss_hash_mod reduces its key mod HASH_REDUCE first, so a doc term
 # multiplied by that same prime would vanish and every document would
 # get identical mask positions (found by review; test pins it now).
 _ID_MIX = 999_983
@@ -62,9 +59,7 @@ def corruption_mask_stats(docs: DataFrame, w: int = MASK_W) -> DataFrame:
         ).alias("pos"),
     )
     starts = pos.filter(
-        hash_mod(
-            (F.col("doc_id") % _ID_P) * _ID_MIX + F.col("pos"), 100
-        )
+        F.expr(ss_hash_mod(f"(doc_id % {_ID_P}) * {_ID_MIX} + pos", 100))
         < MASK_START_PCT
     )
     # clamp spans at the doc end: masked span [s, min(e, n_tokens))

@@ -32,12 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    micros,
-    ppm,
-    ratio_e6,
     sql_micros,
     sql_ppm,
     sql_ratio_e6,
+    ss_micros,
+    ss_ppm,
+    ss_ratio_e6,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -98,21 +98,22 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_tokens",
-        micros(F.sqrt(F.col("n_tokens").cast("double"))).alias("sqrt_tok_e6"),
+        F.expr(ss_micros("sqrt(CAST(n_tokens AS DOUBLE))")).alias("sqrt_tok_e6"),
     )
     tot = sq.agg(
         F.sum("n_tokens").cast("long").alias("tot_tokens"),
         F.sum("sqrt_tok_e6").cast("long").alias("tot_sqrt_e6"),
     )
-    natural = ppm(F.col("n_tokens"), F.col("tot_tokens"))
-    mix = ppm(F.col("sqrt_tok_e6"), F.col("tot_sqrt_e6"))
+    natural = ss_ppm("n_tokens", "tot_tokens")
+    mix = ss_ppm("sqrt_tok_e6", "tot_sqrt_e6")
     return sq.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
         "n_tokens",
-        natural.alias("natural_ppm"),
-        mix.alias("mix_ppm"),
-        F.when(natural > 0, ratio_e6(mix, natural))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("boost_e6"),
+        F.expr(natural).alias("natural_ppm"),
+        F.expr(mix).alias("mix_ppm"),
+        F.expr(
+            f"CASE WHEN {natural} > 0 THEN {ss_ratio_e6(mix, natural)}"
+            " ELSE CAST(NULL AS BIGINT) END"
+        ).alias("boost_e6"),
     )

@@ -30,10 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    ppm,
     sql_hash_mod,
     sql_ppm,
+    ss_floordiv,
+    ss_hash_mod,
+    ss_micros,
+    ss_ppm,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -102,13 +104,7 @@ def events_signup_to_purchase_survival(
         .groupBy("user_id")
         .agg(F.min("us").alias("p_us"), F.min("s_us").alias("s_us2"))
     )
-    from algorithmproject_spark_spark.functions.numeric import floordiv
-
-    delta = pu.select(
-        floordiv(
-            F.col("p_us") - F.col("s_us2"), F.lit(1_000_000)
-        ).alias("d_s")
-    )
+    delta = pu.select(F.expr(ss_floordiv("p_us - s_us2", "1000000")).alias("d_s"))
     dist = delta.groupBy("d_s").agg(F.count(F.lit(1)).alias("c"))
     cum = dist.select(
         "d_s",
@@ -176,7 +172,7 @@ def events_ab_split_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("converted")
     )
-    arms = u.select(hash_mod("user_id", 2).alias("arm"), "converted")
+    arms = u.select(F.expr(ss_hash_mod("user_id", 2)).alias("arm"), "converted")
     agg = arms.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("converted").alias("n_converters"),
@@ -185,7 +181,7 @@ def events_ab_split_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arm",
         "n_users",
         "n_converters",
-        ppm(F.col("n_converters"), F.col("n_users")).alias("conv_ppm"),
+        F.expr(ss_ppm("n_converters", "n_users")).alias("conv_ppm"),
     )
 
 
@@ -287,43 +283,28 @@ def events_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("converted"),
     )
-    arms = u.select(hash_mod("user_id", 2).alias("arm"), "converted")
-    n0 = F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long")
-    x0 = F.sum(F.when(F.col("arm") == 0, F.col("converted")).otherwise(0)).cast(
-        "long"
-    )
-    n1 = F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long")
-    x1 = F.sum(F.when(F.col("arm") == 1, F.col("converted")).otherwise(0)).cast(
-        "long"
-    )
-    pool = (x0 + x1).cast("double") / (n0 + n1)
+    arms = u.select(F.expr(ss_hash_mod("user_id", 2)).alias("arm"), "converted")
+    n0 = "CAST(sum(CASE WHEN (arm = 0) THEN 1 ELSE 0 END) AS BIGINT)"
+    x0 = "CAST(sum(CASE WHEN (arm = 0) THEN converted ELSE 0 END) AS BIGINT)"
+    n1 = "CAST(sum(CASE WHEN (arm = 1) THEN 1 ELSE 0 END) AS BIGINT)"
+    x1 = "CAST(sum(CASE WHEN (arm = 1) THEN converted ELSE 0 END) AS BIGINT)"
+    pool = f"(CAST(({x0} + {x1}) AS DOUBLE) / ({n0} + {n1}))"
     z = (
-        (x0.cast("double") / n0 - x1.cast("double") / n1)
-        / F.sqrt(
-            pool
-            * (F.lit(1.0) - pool)
-            * (F.lit(1.0) / n0 + F.lit(1.0) / n1)
-        )
+        f"(CAST({x0} AS DOUBLE) / {n0} - CAST({x1} AS DOUBLE) / {n1})"
+        f" / sqrt({pool} * (1.0D - {pool}) * (1.0D / {n0} + 1.0D / {n1}))"
     )
-    from algorithmproject_spark_spark.functions.numeric import micros as _mi
-
+    null = "ELSE CAST(NULL AS BIGINT) END"
     return arms.agg(
-        n0.alias("n0"),
-        x0.alias("x0"),
-        n1.alias("n1"),
-        x1.alias("x1"),
-        # when() guards: ANSI div-by-zero throws on an empty arm (the
+        F.expr(n0).alias("n0"),
+        F.expr(x0).alias("x0"),
+        F.expr(n1).alias("n1"),
+        F.expr(x1).alias("x1"),
+        # CASE guards: ANSI div-by-zero throws on an empty arm (the
         # mini edge fixture has single-user cohorts) — NULL like DuckDB
-        F.when(n0 > 0, ppm(x0, n0))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("p0_ppm"),
-        F.when(n1 > 0, ppm(x1, n1))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("p1_ppm"),
-        F.when(
-            (n0 > 0) & (n1 > 0) & (x0 + x1 > 0) & (x0 + x1 < n0 + n1),
-            _mi(z),
-        )
-        .otherwise(F.lit(None).cast("long"))
-        .alias("z_micros"),
+        F.expr(f"CASE WHEN {n0} > 0 THEN {ss_ppm(x0, n0)} {null}").alias("p0_ppm"),
+        F.expr(f"CASE WHEN {n1} > 0 THEN {ss_ppm(x1, n1)} {null}").alias("p1_ppm"),
+        F.expr(
+            f"CASE WHEN ((({n0} > 0) AND ({n1} > 0)) AND ({x0} + {x1} > 0))"
+            f" AND ({x0} + {x1} < {n0} + {n1}) THEN {ss_micros(z)} {null}"
+        ).alias("z_micros"),
     )

@@ -29,7 +29,7 @@ while every byte stays engine-exact (no sqrt, no float sums).
 Overflow bound: c_ij < 3.0e6 keeps c_ij²·10⁶ inside BIGINT — the pair
 count is bounded by basket count, so this holds to ~3e6 baskets per
 co-purchased pair, far beyond any real co-occurrence before the
-support cut matters; the ppm()-style loud ANSI overflow (not silent
+support cut matters; the ss_ppm-style loud ANSI overflow (not silent
 wrap) guards the contract beyond that.
 
 **HITS**: fixed-iteration mutual reinforcement (authority = Σ hub of
@@ -53,7 +53,7 @@ from algorithmproject_spark_spark.cacheutil import (
     tracked_lazy_local_checkpoint,
     tracked_local_checkpoint,
 )
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.registry import REGISTRY, register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -347,9 +347,8 @@ def supplier_ra_link_prediction(
     capped = per_part.select(
         F.slice("supps", 1, CAP_SUPP).alias("items"),
         # true degree from the same collect_set — no second shuffle
-        floordiv(
-            F.lit(1_000_000_000).cast("long"),
-            F.size("supps").cast("long"),
+        F.expr(
+            ss_floordiv("CAST(1000000000 AS BIGINT)", "CAST(size(supps) AS BIGINT)")
         ).alias("w_e9"),
     )
     pair_arr = F.flatten(

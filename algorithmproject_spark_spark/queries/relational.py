@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -41,16 +41,20 @@ from algorithmproject_spark_spark.sources.catalog import load_table
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    charge = disc_price * (F.lit(1) + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc_price} * (1 + l_tax)"
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(scaled_long("l_quantity", 1)).alias("sum_qty"),
-            F.sum(scaled_long("l_extendedprice", 100)).alias("sum_base_cents"),
-            F.sum(scaled_long(disc_price, 10000)).alias("sum_disc_price_e4"),
-            F.sum(scaled_long(charge, 1000000)).alias("sum_charge_e6"),
+            F.expr(f"sum({ss_scaled_long('l_quantity', 1)})").alias("sum_qty"),
+            F.expr(f"sum({ss_scaled_long('l_extendedprice', 100)})").alias(
+                "sum_base_cents"
+            ),
+            F.expr(f"sum({ss_scaled_long(disc_price, 10000)})").alias(
+                "sum_disc_price_e4"
+            ),
+            F.expr(f"sum({ss_scaled_long(charge, 1000000)})").alias("sum_charge_e6"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -83,7 +87,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
-    disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         # orders/customer scale with the fact table → shuffle joins
         # (AQE may still downgrade to broadcast at small SF); only true
@@ -91,7 +95,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("o_orderkey").alias("orderkey"), F.col("o_orderdate").alias("orderdate"))
-        .agg(F.sum(scaled_long(disc_price, 10000)).alias("revenue_e4"))
+        .agg(F.expr(f"sum({ss_scaled_long(disc_price, 10000)})").alias("revenue_e4"))
         .select("orderkey", "revenue_e4", "orderdate")
         .orderBy(F.desc("revenue_e4"), F.asc("orderkey"))
         .limit(10)
@@ -129,7 +133,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -140,7 +144,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.sum(scaled_long(disc_price, 10000)).alias("revenue_e4"))
+        .agg(F.expr(f"sum({ss_scaled_long(disc_price, 10000)})").alias("revenue_e4"))
     )
 
 
@@ -185,7 +189,7 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
-        scaled_long("o_totalprice", 100) > 30_000_000
+        F.expr(ss_scaled_long("o_totalprice", 100)) > 30_000_000
     )
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select(
         "c_custkey", "c_name"
@@ -421,13 +425,15 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(
-            F.sum(scaled_long(disc_price, 100)).alias("lost_revenue_cents"),
+            F.expr(f"sum({ss_scaled_long(disc_price, 100)})").alias(
+                "lost_revenue_cents"
+            ),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy(F.desc("lost_revenue_cents"), F.asc("c_custkey"))
@@ -463,7 +469,7 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(scaled_long("l_quantity", 100)).alias("total_qty_c2"))
+        .agg(F.expr(f"sum({ss_scaled_long('l_quantity', 100)})").alias("total_qty_c2"))
         .filter(F.col("total_qty_c2") > 9000)
     )
     return (
@@ -500,9 +506,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    rev = F.col("l_extendedprice") * F.col("l_discount")
     return flt.agg(
-        F.sum(scaled_long(rev, 10000)).alias("revenue_e4"),
+        F.expr(
+            f"sum({ss_scaled_long('l_extendedprice * l_discount', 10000)})"
+        ).alias("revenue_e4"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -566,9 +573,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1995-09-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1995-10-01").cast("timestamp_ntz"))
     ).select("l_partkey", "l_extendedprice", "l_discount")
-    rev = scaled_long(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 10000
-    )
+    rev = F.expr(ss_scaled_long("l_extendedprice * (1 - l_discount)", 10000))
     return (
         flt.join(F.broadcast(part), flt.l_partkey == part.p_partkey)
         .agg(
@@ -616,9 +621,7 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((brand == "Brand#2") & size.between(1, 25) & qty.between(10, 20))
         | ((brand == "Brand#3") & size.between(1, 35) & qty.between(20, 30))
     )
-    rev = scaled_long(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 10000
-    )
+    rev = F.expr(ss_scaled_long("l_extendedprice * (1 - l_discount)", 10000))
     return j.filter(cond).agg(
         F.sum(rev).alias("revenue_e4"),
         F.count(F.lit(1)).alias("n_lines"),
@@ -682,9 +685,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(nation.select("n_nationkey", "n_name")),
         supp.s_nationkey == F.col("n_nationkey"),
     ).select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    rev = scaled_long(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 10000
-    )
+    rev = F.expr(ss_scaled_long("l_extendedprice * (1 - l_discount)", 10000))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust_in_region, orders.o_custkey == F.col("c_custkey"))

@@ -35,9 +35,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    micros,
     sql_micros,
+    ss_floordiv,
+    ss_micros,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -164,7 +164,7 @@ def events_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = tracked_cache(
         ev.select(
             "event_type",
-            micros(F.col("value")).alias("x"),
+            F.expr(ss_micros("value")).alias("x"),
             F.row_number().over(wt.orderBy("event_id")).alias("i"),
             (n_raw + guard).alias("n"),
         )
@@ -193,7 +193,7 @@ def events_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "b")
         .agg(
-            floordiv(F.sum("x"), F.count(F.lit(1))).alias("rep_mean")
+            F.expr(ss_floordiv("sum(x)", "count(1)")).alias("rep_mean")
         )
     )
     ranked = reps.select(
@@ -213,7 +213,7 @@ def events_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pt = idx.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        floordiv(F.sum("x"), F.count(F.lit(1))).alias("mean_micros"),
+        F.expr(ss_floordiv("sum(x)", "count(1)")).alias("mean_micros"),
     )
     return pt.join(F.broadcast(ci), "event_type").select(
         "event_type", "n", "mean_micros", "ci_lo_micros", "ci_hi_micros"

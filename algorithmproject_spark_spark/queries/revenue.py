@@ -15,7 +15,7 @@
       gini = (T − (n+1)·Σv·c) / (n·Σv·c)
 
   — every term BIGINT; the final ratio is emitted both as an exact
-  (num, den) pair and as ppm via the six-step ppm_wide()
+  (num, den) pair and as ppm via the six-step ss_ppm_wide
   (num < den because Gini < 1, satisfying its precondition). The
   cumulative window rides distinct spend values (the compacted-
   distribution shape), never customer rows.
@@ -34,10 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    ppm_wide,
-    scaled_long,
     sql_ppm_wide,
     sql_scaled_long,
+    ss_floordiv,
+    ss_ppm_wide,
+    ss_scaled_long,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -79,7 +80,7 @@ def orders_cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("m"),
-        scaled_long("o_totalprice").alias("cents"),
+        F.expr(ss_scaled_long("o_totalprice")).alias("cents"),
     )
     cohort = o.groupBy("o_custkey").agg(F.min("m").alias("m0"))
     return (
@@ -133,12 +134,10 @@ def orders_cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", scaled_long("o_totalprice").alias("cents")
+        "o_custkey", F.expr(ss_scaled_long("o_totalprice")).alias("cents")
     )
-    from algorithmproject_spark_spark.functions.numeric import floordiv
-
     spend = o.groupBy("o_custkey").agg(
-        floordiv(F.sum("cents"), F.lit(100)).alias("v")
+        F.expr(ss_floordiv("sum(cents)", "100")).alias("v")
     )
     dist = spend.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
     full = W.partitionBy().rowsBetween(
@@ -162,12 +161,12 @@ def customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n"),
         F.max("svc").alias("svc"),
     )
-    num = F.col("tt") - (F.col("n") + 1) * F.col("svc")
-    den = F.col("n") * F.col("svc")
+    num = "tt - (n + 1) * svc"
+    den = "n * svc"
     return t.select(
         F.col("n").alias("n_customers"),
         F.col("svc").alias("total_dollars"),
-        num.alias("gini_num"),
-        den.alias("gini_den"),
-        ppm_wide(num, den).alias("gini_ppm"),
+        F.expr(num).alias("gini_num"),
+        F.expr(den).alias("gini_den"),
+        F.expr(ss_ppm_wide(num, den)).alias("gini_ppm"),
     )

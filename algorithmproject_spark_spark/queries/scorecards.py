@@ -28,10 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    scaled_long,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
 from algorithmproject_spark_spark.registry import REGISTRY, register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -90,20 +87,18 @@ def source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").cast("long").alias("n_langs"),
         F.sum("n_tokens").cast("long").alias("tok"),
     )
-    e6 = F.lit(1_000_000).cast("long")
+    e6 = "CAST(1000000 AS BIGINT)"
     return agg.select(
         "source",
         "n_docs",
-        floordiv(F.col("n_keep") * e6, F.col("n_docs")).alias(
-            "keep_rate_e6"
+        F.expr(ss_floordiv(f"n_keep * {e6}", "n_docs")).alias("keep_rate_e6"),
+        F.expr(ss_floordiv(f"(n_docs - n_uniq) * {e6}", "n_docs")).alias(
+            "dup_rate_e6"
         ),
-        floordiv(
-            (F.col("n_docs") - F.col("n_uniq")) * e6, F.col("n_docs")
-        ).alias("dup_rate_e6"),
         "n_langs",
-        floordiv(
-            F.col("tok") * F.lit(1_000).cast("long"), F.col("n_docs")
-        ).alias("mean_tokens_e3"),
+        F.expr(ss_floordiv("tok * CAST(1000 AS BIGINT)", "n_docs")).alias(
+            "mean_tokens_e3"
+        ),
     )
 
 
@@ -146,9 +141,8 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         "l_partkey",
         "l_returnflag",
-        scaled_long(
-            F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")),
-            10000,
+        F.expr(
+            ss_scaled_long("l_extendedprice * (1 - l_discount)", 10000)
         ).alias("rev_e4"),
         F.datediff(
             F.to_date("l_shipdate"), F.lit("1970-01-01").cast("date")
@@ -157,7 +151,7 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ship_day"),
     )
     mx = li.agg(F.max("ship_day").alias("max_day"))
-    e6 = F.lit(1_000_000).cast("long")
+    e6 = "CAST(1000000 AS BIGINT)"
     agg = (
         li.crossJoin(F.broadcast(mx))
         .groupBy(F.col("l_suppkey").alias("suppkey"))
@@ -184,10 +178,8 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lines",
         "n_parts",
         "revenue_e4",
-        floordiv(F.col("n_ret") * e6, F.col("n_lines")).alias(
-            "return_rate_e6"
-        ),
-        floordiv(F.col("n_recent") * e6, F.col("n_lines")).alias(
+        F.expr(ss_floordiv(f"n_ret * {e6}", "n_lines")).alias("return_rate_e6"),
+        F.expr(ss_floordiv(f"n_recent * {e6}", "n_lines")).alias(
             "recent_quarter_share_e6"
         ),
     )

@@ -25,7 +25,7 @@ partitioning:
 Overflow bounds (ANSI mode raises loudly beyond them):
 ``22·tf·L·10⁶`` needs tf·L < 4.2·10¹¹ — at ~100 tokens/doc that is a
 ~10⁹-token corpus per maximal-tf doc; past it, promote the split-scale
-ppm() pattern.
+ss_ppm pattern.
 
 Scale: one tokenize+explode feeds both the per-doc length and the
 term-filtered tf relation (the filter reaches the explode — only query
@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import floordiv
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -134,11 +134,8 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("idf_e6"),
         )
     )
-    u_e6 = floordiv(
-        F.lit(22) * F.col("tf") * F.col("l") * F.lit(1_000_000),
-        F.lit(10) * F.col("l") * F.col("tf")
-        + F.lit(3) * F.col("l")
-        + F.lit(9) * F.col("dl") * F.col("n"),
+    u_e6 = ss_floordiv(
+        "22 * tf * l * 1000000", "10 * l * tf + 3 * l + 9 * dl * n"
     )
     scored = (
         tf.join(dl, "doc_id")
@@ -146,7 +143,7 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(st))
         .select(
             "doc_id",
-            floordiv(F.col("idf_e6") * u_e6, F.lit(1_000_000)).alias("s"),
+            F.expr(ss_floordiv(f"idf_e6 * {u_e6}", "1000000")).alias("s"),
         )
     )
     return (

@@ -13,8 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import micros, sql_micros
-from algorithmproject_spark_spark.functions.vectors import cosine, sql_cosine
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
+from algorithmproject_spark_spark.functions.vectors import (
+    sql_cosine,
+    ss_cosine,
+    ss_norm,
+    ss_to_double,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -32,10 +37,12 @@ TOP_K = 3
     doc="L2 norms via sequential fold (bit-identical cross-engine)",
 )
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.functions.vectors import norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", "label", micros(norm(F.col("embedding"))).alias("norm_e6"))
+    return emb.select(
+        "vec_id",
+        "label",
+        F.expr(ss_micros(ss_norm(ss_to_double("embedding")))).alias("norm_e6"),
+    )
 
 
 @register(
@@ -70,7 +77,7 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            micros(cosine("q_emb", "embedding")).alias("cosine_e6"),
+            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias("cosine_e6"),
         )
     )
     w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
@@ -193,7 +200,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("neg_id"),
             F.col("label").alias("neg_label"),
-            micros(cosine("q_emb", "embedding")).alias(
+            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias(
                 "cosine_e6"
             ),
         )

@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
-from algorithmproject_spark_spark.functions.numeric import floordiv
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 

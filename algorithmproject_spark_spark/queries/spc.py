@@ -37,10 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    micros,
-    scaled_long,
     sql_scaled_long,
+    ss_floordiv,
+    ss_micros,
+    ss_scaled_long,
 )
 from algorithmproject_spark_spark.queries.trend import _epoch_day
 from algorithmproject_spark_spark.registry import register
@@ -80,9 +80,7 @@ def events_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         "n",
-        floordiv(F.col("n") * F.lit(1000), F.col("tn")).alias(
-            "share_permille"
-        ),
+        F.expr(ss_floordiv("n * 1000", "tn")).alias("share_permille"),
     )
 
 
@@ -135,12 +133,8 @@ def events_error_pchart_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n",
         "e",
-        floordiv(F.col("e") * F.lit(1000), F.col("n")).alias(
-            "p_hat_permille"
-        ),
-        floordiv(F.col("te") * F.lit(1000), F.col("tn")).alias(
-            "p_permille"
-        ),
+        F.expr(ss_floordiv("e * 1000", "n")).alias("p_hat_permille"),
+        F.expr(ss_floordiv("te * 1000", "tn")).alias("p_permille"),
     )
     d = F.col("p_hat_permille") - F.col("p_permille")
     return scored.select(
@@ -200,7 +194,7 @@ def events_error_pchart_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", scaled_long("l_extendedprice").alias("cents")
+        "l_partkey", F.expr(ss_scaled_long("l_extendedprice")).alias("cents")
     )
     rev = li.groupBy("l_partkey").agg(F.sum("cents").alias("cents"))
     cum = rev.select(
@@ -307,7 +301,7 @@ def customer_band_migration(
     o = load_table(spark, sf_dir, "orders").select(
         _epoch_day("o_orderdate").alias("day"),
         "o_custkey",
-        scaled_long("o_totalprice").alias("cents"),
+        F.expr(ss_scaled_long("o_totalprice")).alias("cents"),
     )
     # median order day via the compacted day distribution
     dd = o.groupBy("day").agg(F.count(F.lit(1)).alias("c"))
@@ -451,9 +445,10 @@ def events_dow_adjusted_outliers(
         F.count(F.lit(1)).cast("long").alias("n")
     )
     dowm = daily.groupBy((F.col("day") % 7).alias("dow")).agg(
-        floordiv(
-            F.sum("n") * F.lit(1_000_000).cast("long"),
-            F.count(F.lit(1)).cast("long"),
+        F.expr(
+            ss_floordiv(
+                "sum(n) * CAST(1000000 AS BIGINT)", "CAST(count(1) AS BIGINT)"
+            )
         ).alias("mean_e6")
     )
     resid = daily.join(dowm, daily["day"] % 7 == dowm["dow"]).select(
@@ -654,9 +649,9 @@ def ewma_daily(events: DataFrame) -> DataFrame:
     """(event_type, day, mean_micros) — the recurrence input."""
     ev = events.select("event_type", "ts", "value")
     return ev.groupBy("event_type", _epoch_day().alias("day")).agg(
-        floordiv(
-            F.sum(micros(F.col("value"))), F.count(F.lit(1))
-        ).alias("mean_micros")
+        F.expr(ss_floordiv(f"sum({ss_micros('value')})", "count(1)")).alias(
+            "mean_micros"
+        )
     )
 
 

@@ -14,14 +14,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.hashing import (
-    char_fold_hash,
     sql_char_fold_hash,
+    ss_char_fold_hash,
 )
-from algorithmproject_spark_spark.functions.numeric import (
-    micros,
-    sql_micros,
-    ss_micros,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.text import (
     ss_stopword_array,
     ngrams,
@@ -261,7 +257,7 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", char_fold_hash(F.col("text")).alias("fingerprint"))
+    return docs.select("doc_id", F.expr(ss_char_fold_hash("text")).alias("fingerprint"))
 
 
 # --------------------------------------------------------------------------
@@ -363,7 +359,7 @@ def hashed_tfidf(docs: DataFrame, num_features: int = TFIDF_NUM_FEATURES) -> Dat
         .filter(~F.array_contains(stopword_array(), F.col("word")))
         .select(
             "doc_id",
-            (char_fold_hash(F.col("word")) % F.lit(num_features)).alias("feature"),
+            F.expr(f"{ss_char_fold_hash('word')} % {num_features}").alias("feature"),
         )
         .groupBy("doc_id", "feature")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -373,11 +369,11 @@ def hashed_tfidf(docs: DataFrame, num_features: int = TFIDF_NUM_FEATURES) -> Dat
     # uncached, the tokenize+explode+hash front end ran twice
     tf = tracked_cache(tf)
     df_tbl = tf.groupBy("feature").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df").cast("double") + F.lit(1.0)))
+    idf = "ln((n_docs + 1.0D) / (CAST(df AS DOUBLE) + 1.0D))"
     scored = (
         tf.join(F.broadcast(df_tbl), "feature")
         .crossJoin(F.broadcast(n_docs))
-        .withColumn("score_e6", micros(F.col("tf") * idf))
+        .withColumn("score_e6", F.expr(ss_micros(f"tf * {idf}")))
     )
     w = W.partitionBy("doc_id").orderBy(F.desc("score_e6"), F.asc("feature"))
     return (

@@ -16,7 +16,7 @@ from algorithmproject_spark_spark.functions.text import (
     stopword_array,
     tokenize,
 )
-from algorithmproject_spark_spark.functions.numeric import hash_mod, sql_hash_mod
+from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -365,7 +365,7 @@ def product_score_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def deterministic_sample_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.filter(hash_mod("doc_id", 10) == 3).select("doc_id", "lang")
+    return docs.filter(F.expr(ss_hash_mod("doc_id", 10)) == 3).select("doc_id", "lang")
 
 
 # O4 stratified variant: per-class sampling fractions (the balanced
@@ -392,7 +392,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = F.lit(0)
     for lang, k in _STRATA.items():
         keep = F.when(F.col("lang") == lang, F.lit(k)).otherwise(keep)
-    return docs.filter(hash_mod("doc_id", 10) < keep).select("doc_id", "lang")
+    return docs.filter(F.expr(ss_hash_mod("doc_id", 10)) < keep).select("doc_id", "lang")
 
 
 # T6: lemmatize + POS tag + POS-pattern n-gram admission. The reference

@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    scaled_long,
     sql_scaled_long,
+    ss_floordiv,
+    ss_scaled_long,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -148,18 +148,18 @@ def user_recency_weighted_value(
     v = ev.filter(F.col("value") > 0).select(
         "user_id",
         _epoch_day().alias("day"),
-        scaled_long("value").alias("cents"),
+        F.expr(ss_scaled_long("value")).alias("cents"),
     )
     mx = v.agg(F.max("day").alias("md"))
-    shift = F.least(
-        floordiv(F.col("md") - F.col("day"), F.lit(HALF_LIFE_DAYS)),
-        F.lit(MAX_SHIFT).cast("long"),
-    ).cast("int")
-    # PySpark's F.shiftleft only takes a Python-int bit count; the SQL
-    # function accepts a column — reach it via call_function
-    contrib = floordiv(
-        F.col("cents") * F.lit(1 << VALUE_SCALE_BITS),
-        F.call_function("shiftleft", F.lit(1).cast("long"), shift),
+    shift = (
+        f"CAST(least({ss_floordiv('md - day', str(HALF_LIFE_DAYS))}, "
+        f"CAST({MAX_SHIFT} AS BIGINT)) AS INT)"
+    )
+    contrib = F.expr(
+        ss_floordiv(
+            f"cents * {1 << VALUE_SCALE_BITS}",
+            f"shiftleft(CAST(1 AS BIGINT), {shift})",
+        )
     )
     return (
         v.crossJoin(F.broadcast(mx))

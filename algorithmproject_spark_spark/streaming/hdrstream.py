@@ -91,9 +91,6 @@ def _snapshot(key: str, hist: dict[int, int]) -> pd.DataFrame:
 
 
 def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    if state.hasTimedOut:
-        state.remove()
-        return
     if state.exists:
         idxs, cnts = state.get
         hist = dict(zip(idxs, cnts))

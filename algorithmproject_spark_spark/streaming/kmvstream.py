@@ -66,7 +66,7 @@ def _tmod(a: int, m: int) -> int:
 
 
 def _hash_key(uid: int) -> int:
-    """Python twin of functions.numeric.hash_mod(key, KMV_MOD) —
+    """Python twin of functions.numeric.ss_hash_mod(key, KMV_MOD) —
     truncated-modulo exact, including negative keys."""
     return _tmod(_tmod(uid, HASH_REDUCE) * HASH_MULT, KMV_MOD)
 
@@ -90,9 +90,6 @@ def _merge(mins: list[int], uids) -> list[int]:
 
 
 def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    if state.hasTimedOut:
-        state.remove()
-        return
     (mins,) = state.get if state.exists else ([],)
     mins = list(mins)
     seen = False

@@ -70,9 +70,6 @@ def _batch_transitions(user_id: int, types: list[str]) -> pd.DataFrame:
 def _update(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ):
-    if state.hasTimedOut:
-        state.remove()
-        return
     (last,) = state.get if state.exists else (None,)
     frames = [pdf for pdf in pdfs if len(pdf)]
     if not frames:

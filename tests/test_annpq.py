@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from algorithmproject_spark_spark.operators.annpq import (
     CODEBOOKS,
     K_PQ,
@@ -26,7 +24,7 @@ def test_exact_codeword_roundtrip(spark):
     want = [rng.randrange(K_PQ) for _ in range(M_SUB)]
     vec = [x for j, c in enumerate(want) for x in CODEBOOKS[j][c]]
     df = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<double>")
-    row = df.select(pq_pack(F.col("embedding")).alias("s")).select("s.*").first()
+    row = df.select(pq_pack("embedding").alias("s")).select("s.*").first()
     assert row.recon_err_e6 == 0
     packed = row.packed_code
     got = [(packed // (K_PQ**j)) % K_PQ for j in range(M_SUB)]
@@ -44,7 +42,7 @@ def test_codes_bounded_and_err_positive_for_random_vectors(spark):
         for i in range(64)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = df.select(pq_pack(F.col("embedding")).alias("s")).select("s.*").collect()
+    out = df.select(pq_pack("embedding").alias("s")).select("s.*").collect()
     for r in out:
         assert 0 <= r.packed_code < K_PQ**M_SUB
         assert r.recon_err_e6 > 0  # random vectors never hit a codeword

@@ -34,7 +34,7 @@ def _cell_sizes(spark, n: int) -> list[int]:
     k = cells_for(n, TARGET)
     df = (
         _synthetic_embeddings(spark, n)
-        .select(cell_col(F.col("embedding"), k).alias("cell"))
+        .select(cell_col("embedding", k).alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -36,7 +36,7 @@ def test_bucket_and_rep_three_engine_battery(spark):
     df = spark.createDataFrame([Row(v=v) for v in BATTERY])
     got = df.select(
         "v", hdr_bucket(F.col("v")).alias("b")
-    ).withColumn("r", hdr_rep(F.col("b"))).collect()
+    ).withColumn("r", hdr_rep("b")).collect()
     con = duckdb.connect()
     for row in got:
         v = row["v"]

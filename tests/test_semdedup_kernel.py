@@ -10,8 +10,8 @@ import random
 import pytest
 from pyspark.sql import Row, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import micros
-from algorithmproject_spark_spark.functions.vectors import _dot_d, _norm_d
+from algorithmproject_spark_spark.functions.numeric import ss_micros
+from algorithmproject_spark_spark.functions.vectors import ss_dot, ss_norm
 from algorithmproject_spark_spark.queries.llmprep import (
     SEMDEDUP_COS_E6,
     _semdedup_drop_ids,
@@ -23,7 +23,7 @@ def _mk(spark, vecs):
         Row(vec_id=i, cell=c, subcell=s, we=[float(x) for x in v])
         for i, (c, s, v) in enumerate(vecs)
     ]
-    return spark.createDataFrame(rows).withColumn("nrm", _norm_d(F.col("we")))
+    return spark.createDataFrame(rows).withColumn("nrm", F.expr(ss_norm("we")))
 
 
 def _pairjoin_drops(cs):
@@ -41,10 +41,7 @@ def _pairjoin_drops(cs):
             a.join(b, ["cell", "subcell"])
             .filter(F.col("a_id") < F.col("b_id"))
             .filter(
-                micros(
-                    _dot_d(F.col("a_we"), F.col("b_we"))
-                    / (F.col("a_n") * F.col("b_n"))
-                )
+                F.expr(ss_micros(f"{ss_dot('a_we', 'b_we')} / (a_n * b_n)"))
                 >= SEMDEDUP_COS_E6
             )
             .select(F.col("b_id").alias("vec_id"))

@@ -24,17 +24,16 @@ def _skewed_embeddings(spark, n=400, dim=64, seed=7):
 
 
 def test_subcell_split_bounds_group_sizes(spark):
-    from algorithmproject_spark_spark.functions.vectors import to_double
+    from algorithmproject_spark_spark.functions.vectors import ss_norm, ss_to_double
     from algorithmproject_spark_spark.operators.annivf import K_CELLS, cell_col
-    from algorithmproject_spark_spark.functions.vectors import _norm_d
     from algorithmproject_spark_spark.queries.llmprep import semdedup_subcells
 
     emb = _skewed_embeddings(spark)
     cn = emb.select(
         "vec_id",
-        cell_col(F.col("embedding"), K_CELLS).alias("cell"),
-        to_double(F.col("embedding")).alias("we"),
-    ).withColumn("nrm", _norm_d(F.col("we")))
+        cell_col("embedding", K_CELLS).alias("cell"),
+        F.expr(ss_to_double("embedding")).alias("we"),
+    ).withColumn("nrm", F.expr(ss_norm("we")))
     # the fixture really is skewed: one cell holds everything
     cell_sizes = {r["cell"]: r["n"] for r in cn.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert max(cell_sizes.values()) == 400
@@ -60,16 +59,15 @@ def test_cap_inactive_below_threshold_preserves_output(spark):
     """With every cell at or under the cap the subcell is identically 0
     and the query output equals the pre-split semantics (all pairs in
     a cell compared)."""
-    from algorithmproject_spark_spark.functions.vectors import to_double
+    from algorithmproject_spark_spark.functions.vectors import ss_norm, ss_to_double
     from algorithmproject_spark_spark.operators.annivf import K_CELLS, cell_col
-    from algorithmproject_spark_spark.functions.vectors import _norm_d
     from algorithmproject_spark_spark.queries.llmprep import semdedup_subcells
 
     emb = _skewed_embeddings(spark, n=50)
     cn = emb.select(
         "vec_id",
-        cell_col(F.col("embedding"), K_CELLS).alias("cell"),
-        to_double(F.col("embedding")).alias("we"),
-    ).withColumn("nrm", _norm_d(F.col("we")))
+        cell_col("embedding", K_CELLS).alias("cell"),
+        F.expr(ss_to_double("embedding")).alias("we"),
+    ).withColumn("nrm", F.expr(ss_norm("we")))
     cs = semdedup_subcells(cn, cell_cap=512)
     assert cs.filter(F.col("subcell") != 0).count() == 0

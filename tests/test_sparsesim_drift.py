@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from algorithmproject_spark_spark.functions.numeric import ppm
+from algorithmproject_spark_spark.functions.numeric import ss_ppm
 from algorithmproject_spark_spark.queries.drift import token_drift
 from algorithmproject_spark_spark.queries.sparsesim import sparse_topk_pairs
 
@@ -22,7 +22,7 @@ def test_ppm_matches_naive_and_survives_huge_counts(spark):
     df = spark.createDataFrame(rows, ["c", "n"])
     out = [
         (r.c, r.n, r.p)
-        for r in df.select("c", "n", ppm(F.col("c"), F.col("n")).alias("p")).collect()
+        for r in df.select("c", "n", F.expr(ss_ppm("c", "n")).alias("p")).collect()
     ]
     for c, n, p in out:
         assert p == c * 1_000_000 // n  # python ints never overflow

@@ -1,13 +1,12 @@
 """Analyzed-plan parity of the ss_* Spark-SQL text twins.
 
-The one-parse conversions (r12 batches 1/3/5, r13 tail batch) claim the
-text form parses to the IDENTICAL Catalyst expression as the Column
-builder it replaced — until now that was enforced only via the oracle
-on registered queries. This file locks the claim per BUILDER: for each
-(Column form, text form) pair, the ANALYZED plans of a select over the
-same relation must be equal after stripping session-dependent tokens
-(expression ids, lambda-variable names). A twin that drifts (literal
-type, fold order, missing cast) fails here before any oracle run.
+The shared kernels in functions/ exist only as SQL text; a few operator
+kernels still keep a Column builder next to their text twin. For each
+remaining (Column form, text form) pair, the ANALYZED plans of a select
+over the same relation must be equal after stripping session-dependent
+tokens (expression ids, lambda-variable names). A twin that drifts
+(literal type, fold order, missing cast) fails here before any oracle
+run.
 """
 
 from __future__ import annotations
@@ -44,114 +43,6 @@ def rel(spark):
         [("hello world", ["a", "b", "c"], 7, 3, [0.5, -0.25], [0.125, 1.0], 2.5)],
         "s string, toks array<string>, num long, den long, "
         "arr1 array<double>, arr2 array<double>, dval double",
-    )
-
-
-def test_char_fold_hash(spark, rel):
-    from algorithmproject_spark_spark.functions.hashing import (
-        char_fold_hash,
-        ss_char_fold_hash,
-    )
-
-    assert_twin(spark, rel, char_fold_hash(F.col("s")), ss_char_fold_hash("s"))
-
-
-def test_token_hash_array(spark, rel):
-    from algorithmproject_spark_spark.functions.hashing import (
-        ss_token_hash_array,
-        token_hash_array,
-    )
-
-    assert_twin(
-        spark, rel, token_hash_array(F.col("toks")), ss_token_hash_array("toks")
-    )
-
-
-def test_gram_hash_array_values(spark, rel):
-    """gram: the text twin composes over an ALREADY-BOUND variable and
-    binds via element_at(...,1) where the Column form uses get(...,0)
-    — same value, intentionally different binder node, so this twin is
-    pinned by VALUE equality (the callers' plans are oracle-gated)."""
-    from algorithmproject_spark_spark.functions.hashing import (
-        gram_hash_array,
-        ss_bind,
-        ss_gram_hash_array,
-        ss_token_hash_array,
-        token_hash_array,
-    )
-
-    col = gram_hash_array(token_hash_array(F.col("toks")), 3)
-    txt = ss_bind(
-        ss_token_hash_array("toks"), "th_", ss_gram_hash_array("th_", 3)
-    )
-    a = rel.select(col.alias("out")).first()["out"]
-    b = rel.select(F.expr(txt).alias("out")).first()["out"]
-    assert a == b and a  # non-empty grams, identical integers
-
-
-def test_minhash_value(spark, rel):
-    from algorithmproject_spark_spark.functions.hashing import (
-        MINHASH_PARAMS,
-        minhash_value,
-        ss_minhash_value,
-        token_hash_array,
-        ss_token_hash_array,
-    )
-
-    a, b = MINHASH_PARAMS[0]
-    col = minhash_value(token_hash_array(F.col("toks")), a, b)
-    txt = ss_minhash_value(ss_token_hash_array("toks"), a, b)
-    assert_twin(spark, rel, col, txt)
-
-
-def test_vector_twins(spark, rel):
-    from algorithmproject_spark_spark.functions import vectors as V
-
-    assert_twin(
-        spark, rel, F.transform(F.col("arr1"), lambda x: x.cast("double")),
-        V.ss_to_double("arr1"),
-    )
-    # cosine / l2sq: the Column path and text path are asserted equal
-    # through the public dispatchers (string input takes the text path)
-    col_cos = V.cosine(F.col("arr1"), F.col("arr2"))
-    assert_twin(spark, rel, col_cos, V.ss_cosine("arr1", "arr2"))
-    col_l2 = V.l2sq(F.col("arr1"), F.col("arr2"))
-    assert_twin(spark, rel, col_l2, V.ss_l2sq("arr1", "arr2"))
-
-
-def test_numeric_twins(spark, rel):
-    from algorithmproject_spark_spark.functions import numeric as N
-
-    assert_twin(
-        spark, rel, N.scaled_long(F.col("dval")), N.ss_scaled_long("dval")
-    )
-    assert_twin(spark, rel, N.micros(F.col("dval")), N.ss_micros("dval"))
-    assert_twin(
-        spark, rel, N.hash_mod(F.col("num"), 7), N.ss_hash_mod("num", 7)
-    )
-    assert_twin(
-        spark,
-        rel,
-        N.floordiv(F.col("num"), F.col("den")),
-        N.ss_floordiv("num", "den"),
-    )
-    assert_twin(
-        spark,
-        rel,
-        N.ppm(F.col("num"), F.col("den")),
-        N.ss_ppm("num", "den"),
-    )
-    assert_twin(
-        spark,
-        rel,
-        N.ratio_e6(F.col("num"), F.col("den")),
-        N.ss_ratio_e6("num", "den"),
-    )
-    assert_twin(
-        spark,
-        rel,
-        N.ppm_wide(F.col("num"), F.col("den")),
-        N.ss_ppm_wide("num", "den"),
     )
 
 

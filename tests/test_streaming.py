@@ -834,8 +834,8 @@ def test_kmv_python_hash_twin_matches_engines_for_negative_keys(spark):
     from pyspark.sql import functions as F
 
     from algorithmproject_spark_spark.functions.numeric import (
-        hash_mod,
         sql_hash_mod,
+        ss_hash_mod,
     )
     from algorithmproject_spark_spark.queries.kmv import KMV_MOD
     from algorithmproject_spark_spark.streaming.kmvstream import _hash_key
@@ -844,7 +844,7 @@ def test_kmv_python_hash_twin_matches_engines_for_negative_keys(spark):
     df = spark.createDataFrame([(k,) for k in keys], "k long")
     spark_vals = [
         r.h
-        for r in df.select(hash_mod(F.col("k"), KMV_MOD).alias("h"))
+        for r in df.select(F.expr(ss_hash_mod("k", KMV_MOD)).alias("h"))
         .collect()
     ]
     con = duckdb.connect()

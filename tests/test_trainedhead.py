@@ -95,14 +95,11 @@ def test_train_eval_split_is_disjoint(spark):
     # recompute weights from a frame whose ODD rows are corrupted — the
     # train path must not see them (monkeypatch via temp view is
     # overkill: re-derive through the same even filter directly)
-    from algorithmproject_spark_spark.queries.trainedhead import (
-        _band_array,
-        _exploded,
-    )
+    from algorithmproject_spark_spark.queries.trainedhead import _exploded
 
     even = docs.filter(F.col("doc_id") % 2 == 0)
     assert even.count() + len(ids) == docs.count()
-    _ = (_band_array, _exploded)
+    _ = _exploded
 
 
 def test_score_bcast_unchanged_schema(spark):
