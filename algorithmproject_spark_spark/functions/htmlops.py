@@ -1,40 +1,48 @@
-"""HTML column expressions — T1 (html→text) and T13 (entity-keyword
-tagging) from SURVEY.md §2.9.
+"""HTML kernels — T1 (html→text) and T13 (entity-keyword tagging)
+from SURVEY.md §2.9.
 
 The reference parses with Jsoup inside a scala UDF per row
 (``ArticleInfoProcess.scala:61``; ``nlp/CleanHtml.scala:58-68``). For
 the markup its pipelines actually see (server-rendered article bodies),
 a regexp_replace chain covers the semantics while staying inside
 Catalyst — no Python worker, codegen-friendly. A DOM-correct variant
-for adversarial HTML belongs in a pandas_udf; the call sites keep the
-same signature so swapping is local.
+for adversarial HTML belongs in a pandas_udf.
+
+Each kernel is SQL text: ``ss_*`` for Spark (parsed once by
+``F.expr``/``selectExpr``) and ``sql_*`` for the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from algorithmproject_spark_spark.functions.text import ss_lit
 
+_WS = ss_lit(r"\s+")
+_WORD_B = ss_lit(r"\b")
 _ENTITIES = (("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&nbsp;", " "))
 
 
-def html_to_text(col: Column | str) -> Column:
+def ss_html_to_text(expr: str) -> str:
     """T1: strip script/style blocks, comments, all tags; decode the
     common entities; collapse whitespace."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = expr
     # two passes, no backreference: DuckDB's RE2 has none, and the
     # oracle must run the same pattern.
-    c = F.regexp_replace(c, r"(?is)<script[^>]*>.*?</script>", " ")
-    c = F.regexp_replace(c, r"(?is)<style[^>]*>.*?</style>", " ")
-    c = F.regexp_replace(c, r"(?s)<!--.*?-->", " ")
-    c = F.regexp_replace(c, r"<[^>]+>", " ")
+    for pattern in (
+        r"(?is)<script[^>]*>.*?</script>",
+        r"(?is)<style[^>]*>.*?</style>",
+        r"(?s)<!--.*?-->",
+        r"<[^>]+>",
+    ):
+        c = f"regexp_replace({c}, {ss_lit(pattern)}, ' ')"
     for ent, rep in _ENTITIES:
-        c = F.replace(c, F.lit(ent), F.lit(rep))
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.trim(c)
+        c = f"replace({c}, {ss_lit(ent)}, {ss_lit(rep)})"
+    c = f"regexp_replace({c}, {_WS}, ' ')"
+    return f"trim({c})"
 
 
 def sql_html_to_text(expr: str) -> str:
-    """DuckDB twin (RE2 flags spelled the same way)."""
+    """DuckDB twin of :func:`ss_html_to_text` (RE2 flags spelled the
+    same way)."""
     c = f"regexp_replace({expr}, '(?is)<script[^>]*>.*?</script>', ' ', 'g')"
     c = f"regexp_replace({c}, '(?is)<style[^>]*>.*?</style>', ' ', 'g')"
     c = f"regexp_replace({c}, '(?s)<!--.*?-->', ' ', 'g')"
@@ -46,25 +54,21 @@ def sql_html_to_text(expr: str) -> str:
     return f"trim({c})"
 
 
-def tag_entity_words(text: Column, keywords: Column) -> Column:
+def ss_tag_entity_words(text: str, keywords: str) -> str:
     """T13: wrap every whole-word occurrence of each keyword in
     ``<i class="apus-entity-words">…</i>`` (ArticleInfoProcess.scala:
     130-164 — same markup class). Sequential fold over the keyword
     array; assumes alphanumeric keywords (the reference regex-escapes
     special chars — out of scope for the synthetic corpus)."""
-    return F.aggregate(
-        keywords,
-        text,
-        lambda acc, kw: F.regexp_replace(
-            acc,
-            F.concat(F.lit(r"\b"), kw, F.lit(r"\b")),
-            F.concat(F.lit('<i class="apus-entity-words">'), kw, F.lit("</i>")),
-        ),
+    return (
+        f"aggregate({keywords}, {text}, (acc_, kw_) -> regexp_replace(acc_, "
+        f"concat({_WORD_B}, kw_, {_WORD_B}), "
+        f"concat('<i class=\"apus-entity-words\">', kw_, '</i>')))"
     )
 
 
 def sql_tag_entity_words(text_expr: str, keywords_expr: str) -> str:
-    """DuckDB twin of :func:`tag_entity_words` (note the 'g' flag —
+    """DuckDB twin of :func:`ss_tag_entity_words` (note the 'g' flag —
     DuckDB replaces only the first match by default; Spark replaces
     all)."""
     return (

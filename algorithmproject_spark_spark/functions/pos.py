@@ -6,38 +6,26 @@ The reference runs CoreNLP's ``FastNLPProcessor`` once per partition
 keep NN/JJ/VB tokens, and admit only noun-ish n-gram patterns
 (NN+NN, VB+NN, JJ+NN …). CoreNLP/spaCy are not available here, so the
 engine ships a **deterministic rule-based tagger** (suffix heuristics +
-closed-class list) with two interchangeable implementations:
+closed-class list) as pure Catalyst expressions: tagging is per-row
+narrow work inside whole-stage codegen, so it scales with input
+partitions, never shuffles and needs no Python worker.
 
-1. :func:`lemmatize_token` / :func:`pos_tag_token` — pure Catalyst
-   column expressions usable inside ``F.transform`` lambdas: stays in
-   whole-stage codegen, no Python worker, exactly oracle-checkable via
-   the ``sql_*`` DuckDB twins.
-2. :func:`lemma_pos_map_in_pandas` — the Arrow path showing the
-   per-worker lazy-singleton pattern the reference needed
-   ``mapPartitions`` for (one heavyweight NLP object per executor,
-   never per row — the per-row construction in
-   ``PrepProcess.scala:137-139`` is the anti-pattern SURVEY.md §4
-   flags). If spaCy ever lands in the image it is picked up behind an
-   import-try; otherwise the same suffix rules run vectorized, so both
-   paths agree bit-for-bit today.
-
-At 100 TB the Catalyst path is the default: tagging is per-row narrow
-work, so it scales with input partitions and never shuffles.
+Each kernel is SQL text: ``ss_*`` for Spark (parsed once by
+``F.expr``/``selectExpr``; the token/lemma kernels are lambda bodies
+for ``transform``) and ``sql_*`` for the DuckDB oracle.
+:func:`_rule_lemma` / :func:`_rule_tag` are the same rules in plain
+Python — the reference the tests check both engines against.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+import re
 
 from algorithmproject_spark_spark.functions.text import (
     STOPWORDS,
     sql_stopword_list,
-    stopword_array,
+    ss_stopword_array,
+    ss_str_array,
 )
 
 # POS bigram patterns the reference admits — the FULL accepted list
@@ -66,19 +54,19 @@ _VB_SUFFIX = "[a-z]{2}(ing|ed)$"
 _JJ_SUFFIX = "(ous|ful|ive|able|ible|al|ic)$"
 
 
-def lemmatize_token(tok: Column) -> Column:
+def ss_lemmatize_token(tok: str) -> str:
     """Rule-based lemma: lowercase, drop possessive ``'s``,
     ``-ies → -y``, strip plural ``-s`` (guarded so ``class``/``bus``/
     ``this`` survive). Pure Catalyst regexp chain."""
-    c = F.lower(tok)
-    c = F.regexp_replace(c, "'s$", "")
-    c = F.regexp_replace(c, "([a-z]{2})ies$", "$1y")
-    c = F.regexp_replace(c, "([a-z]{2}[^sui])s$", "$1")
+    c = f"lower({tok})"
+    c = f"regexp_replace({c}, '\\'s$', '')"
+    c = f"regexp_replace({c}, '([a-z]{{2}})ies$', '$1y')"
+    c = f"regexp_replace({c}, '([a-z]{{2}}[^sui])s$', '$1')"
     return c
 
 
 def sql_lemmatize_token(tok_expr: str) -> str:
-    """DuckDB twin of :func:`lemmatize_token` (RE2 ``\\1`` backrefs)."""
+    """DuckDB twin of :func:`ss_lemmatize_token` (RE2 ``\\1`` backrefs)."""
     c = f"lower({tok_expr})"
     c = f"regexp_replace({c}, '''s$', '')"
     c = f"regexp_replace({c}, '([a-z]{{2}})ies$', '\\1y')"
@@ -86,21 +74,22 @@ def sql_lemmatize_token(tok_expr: str) -> str:
     return c
 
 
-def pos_tag_token(lemma: Column) -> Column:
+def ss_pos_tag_token(lemma: str) -> str:
     """Heuristic POS tag of a lemma: closed-class → XX (dropped), else
     RB / VB / JJ by suffix, default NN — the reference keeps only
     NN/JJ/VB content words (AppsTextCoreNLPTokens.scala:56-178)."""
     return (
-        F.when(F.array_contains(stopword_array(), lemma), F.lit("XX"))
-        .when(lemma.rlike(_RB_SUFFIX), F.lit("RB"))
-        .when(lemma.rlike(_VB_SUFFIX), F.lit("VB"))
-        .when(lemma.rlike(_JJ_SUFFIX), F.lit("JJ"))
-        .otherwise(F.lit("NN"))
+        "CASE "
+        f"WHEN array_contains({ss_stopword_array()}, {lemma}) THEN 'XX' "
+        f"WHEN {lemma} RLIKE '{_RB_SUFFIX}' THEN 'RB' "
+        f"WHEN {lemma} RLIKE '{_VB_SUFFIX}' THEN 'VB' "
+        f"WHEN {lemma} RLIKE '{_JJ_SUFFIX}' THEN 'JJ' "
+        "ELSE 'NN' END"
     )
 
 
 def sql_pos_tag_token(lemma_expr: str) -> str:
-    """DuckDB twin of :func:`pos_tag_token`."""
+    """DuckDB twin of :func:`ss_pos_tag_token`."""
     return (
         "CASE "
         f"WHEN list_contains({sql_stopword_list()}, {lemma_expr}) THEN 'XX' "
@@ -111,64 +100,58 @@ def sql_pos_tag_token(lemma_expr: str) -> str:
     )
 
 
-def lemmas(tokens: Column) -> Column:
+def ss_lemmas(tokens: str) -> str:
     """array<string> of lemmas for a token array."""
-    return F.transform(tokens, lemmatize_token)
+    return f"transform({tokens}, t_ -> {ss_lemmatize_token('t_')})"
 
 
-def pos_tags(lemma_arr: Column) -> Column:
+def ss_pos_tags(lemma_arr: str) -> str:
     """array<string> of POS tags, aligned with the lemma array."""
-    return F.transform(lemma_arr, pos_tag_token)
+    return f"transform({lemma_arr}, l_ -> {ss_pos_tag_token('l_')})"
 
 
-def pos_pattern_bigrams(lemma_arr: Column, tag_arr: Column) -> Column:
+def ss_pos_pattern_bigrams(lemma_arr: str, tag_arr: str) -> str:
     """Bigrams whose tag pair is in :data:`ALLOWED_POS_PAIRS` —
     the POS-pattern n-gram admission filter (NewsNgrams.scala:110-130)
     as pure HOFs: build (gram, pattern) pairs, filter, project."""
-    n = F.size(lemma_arr) - F.lit(1)
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
+    n = f"(size({lemma_arr}) - 1)"
+    idx = (
+        f"CASE WHEN {n} >= 1 THEN sequence(1, {n}) "
+        "ELSE CAST(array() AS array<int>) END"
     )
-    pairs = F.transform(
-        idx,
-        lambda i: F.struct(
-            F.concat_ws(
-                " ", F.element_at(lemma_arr, i), F.element_at(lemma_arr, i + 1)
-            ).alias("gram"),
-            F.concat_ws(
-                "+", F.element_at(tag_arr, i), F.element_at(tag_arr, i + 1)
-            ).alias("pat"),
-        ),
+    pairs = (
+        f"transform({idx}, i_ -> struct("
+        f"concat_ws(' ', element_at({lemma_arr}, i_), "
+        f"element_at({lemma_arr}, i_ + 1)) AS gram, "
+        f"concat_ws('+', element_at({tag_arr}, i_), "
+        f"element_at({tag_arr}, i_ + 1)) AS pat))"
     )
-    allowed = F.array(*[F.lit(p) for p in ALLOWED_POS_PAIRS])
-    return F.transform(
-        F.filter(pairs, lambda p: F.array_contains(allowed, p["pat"])),
-        lambda p: p["gram"],
+    return (
+        f"transform(filter({pairs}, p_ -> array_contains("
+        f"{ss_str_array(ALLOWED_POS_PAIRS)}, p_.pat)), p_ -> p_.gram)"
     )
 
 
-def pos_pattern_unigrams(lemma_arr: Column, tag_arr: Column) -> Column:
+def ss_pos_pattern_unigrams(lemma_arr: str, tag_arr: str) -> str:
     """Lemmas whose tag is in :data:`ALLOWED_POS_UNI` — the reference's
     UNIGRAM admission branch (NN/JJ only, VB deliberately excluded per
     the 2017-04-24 词性过滤 note; AppsTextCoreNLPTokens.scala:154,
     PrepProcess.scala:288). Runtime consumer of ALLOWED_POS_UNI
     (ADVICE r11: the list was parity-tested but never applied)."""
-    allowed = F.array(*[F.lit(t) for t in ALLOWED_POS_UNI])
-    pairs = F.zip_with(
-        lemma_arr,
-        tag_arr,
-        lambda lem, tag: F.struct(lem.alias("lem"), tag.alias("tag")),
+    pairs = (
+        f"zip_with({lemma_arr}, {tag_arr}, "
+        "(lem_, tag_) -> struct(lem_ AS lem, tag_ AS tag))"
     )
-    return F.transform(
-        F.filter(pairs, lambda p: F.array_contains(allowed, p["tag"])),
-        lambda p: p["lem"],
+    return (
+        f"transform(filter({pairs}, p_ -> array_contains("
+        f"{ss_str_array(ALLOWED_POS_UNI)}, p_.tag)), p_ -> p_.lem)"
     )
 
 
 def sql_pos_unigram_cte(table: str, text_col: str = "text") -> str:
     """DuckDB CTE producing (doc_id, lem) rows of admitted NN/JJ
-    unigram lemmas — mirrors tokenize → lemmas → pos_tags →
-    pos_pattern_unigrams."""
+    unigram lemmas — mirrors ss_tokenize → ss_lemmas → ss_pos_tags →
+    ss_pos_pattern_unigrams."""
     lem_list = (
         f"list_transform(string_split({text_col}, ' '), "
         f"t -> {sql_lemmatize_token('t')})"
@@ -196,7 +179,8 @@ def sql_pos_unigram_cte(table: str, text_col: str = "text") -> str:
 
 def sql_pos_bigram_cte(table: str, text_col: str = "text") -> str:
     """DuckDB CTE producing (doc_id, gram) rows of admitted POS bigrams
-    — mirrors tokenize → lemmas → pos_tags → pos_pattern_bigrams."""
+    — mirrors ss_tokenize → ss_lemmas → ss_pos_tags →
+    ss_pos_pattern_bigrams."""
     lem_list = (
         f"list_transform(string_split({text_col}, ' '), "
         f"t -> {sql_lemmatize_token('t')})"
@@ -223,39 +207,11 @@ def sql_pos_bigram_cte(table: str, text_col: str = "text") -> str:
     """
 
 
-# --------------------------------------------------------------------------
-# Arrow path — the mapPartitions/heavy-singleton pattern.
-# --------------------------------------------------------------------------
-_NLP_SINGLETON = None
-
-
-def _get_nlp():
-    """One tagger object per Python worker process (NOT per row/batch) —
-    the fix for the reference's per-row FastNLPProcessor construction
-    (PrepProcess.scala:137-139). spaCy is OPT-IN behind the
-    SPARK_GRAFT_SPACY=1 flag (VERDICT r10 #5): a statistical tagger
-    silently replacing the rule battery would change hashes the moment
-    the library lands in an image, so the default stays the
-    deterministic rule path that matches the Catalyst twin exactly."""
-    global _NLP_SINGLETON
-    if _NLP_SINGLETON is None:
-        _NLP_SINGLETON = ("rules", None)
-        if os.environ.get("SPARK_GRAFT_SPACY") == "1":
-            try:  # pragma: no cover - spaCy absent in this image
-                import spacy
-
-                _NLP_SINGLETON = ("spacy", spacy.load("en_core_web_sm"))
-            except Exception:
-                pass
-    return _NLP_SINGLETON
-
-
 _STOPSET = frozenset(STOPWORDS)
 
 
 def _rule_lemma(tok: str) -> str:
-    import re
-
+    """Python reference of :func:`ss_lemmatize_token`."""
     t = tok.lower()
     t = re.sub("'s$", "", t)
     t = re.sub("([a-z]{2})ies$", r"\1y", t)
@@ -264,8 +220,7 @@ def _rule_lemma(tok: str) -> str:
 
 
 def _rule_tag(lemma: str) -> str:
-    import re
-
+    """Python reference of :func:`ss_pos_tag_token`."""
     if lemma in _STOPSET:
         return "XX"
     if re.search(_RB_SUFFIX, lemma):
@@ -275,45 +230,3 @@ def _rule_tag(lemma: str) -> str:
     if re.search(_JJ_SUFFIX, lemma):
         return "JJ"
     return "NN"
-
-
-LEMMA_POS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("lemmas", ArrayType(StringType())),
-        StructField("tags", ArrayType(StringType())),
-    ]
-)
-
-
-def _lemma_tag_text(text: str, kind: str, nlp) -> tuple[list, list]:
-    """One text → (lemmas, 2-char tags) under the resolved tagger —
-    the per-row kernel shared by the Arrow path and the offline golden
-    parity test (VERDICT r11 #7: the spaCy branch must be testable
-    in-process, since a worker daemon started before the opt-in flag
-    was set would not see it)."""
-    toks = text.split(" ")
-    if kind == "spacy":  # pragma: no cover - spaCy absent in image
-        doc = nlp(" ".join(toks))
-        return [w.lemma_.lower() for w in doc], [w.tag_[:2] for w in doc]
-    lems = [_rule_lemma(t) for t in toks]
-    return lems, [_rule_tag(l) for l in lems]
-
-
-def lemma_pos_map_in_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """``mapInPandas`` lemma+POS pass: Arrow batches in, one lazy tagger
-    per worker. Input needs (doc_id, ``text_col``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kind, nlp = _get_nlp()
-        for pdf in batches:
-            lem_col, tag_col = [], []
-            for text in pdf[text_col].astype(str):
-                lems, tags = _lemma_tag_text(text, kind, nlp)
-                lem_col.append(lems)
-                tag_col.append(tags)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "lemmas": lem_col, "tags": tag_col}
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(run, schema=LEMMA_POS_SCHEMA)

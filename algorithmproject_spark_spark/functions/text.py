@@ -1,7 +1,7 @@
-"""Text column expressions — tokenize / clean / n-grams / quality.
+"""Text kernels — tokenize / clean / n-grams / stopwords / subsumption.
 
-Re-expresses the reference's text kernels as pure Catalyst column
-expressions wherever the semantics allow (SURVEY.md §2.8-2.9):
+Re-expresses the reference's text kernels as pure Catalyst expressions
+(SURVEY.md §2.8-2.9):
 
 - string cleaning chains (``nlp/CleanHtml.scala:20-37``,
   ``nlp/PrepProcess.scala:24-37``) → chained ``regexp_replace`` — no UDF;
@@ -10,19 +10,17 @@ expressions wherever the semantics allow (SURVEY.md §2.8-2.9):
   ``sequence`` + ``slice``) — stays inside whole-stage codegen, no
   Python worker, no shuffle;
 - stopword filtering (``NewsNgrams.scala:60-72`` broadcast list) →
-  in-plan array literal / ``array_except`` for small lists, join for
-  big dictionaries;
-- language-ID / quality scoring / token counting are the training-data
-  extensions layered on the same primitives.
+  in-plan array literal for small lists, join for big dictionaries.
 
-Everything here is deterministic and engine-portable: the matching
-DuckDB oracle SQL is generated by ``sql_*`` twins so Spark results can
-be hash-compared exactly.
+Each kernel is SQL TEXT, rendered once per engine: ``ss_*`` for Spark
+(callers parse it with ``F.expr``/``selectExpr`` — one py4j send per
+expression instead of one per nested ``F.*`` call) and ``sql_*`` for
+the DuckDB oracle, so Spark results can be hash-compared exactly.
+Regex and string arguments go through :func:`ss_lit`, which applies
+Spark's backslash escaping (a Python ``r"\\S"`` is ``'\\\\S'`` in SQL).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
 
 # Small English-ish stopword list (reference loads ~120 words from HDFS
 # and broadcasts them — NewsNgrams.scala:63; we inline a deterministic
@@ -34,80 +32,64 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def tokenize(col: Column | str) -> Column:
-    """Whitespace tokenizer (the testdata corpus is space-joined).
-    A string input (column name) takes the one-parse F.expr path
-    (r13): split(col, ' ') is the identical expression either way."""
-    if isinstance(col, str):
-        return F.expr(f"split({col}, ' ')")
-    return F.split(col, " ")
+def ss_lit(s: str) -> str:
+    """Spark-SQL string literal of ``s`` (backslash and quote escaped:
+    Spark's parser unescapes ``\\`` and ``\\'`` inside '...')."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def clean_text(col: Column | str) -> Column:
+def ss_str_array(words) -> str:
+    """array<string> literal of ``words`` — one parse instead of one
+    py4j lit per word."""
+    return "array(" + ", ".join(ss_lit(w) for w in words) + ")"
+
+
+def ss_tokenize(expr: str) -> str:
+    """Whitespace tokenizer (the testdata corpus is space-joined)."""
+    return f"split({expr}, ' ')"
+
+
+def ss_clean_text(expr: str) -> str:
     """Reference cleaning chain (CleanHtml.scala:20-37) as pure
     Catalyst: strip URLs, emails, control chars, collapse whitespace,
     lowercase. regexp_replace chains stay in codegen."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, r"https?://\S+", " ")
-    c = F.regexp_replace(c, r"\S+@\S+\.\S+", " ")
-    c = F.regexp_replace(c, r"[\r\n\t]", " ")
-    c = F.regexp_replace(c, r" +", " ")
-    return F.lower(F.trim(c))
+    c = expr
+    for pattern in (r"https?://\S+", r"\S+@\S+\.\S+", r"[\r\n\t]", r" +"):
+        c = f"regexp_replace({c}, {ss_lit(pattern)}, ' ')"
+    return f"lower(trim({c}))"
 
 
-def ngrams(tokens: Column, n: int, sep: str = " ") -> Column:
+def ss_ngrams(tokens: str, n: int, sep: str = " ") -> str:
     """n-grams of a token array via HOFs (no shuffle, no UDF).
 
-    Guarded with ``when`` because Spark's ``sequence(1, 0)`` produces a
+    Guarded with CASE because Spark's ``sequence(1, 0)`` produces a
     DESCENDING range rather than an empty one.
     """
-    count = F.size(tokens) - F.lit(n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(sep, F.slice(tokens, i, n)),
+    count = f"(size({tokens}) - {n - 1})"
+    return (
+        f"CASE WHEN {count} >= 1 THEN transform(sequence(1, {count}), "
+        f"i_ -> concat_ws({ss_lit(sep)}, slice({tokens}, i_, {n}))) "
+        "ELSE CAST(array() AS array<string>) END"
     )
-    return F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
 def sql_ngrams(tokens_expr: str, n: int, sep: str = " ") -> str:
-    """DuckDB twin of :func:`ngrams` (1-based list_slice, empty range)."""
+    """DuckDB twin of :func:`ss_ngrams` (1-based list_slice, empty range)."""
     return (
         f"list_transform(range(1, len({tokens_expr}) - {n} + 2), "
         f"i -> array_to_string(list_slice({tokens_expr}, i, i + {n - 1}), '{sep}'))"
     )
 
 
-def stopword_array() -> Column:
-    # one F.expr parse instead of one py4j lit per word (r13): the
-    # parsed CreateArray(Literal...) tree is identical
-    return F.expr(ss_stopword_array())
+def ss_stopword_array() -> str:
+    return ss_str_array(STOPWORDS)
 
 
 def sql_stopword_list() -> str:
     return "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 
 
-def ss_stopword_array() -> str:
-    """Spark-SQL text twin of :func:`stopword_array` (one parse instead
-    of one py4j lit per word — see functions/hashing.py ss_*)."""
-    return "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokenize(col)))
-
-
-def stopword_count(tokens: Column) -> Column:
-    """How many tokens are stopwords (duplicates counted) — via filter,
-    not array_intersect, to keep multiplicity."""
-    return F.size(F.filter(tokens, lambda t: F.array_contains(stopword_array(), t)))
-
-
-def longest_match_filter(arr: Column) -> Column:
+def ss_longest_match_filter(arr: str) -> str:
     """取长不取短 — keep only candidates NOT space-bounded-contained in a
     longer candidate (reference ``nlp/NewsNgrams.scala:34-41``
     ``getLonger``: pad every phrase with spaces, drop any phrase another
@@ -118,18 +100,15 @@ def longest_match_filter(arr: Column) -> Column:
     Pure array HOFs — per-row arithmetic stays inside the row, no
     explode/join at any scale.
     """
-    a = F.array_distinct(F.filter(arr, lambda x: x.isNotNull() & (x != F.lit(""))))
-
-    def pad(c: Column) -> Column:
-        return F.concat(F.lit(" "), c, F.lit(" "))
-
-    return F.filter(
-        a, lambda w: ~F.exists(a, lambda o: (o != w) & pad(o).contains(pad(w)))
+    a = f"array_distinct(filter({arr}, x_ -> x_ IS NOT NULL AND x_ != ''))"
+    return (
+        f"filter({a}, w_ -> NOT exists({a}, o_ -> o_ != w_ AND "
+        "contains(concat(' ', o_, ' '), concat(' ', w_, ' '))))"
     )
 
 
 def sql_longest_match_filter(arr: str) -> str:
-    """DuckDB twin of :func:`longest_match_filter` (nested list lambdas)."""
+    """DuckDB twin of :func:`ss_longest_match_filter` (nested list lambdas)."""
     a = f"list_distinct(list_filter({arr}, x_ -> x_ IS NOT NULL AND x_ <> ''))"
     return (
         f"list_filter({a}, w_ -> len(list_filter({a}, "

@@ -82,20 +82,19 @@ def rake_scores(
 
 
 def rake_keywords_col(
-    text: Column | str,
+    text: str,
     stopwords: tuple[str, ...] = STOPWORDS,
     max_phrase_len: int = 3,
     top_k: int = 10,
 ) -> Column:
-    """Column expression: array<struct<phrase, score>> of RAKE keywords."""
+    """array<struct<phrase, score>> of RAKE keywords of column ``text``."""
     sw = frozenset(stopwords)
 
     @F.pandas_udf(_RESULT_TYPE)
     def _rake(s):  # type: ignore[no-untyped-def]
         return s.map(lambda t: rake_scores(t or "", sw, max_phrase_len, top_k))
 
-    c = F.col(text) if isinstance(text, str) else text
-    return _rake(c)
+    return _rake(text)
 
 
 def extract_keywords(

@@ -7,8 +7,13 @@ maps to the driver. PySpark has no GraphX; more importantly the
 per-document graphs this workload actually needs are tiny (≤ a few
 hundred vertices), so the Spark-correct shape is ``mapInPandas``:
 one power iteration per input row, zero shuffle, zero cross-document
-state, embarrassingly parallel. A fixed iteration count (not a
-convergence test) keeps results deterministic.
+state, embarrassingly parallel.
+
+The iteration is integer-exact — the same fixed-point scheme as
+``corpus_pagerank`` (plans/pipelines.py): damping 17/20, truncating
+integer division, a fixed iteration count. Python bigint arithmetic is
+exact, so the kernel is bit-identical to a DuckDB BIGINT re-derivation
+and the per-doc TextRank query is fully oracle-checked.
 
 For a genuinely global graph (e.g. corpus-level word graph), see
 ``corpus_pagerank`` in ``plans/pipelines.py`` — a bounded-iteration
@@ -17,106 +22,10 @@ DataFrame join-agg loop, the distributed fallback.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from algorithmproject_spark_spark.functions.text import STOPWORDS
 
-
-def textrank_scores(
-    tokens: list[str],
-    stopwords: frozenset[str] = frozenset(STOPWORDS),
-    window: int = 2,
-    damping: float = 0.85,
-    iterations: int = 20,
-) -> dict[str, float]:
-    """Power iteration on the co-occurrence graph of one document.
-
-    Pure python/numpy-free (graphs are tiny); deterministic: fixed
-    iteration count, vocabulary ordered by first occurrence.
-    """
-    words = [t for t in tokens if t not in stopwords]
-    vocab: dict[str, int] = {}
-    for w in words:
-        vocab.setdefault(w, len(vocab))
-    n = len(vocab)
-    if n == 0:
-        return {}
-    # undirected co-occurrence edges within `window`
-    weights: dict[tuple[int, int], float] = {}
-    for i, w in enumerate(words):
-        for j in range(i + 1, min(i + window + 1, len(words))):
-            u, v = vocab[w], vocab[words[j]]
-            if u == v:
-                continue
-            weights[(u, v)] = weights.get((u, v), 0.0) + 1.0
-            weights[(v, u)] = weights.get((v, u), 0.0) + 1.0
-    out_weight = [0.0] * n
-    for (u, _v), w in weights.items():
-        out_weight[u] += w
-    ranks = [1.0 / n] * n
-    for _ in range(iterations):
-        nxt = [(1.0 - damping) / n] * n
-        for (u, v), w in sorted(weights.items()):  # sorted → deterministic FP order
-            if out_weight[u] > 0:
-                nxt[v] += damping * ranks[u] * (w / out_weight[u])
-        ranks = nxt
-    return {w: ranks[i] for w, i in vocab.items()}
-
-
-def extract_keywords(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 10,
-    iterations: int = 20,
-) -> DataFrame:
-    """(id, word, score_e6, rank): per-document TextRank via
-    mapInPandas — one small graph per input row, Arrow-batched."""
-    sw = frozenset(STOPWORDS)
-
-    def _batches(batches):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        for pdf in batches:
-            out: list[tuple[object, str, int, int]] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                scores = textrank_scores((text or "").split(), sw, iterations=iterations)
-                ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
-                out.extend(
-                    (did, word, int(score * 1e6 + 0.5), rank)
-                    for rank, (word, score) in enumerate(ranked, start=1)
-                )
-            yield pd.DataFrame(out, columns=[id_col, "word", "score_e6", "rank"])
-
-    # The kernel is per-ROW (one doc per row), so mapInPandas: zero
-    # shuffle, one Arrow batch per ~10k rows. groupBy(id).applyInPandas
-    # here would shuffle every doc into its own 1-row group and pay the
-    # per-group pandas/Arrow overhead thousands of times over.
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, schema=f"{id_col} long, word string, score_e6 long, rank int"
-    )
-
-
-def top_corpus_keywords(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", top_k: int = 50
-) -> DataFrame:
-    """Corpus-level: sum per-doc TextRank scores per word, top-k."""
-    kw = extract_keywords(df, text_col, id_col)
-    return (
-        kw.groupBy("word")
-        .agg(F.sum("score_e6").alias("total_score_e6"), F.count(F.lit(1)).alias("n_docs"))
-        .orderBy(F.desc("total_score_e6"), F.asc("word"))
-        .limit(top_k)
-    )
-
-
-# --------------------------------------------------------------------------
-# Integer-exact variant — same fixed-point scheme as corpus_pagerank
-# (plans/pipelines.py): damping 17/20, truncating integer division.
-# Python bigint arithmetic is exact, so the applyInPandas kernel is
-# bit-identical to a DuckDB BIGINT re-derivation — which upgrades the
-# per-doc TextRank query from rows-only to fully oracle-checked.
-# --------------------------------------------------------------------------
 TR_SCALE = 10**12
 TR_ITERS = 5
 TR_WINDOW = 2

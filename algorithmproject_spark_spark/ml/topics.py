@@ -15,7 +15,7 @@ from pyspark.ml.clustering import LDA
 from pyspark.ml.feature import CountVectorizer, Word2Vec
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.text import stopword_array, tokenize
+from algorithmproject_spark_spark.functions.text import ss_stopword_array, ss_tokenize
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -24,9 +24,9 @@ SEED = 42
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        F.array_except(tokenize("text"), stopword_array()).alias("tokens"),
+        f"array_except({ss_tokenize('text')}, {ss_stopword_array()}) AS tokens",
     )
 
 

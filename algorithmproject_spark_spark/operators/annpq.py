@@ -142,8 +142,11 @@ def ss_pq_pack(emb: str) -> str:
 
 
 def ss_recon_dot(codes_a: str, codes_b: str) -> str:
-    """Text twin of :func:`recon_dot` (same left-associated addition of
-    table lookups)."""
+    """Reconstructed dot product of two PQ-coded vectors:
+    Σ_j DOT_TABS[j][code_a[j]·K + code_b[j]]. Left-associated addition
+    of table literals — bit-exact cross-engine because both engines
+    only LOOK UP doubles that were computed once in Python (the SQL
+    twin parses the same shortest-repr decimal strings)."""
     terms = " + ".join(
         f"element_at({ss_arr(DOT_TABS[j])}, "
         f"element_at({codes_a}, {j + 1}) * {K_PQ} "
@@ -225,30 +228,8 @@ DOT_TABS: tuple[tuple[float, ...], ...] = tuple(
 )
 
 
-def recon_dot(codes_a: Column | str, codes_b: Column | str) -> Column:
-    """Reconstructed dot product of two PQ-coded vectors:
-    Σ_j DOT_TABS[j][code_a[j]·K + code_b[j]]. Left-associated addition
-    of table literals — bit-exact cross-engine because both engines
-    only LOOK UP doubles that were computed once in Python (the SQL
-    twin parses the same shortest-repr decimal strings). String inputs
-    (column names) take the one-parse F.expr path."""
-    if isinstance(codes_a, str) and isinstance(codes_b, str):
-        return F.expr(ss_recon_dot(codes_a, codes_b))
-    out: Column | None = None
-    for j in range(M_SUB):
-        idx = (
-            F.element_at(codes_a, j + 1) * F.lit(K_PQ)
-            + F.element_at(codes_b, j + 1)
-            + F.lit(1)
-        )
-        term = F.element_at(F.lit(list(DOT_TABS[j])), idx)
-        out = term if out is None else out + term
-    assert out is not None
-    return out
-
-
 def sql_recon_dot(codes_a: str, codes_b: str) -> str:
-    """DuckDB twin of :func:`recon_dot` (same association order)."""
+    """DuckDB twin of :func:`ss_recon_dot` (same association order)."""
     terms = " + ".join(
         f"([{', '.join(repr(x) for x in DOT_TABS[j])}])"
         f"[{codes_a}[{j + 1}] * {K_PQ} + {codes_b}[{j + 1}] + 1]"

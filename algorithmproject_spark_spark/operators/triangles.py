@@ -33,11 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 from algorithmproject_spark_spark.cacheutil import tracked_lazy_local_checkpoint
 
 
-def _lt(da, va, db, vb):
-    """Lexicographic (degree, id) comparison as a Column."""
-    return (da < db) | ((da == db) & (va < vb))
-
-
 def vertex_degrees(edges: DataFrame) -> DataFrame:
     """``(v, deg)`` over distinct undirected ``edges(a, b)`` — the
     shared degree primitive of the graph family (orientation here,

@@ -29,14 +29,15 @@ from algorithmproject_spark_spark.cacheutil import (
 )
 from algorithmproject_spark_spark.functions.text import (
     sql_stopword_list,
-    stopword_array,
-    tokenize,
+    ss_stopword_array,
+    ss_str_array,
+    ss_tokenize,
 )
 from algorithmproject_spark_spark.functions.htmlops import (
-    html_to_text,
     sql_html_to_text,
     sql_tag_entity_words,
-    tag_entity_words,
+    ss_html_to_text,
+    ss_tag_entity_words,
 )
 from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.operators.core import dedup_exact
@@ -141,8 +142,8 @@ MAX_DOC_GRAMS = 200
 def lda_corpus_uci(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select("doc_id", F.explode(tokenize("text")).alias("word"))
-        .filter(~F.array_contains(stopword_array(), F.col("word")))
+        docs.selectExpr("doc_id", f"explode({ss_tokenize('text')}) AS word")
+        .filter(f"NOT array_contains({ss_stopword_array()}, word)")
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -496,17 +497,10 @@ def article_tagging_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     d1 = dedup_exact(
         docs.select("doc_id", "text", "lang"), ["text"], keep_min_of="doc_id"
     )
-    html = F.concat(
-        F.lit("<html><body><p>"), F.col("text"), F.lit("</p><!-- c --></body></html>")
-    )
-    cleaned = d1.select(
-        "doc_id", "lang", html_to_text(html).alias("content")
-    )
+    html = "concat('<html><body><p>', text, '</p><!-- c --></body></html>')"
+    cleaned = d1.selectExpr("doc_id", "lang", f"{ss_html_to_text(html)} AS content")
     tagged = cleaned.withColumn(
-        "tagged",
-        tag_entity_words(
-            F.col("content"), F.array(*[F.lit(w) for w in ENTITY_WORDS])
-        ),
+        "tagged", F.expr(ss_tag_entity_words("content", ss_str_array(ENTITY_WORDS)))
     )
     survivors = tagged.filter(
         F.expr(ss_hash_mod("doc_id", _EXT_DUP_MOD)) != F.lit(_EXT_DUP_SLOT)

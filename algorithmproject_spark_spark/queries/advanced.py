@@ -14,12 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.htmlops import (
-    html_to_text,
     sql_html_to_text,
     sql_tag_entity_words,
-    tag_entity_words,
+    ss_html_to_text,
+    ss_tag_entity_words,
 )
 from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
+from algorithmproject_spark_spark.functions.text import ss_str_array
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -175,8 +176,7 @@ _HTML_WRAP_DUCK = (
 )
 def html_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = F.expr(_HTML_WRAP_SPARK)
-    stripped = html_to_text(wrapped)
+    stripped = F.expr(ss_html_to_text(_HTML_WRAP_SPARK))
     return docs.select(
         "doc_id",
         stripped.alias("stripped"),
@@ -206,8 +206,7 @@ _TAG_LIST_SQL = "[" + ", ".join(f"'{w}'" for w in _TAG_WORDS) + "]"
 )
 def entity_word_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    kw = F.array(*[F.lit(w) for w in _TAG_WORDS])
-    tagged = tag_entity_words(F.col("text"), kw)
+    tagged = F.expr(ss_tag_entity_words("text", ss_str_array(_TAG_WORDS)))
     marker_len = len('<i class="apus-entity-words"></i>')
     return docs.select(
         "doc_id",

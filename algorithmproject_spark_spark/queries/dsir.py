@@ -39,7 +39,6 @@ from algorithmproject_spark_spark.functions.hashing import (
     ss_token_hash_array,
 )
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv
-from algorithmproject_spark_spark.functions.text import tokenize
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 

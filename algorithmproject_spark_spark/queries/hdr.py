@@ -43,23 +43,23 @@ SUB = 1 << B_BITS  # 16 sub-buckets per octave
 PCTS = (50, 90, 99)
 
 
-def _bitlen(v):
+def _ss_bitlen(v: str) -> str:
     """floor(log2(v)) + 1 for v >= 1 (1 for v = 0) — integer-exact via
     base-2 string length."""
-    return F.length(F.conv(v, 10, 2))
+    return f"length(conv({v}, 10, 2))"
 
 
 def _sql_bitlen(v: str) -> str:
     return f"length(printf('%b', {v}))"
 
 
-def hdr_bucket(v):
-    """HDR bucket index of a non-negative BIGINT column."""
-    m = _bitlen(v)
-    shift = (m - F.lit(B_BITS + 1)).cast("int")
-    mant = F.call_function("shiftright", v, shift)
-    return F.when(v < SUB, v).otherwise(
-        (m - F.lit(B_BITS + 1)) * SUB + mant
+def ss_hdr_bucket(v: str) -> str:
+    """HDR bucket index of a non-negative BIGINT expression."""
+    m = _ss_bitlen(v)
+    return (
+        f"CASE WHEN {v} < {SUB} THEN {v} "
+        f"ELSE ({m} - {B_BITS + 1}) * {SUB} "
+        f"+ shiftright({v}, CAST({m} - {B_BITS + 1} AS INT)) END"
     )
 
 
@@ -196,7 +196,7 @@ def events_hdr_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
     )
     hist = (
-        vc.select("event_type", hdr_bucket(F.col("v")).alias("idx"), "c")
+        vc.selectExpr("event_type", f"{ss_hdr_bucket('v')} AS idx", "c")
         .groupBy("event_type", "idx")
         .agg(F.sum("c").alias("c"))
     )

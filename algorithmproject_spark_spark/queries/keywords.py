@@ -10,7 +10,7 @@
   TextRank.scala:20-125``) in exact fixed-point integer arithmetic
   (damping 17/20, truncating division — same scheme as
   ``corpus_pagerank``), oracle-checked against an unrolled DuckDB CTE
-  re-derivation; the float kernel keeps closed-form unit tests in
+  re-derivation; the kernel keeps closed-form unit tests in
   ``tests/test_keywords.py``.
 - ``label_combine_keywords`` is the T12 combiner
   (``label/keywordextractor/LabelCombine.scala:18-106``): full outer
@@ -169,8 +169,7 @@ def _sql_textrank(iterations: int, scale: int, window: int, top_k: int) -> str:
     ),
     doc="T10: per-doc TextRank via mapInPandas in exact fixed-point "
     "integer arithmetic — top-10 words per doc, oracle-checked against "
-    "an unrolled DuckDB CTE re-derivation (float TextRank kernel kept "
-    "in ml/textrank.py with closed-form unit tests)",
+    "an unrolled DuckDB CTE re-derivation",
 )
 def textrank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

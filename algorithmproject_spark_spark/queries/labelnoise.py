@@ -23,7 +23,7 @@ Scale shape — SemDeDup grouping + PQ symmetric prefilter:
    exactly when cells exceed 256·cap vectors, as at sf1).
 2. Within a group, pairs are first scored by the PQ RECONSTRUCTED dot
    product — M_SUB literal-table lookups per pair (operators/annpq.py
-   ``recon_dot``) instead of a DIM-element fold — and only the top
+   ``ss_recon_dot``) instead of a DIM-element fold — and only the top
    ``PQ_PREFILTER_C`` (= 4·k) candidates per vector by that proxy get
    the exact cosine. The exact-cosine volume drops from ~cap per
    vector to 4·k per vector (~25× here), which is what made the sf1
@@ -61,7 +61,6 @@ from algorithmproject_spark_spark.operators.annivf import (
 )
 from algorithmproject_spark_spark.operators.annpq import (
     pq_code_array,
-    recon_dot,
     sql_pq_code_array,
     sql_recon_dot,
     ss_recon_dot,
@@ -165,7 +164,7 @@ def _prefiltered_exact_pairs(
     ).transform(tracked_local_checkpoint)
     # Stage 1 — proxy scoring: the pair join carries 8-int code arrays
     # and a scalar norm, never the 64-double widened vector, and scores
-    # each pair with M literal-table lookups (recon_dot)
+    # each pair with M literal-table lookups (ss_recon_dot)
     a = cs.selectExpr(
         "vec_id",
         "label",

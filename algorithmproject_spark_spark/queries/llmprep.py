@@ -34,7 +34,7 @@ from algorithmproject_spark_spark.functions.numeric import (
     ss_hash_mod,
     ss_micros,
 )
-from algorithmproject_spark_spark.functions.text import ngrams, sql_ngrams, tokenize
+from algorithmproject_spark_spark.functions.text import sql_ngrams, ss_ngrams, ss_tokenize
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -81,14 +81,13 @@ SEQ_LEN = 512  # packing window, tokens
 )
 def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize("text")
-    base = docs.select("doc_id", toks.alias("toks"))
+    base = docs.selectExpr("doc_id", f"{ss_tokenize('text')} AS toks")
 
     n_tokens = F.size("toks")
     # bind bg once; mode count = max membership count over distinct grams
     top_bigram_n = F.element_at(
         F.transform(
-            F.array(ngrams(F.col("toks"), 2)),
+            F.array(F.expr(ss_ngrams("toks", 2))),
             lambda bg: F.coalesce(
                 F.array_max(
                     F.transform(
@@ -181,7 +180,7 @@ def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(tokenize("text")).cast("long")
+    n_tokens = F.expr(f"CAST(size({ss_tokenize('text')}) AS BIGINT)")
     w = (
         W.partitionBy("lang")
         .orderBy("doc_id")
@@ -488,7 +487,7 @@ def chunk_dedup(
     # would be DESCENDING in Spark, not empty.
     slices = F.element_at(
         F.transform(
-            F.array(tokenize("text")),
+            F.array(F.expr(ss_tokenize("text"))),
             lambda w: F.transform(
                 F.sequence(
                     F.lit(0).cast("long"),

@@ -59,7 +59,7 @@ from algorithmproject_spark_spark.functions.numeric import (
     ss_floordiv,
     ss_micros,
 )
-from algorithmproject_spark_spark.functions.text import tokenize
+from algorithmproject_spark_spark.functions.text import ss_tokenize
 from algorithmproject_spark_spark.queries.qualitymodel import (
     _sql_quality_prefix,
     quality_logit_cols,
@@ -502,7 +502,7 @@ def token_label_gini_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         _label_col().alias("label"),
-        F.array_distinct(tokenize("text")).alias("dtoks"),
+        F.expr(f"array_distinct({ss_tokenize('text')}) AS dtoks"),
     )
     tls = base.select("label", F.explode("dtoks").alias("token"))
     per_tok = tls.groupBy("token").agg(

@@ -19,12 +19,11 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.text import (
-    ss_stopword_array,
-    ngrams,
     sql_ngrams,
     sql_stopword_list,
-    stopword_array,
-    tokenize,
+    ss_ngrams,
+    ss_stopword_array,
+    ss_tokenize,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -52,8 +51,8 @@ from algorithmproject_spark_spark.sources.catalog import load_table
 def doc_wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(tokenize("text")).alias("word"))
-        .filter(~F.array_contains(stopword_array(), F.col("word")))
+        docs.selectExpr(f"explode({ss_tokenize('text')}) AS word")
+        .filter(f"NOT array_contains({ss_stopword_array()}, word)")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("word"))
@@ -83,7 +82,9 @@ def doc_wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(ngrams(tokenize("text"), 2)).alias("bigram"))
+        docs.selectExpr(
+            f"explode({ss_ngrams(ss_tokenize('text'), 2)}) AS bigram"
+        )
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -355,8 +356,8 @@ def hashed_tfidf(docs: DataFrame, num_features: int = TFIDF_NUM_FEATURES) -> Dat
     """Feature-hashed TF-IDF: top-5 features per doc, HashingTF-style."""
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     tf = (
-        docs.select("doc_id", F.explode(tokenize("text")).alias("word"))
-        .filter(~F.array_contains(stopword_array(), F.col("word")))
+        docs.selectExpr("doc_id", f"explode({ss_tokenize('text')}) AS word")
+        .filter(f"NOT array_contains({ss_stopword_array()}, word)")
         .select(
             "doc_id",
             F.expr(f"{ss_char_fold_hash('word')} % {num_features}").alias("feature"),
@@ -440,7 +441,9 @@ def doc_sensitive_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     sens = F.array(*[F.lit(w) for w in _SENSITIVE])
     return (
         docs.select(
-            F.explode(F.array_distinct(F.array_intersect(tokenize("text"), sens))).alias("word")
+            F.explode(
+                F.array_distinct(F.array_intersect(F.expr(ss_tokenize("text")), sens))
+            ).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -474,5 +477,5 @@ def doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("n_bpe_tokens"),
-        F.size(tokenize("text")).alias("n_ws_tokens"),
+        F.expr(f"size({ss_tokenize('text')}) AS n_ws_tokens"),
     )

@@ -10,11 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.functions.text import (
-    longest_match_filter,
     sql_longest_match_filter,
     sql_stopword_list,
-    stopword_array,
-    tokenize,
+    ss_longest_match_filter,
+    ss_stopword_array,
+    ss_tokenize,
 )
 from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.registry import register
@@ -43,17 +43,17 @@ from algorithmproject_spark_spark.sources.catalog import load_table
 )
 def stopword_masked_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(tokenize("text")).alias("pos", "w")
+    tok = docs.selectExpr(
+        "doc_id", f"posexplode({ss_tokenize('text')}) AS (pos, w)"
     )
-    sw = stopword_array()
+    sw = ss_stopword_array()
     nxt = tok.select(
         "doc_id", (F.col("pos") - 1).alias("pos"), F.col("w").alias("w2")
     )
     pairs = (
         tok.join(nxt, ["doc_id", "pos"])
         .filter(
-            ~F.array_contains(sw, F.col("w")) & ~F.array_contains(sw, F.col("w2"))
+            f"NOT array_contains({sw}, w) AND NOT array_contains({sw}, w2)"
         )
         .select(F.concat_ws(" ", "w", "w2").alias("bigram"))
     )
@@ -71,7 +71,7 @@ def stopword_masked_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NewsNgrams: possessive-'s forms spawn a stripped noun candidate
 # (NewsNgrams.scala:255-262 — "电影名是带's的,构造一个不带's的新词"), and
 # the candidate set is subsumption-filtered 取长不取短 by getLonger
-# (NewsNgrams.scala:34-41; functions/text.py longest_match_filter). The
+# (NewsNgrams.scala:34-41; functions/text.py ss_longest_match_filter). The
 # corpus is lowercase prose, so the query first derives a marked-up
 # rendering from real columns (the regexes then have genuine structure
 # to hit), keeping every value oracle-derivable: the leading unigram is
@@ -126,7 +126,7 @@ def candidate_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" ("), F.col("n_chars").cast("string"), F.lit(" chars): "),
         F.upper("lang"), F.lit("'s corpus. "), F.col("text"),
     )
-    toks = F.split(F.col("text"), " ")
+    toks = F.expr(ss_tokenize("text"))
     marked = docs.select("doc_id", mt.alias("mt"), toks.alias("toks"))
     caps = F.regexp_extract_all(F.col("mt"), F.lit(r"\b[A-Z]{2,}\b"), 0)
     cands = marked.select(
@@ -146,12 +146,8 @@ def candidate_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(""),
         ).alias("lead_bigram"),
     )
-    cand_arr = F.array(
-        "quoted", "parenthetical", "abbrev", "poss_noun", "tok1", "lead_bigram"
-    )
-    nonempty = F.array_distinct(
-        F.filter(cand_arr, lambda x: x.isNotNull() & (x != F.lit("")))
-    )
+    cand_arr = "array(quoted, parenthetical, abbrev, poss_noun, tok1, lead_bigram)"
+    nonempty = f"array_distinct(filter({cand_arr}, x_ -> x_ IS NOT NULL AND x_ != ''))"
     pruned = cands.select(
         "doc_id",
         "mt",
@@ -159,8 +155,8 @@ def candidate_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "parenthetical",
         "abbrev",
         "poss_noun",
-        longest_match_filter(cand_arr).alias("kept_list"),
-        F.size(nonempty).alias("n_cand"),
+        F.expr(ss_longest_match_filter(cand_arr)).alias("kept_list"),
+        F.expr(f"size({nonempty}) AS n_cand"),
     )
     return pruned.select(
         "doc_id",
@@ -338,8 +334,8 @@ def train_check_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def product_score_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select("lang", F.explode(tokenize("text")).alias("word"))
-        .filter(~F.array_contains(stopword_array(), F.col("word")))
+        docs.selectExpr("lang", f"explode({ss_tokenize('text')}) AS word")
+        .filter(f"NOT array_contains({ss_stopword_array()}, word)")
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -409,17 +405,17 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_pos_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from algorithmproject_spark_spark.functions.pos import (
-        lemmas,
-        pos_pattern_bigrams,
-        pos_tags,
+        ss_lemmas,
+        ss_pos_pattern_bigrams,
+        ss_pos_tags,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    lemmed = docs.select(
-        "doc_id", lemmas(tokenize("text")).alias("lem")
-    ).withColumn("tag", pos_tags(F.col("lem")))
-    grams = lemmed.select(
-        F.explode(pos_pattern_bigrams(F.col("lem"), F.col("tag"))).alias("gram")
+    lemmed = docs.selectExpr(
+        "doc_id", f"{ss_lemmas(ss_tokenize('text'))} AS lem"
+    ).withColumn("tag", F.expr(ss_pos_tags("lem")))
+    grams = lemmed.selectExpr(
+        f"explode({ss_pos_pattern_bigrams('lem', 'tag')}) AS gram"
     )
     return (
         grams.groupBy("gram")
@@ -467,19 +463,17 @@ _install_pos_oracle()
 )
 def doc_pos_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from algorithmproject_spark_spark.functions.pos import (
-        lemmas,
-        pos_pattern_unigrams,
-        pos_tags,
+        ss_lemmas,
+        ss_pos_pattern_unigrams,
+        ss_pos_tags,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    lemmed = docs.select(
-        "doc_id", lemmas(tokenize("text")).alias("lem")
-    ).withColumn("tag", pos_tags(F.col("lem")))
-    unis = lemmed.select(
-        F.explode(
-            pos_pattern_unigrams(F.col("lem"), F.col("tag"))
-        ).alias("lem")
+    lemmed = docs.selectExpr(
+        "doc_id", f"{ss_lemmas(ss_tokenize('text'))} AS lem"
+    ).withColumn("tag", F.expr(ss_pos_tags("lem")))
+    unis = lemmed.selectExpr(
+        f"explode({ss_pos_pattern_unigrams('lem', 'tag')}) AS lem"
     )
     return (
         unis.groupBy("lem")

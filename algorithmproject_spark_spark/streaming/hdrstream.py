@@ -49,7 +49,7 @@ HDR_OUTPUT_SCHEMA = StructType(
 
 
 def py_hdr_bucket(v: int) -> int:
-    """Python twin of queries.hdr.hdr_bucket / sql_hdr_bucket —
+    """Python twin of queries.hdr.ss_hdr_bucket / sql_hdr_bucket —
     int.bit_length() IS floor(log2)+1, the integer-exact form the
     engines reach via base-2 string length."""
     if v < 0:

@@ -14,10 +14,12 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import ss_micros, ss_scaled_long
 from algorithmproject_spark_spark.functions.text import (
-    clean_text,
-    ngrams,
-    stopword_count,
-    tokenize,
+    ss_clean_text,
+    ss_lit,
+    ss_longest_match_filter,
+    ss_ngrams,
+    ss_stopword_array,
+    ss_tokenize,
 )
 from algorithmproject_spark_spark.functions.vectors import (
     ss_cosine,
@@ -58,10 +60,11 @@ def test_minhash_is_min_of_affine(spark):
 
 
 def test_ngrams_basic_and_short(spark):
-    toks = F.lit(["a", "b", "c", "d"])
-    assert _one(spark, ngrams(toks, 2)) == ["a b", "b c", "c d"]
-    assert _one(spark, ngrams(toks, 4)) == ["a b c d"]
-    assert _one(spark, ngrams(F.lit(["a"]), 3)) == []  # not a descending sequence()
+    toks = "array('a', 'b', 'c', 'd')"
+    assert _one(spark, F.expr(ss_ngrams(toks, 2))) == ["a b", "b c", "c d"]
+    assert _one(spark, F.expr(ss_ngrams(toks, 4))) == ["a b c d"]
+    # not a descending sequence()
+    assert _one(spark, F.expr(ss_ngrams("array('a')", 3))) == []
 
 
 def test_scaled_long_exact_cents(spark):
@@ -72,11 +75,14 @@ def test_scaled_long_exact_cents(spark):
 
 def test_clean_text(spark):
     raw = "  Hello\tWORLD https://x.io/a b@c.de  done  "
-    assert _one(spark, clean_text(F.lit(raw))) == "hello world done"
+    assert _one(spark, F.expr(ss_clean_text(ss_lit(raw)))) == "hello world done"
 
 
 def test_tokenize_and_stopwords(spark):
-    assert _one(spark, stopword_count(tokenize(F.lit("the cat the dog")))) == 2
+    # stopwords counted with multiplicity (filter, not array_intersect)
+    toks = ss_tokenize("'the cat the dog'")
+    n_sw = f"size(filter({toks}, t -> array_contains({ss_stopword_array()}, t)))"
+    assert _one(spark, F.expr(n_sw)) == 2
 
 
 def test_vector_ops(spark):
@@ -87,33 +93,29 @@ def test_vector_ops(spark):
     assert abs(got - 2.0 / (3.0 * 2.0)) < 1e-12
 
 
-def test_longest_match_filter_drops_subsumed(spark):
-    from algorithmproject_spark_spark.functions.text import longest_match_filter
+def _lmf(spark, words):
+    arr = "array(" + ", ".join(ss_lit(w) for w in words) + ")"
+    return _one(spark, F.expr(ss_longest_match_filter(arr)))
 
-    arr = F.array(*[F.lit(w) for w in [
+
+def test_longest_match_filter_drops_subsumed(spark):
+    got = sorted(_lmf(spark, [
         "pump", "pump it up", "it", "marvel", "marvel studios", "", "studios x",
-    ]])
-    got = sorted(_one(spark, longest_match_filter(arr)))
+    ]))
     # "pump"/"it" subsumed by "pump it up"; "marvel" by "marvel studios";
     # "studios x" survives — "studios" alone appears only space-bounded.
     assert got == ["marvel studios", "pump it up", "studios x"]
 
 
 def test_longest_match_filter_partial_word_not_subsumed(spark):
-    from algorithmproject_spark_spark.functions.text import longest_match_filter
-
     # interior words ARE space-bounded ("art" in "...the art form") and
     # get pruned; a partial word ("artful") is not and survives.
-    arr = F.array(F.lit("art"), F.lit("state of the art form"), F.lit("artful"))
-    got = sorted(_one(spark, longest_match_filter(arr)))
+    got = sorted(_lmf(spark, ["art", "state of the art form", "artful"]))
     assert got == ["artful", "state of the art form"]
 
 
 def test_longest_match_filter_duplicates_kept_once(spark):
-    from algorithmproject_spark_spark.functions.text import longest_match_filter
-
-    arr = F.array(F.lit("solo"), F.lit("solo"))
-    assert _one(spark, longest_match_filter(arr)) == ["solo"]
+    assert _lmf(spark, ["solo", "solo"]) == ["solo"]
 
 
 def test_hash_mod_overflow_safe_and_cross_engine(spark):

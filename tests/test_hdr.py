@@ -12,8 +12,8 @@ def test_hdr_bucket_rep_error_bound(spark):
     sub-SUB range, and large values."""
     from algorithmproject_spark_spark.queries.hdr import (
         SUB,
-        hdr_bucket,
         hdr_rep,
+        ss_hdr_bucket,
     )
 
     vals = (
@@ -23,7 +23,7 @@ def test_hdr_bucket_rep_error_bound(spark):
     )
     df = spark.createDataFrame([(v,) for v in vals], "v long")
     rows = (
-        df.select("v", hdr_bucket(F.col("v")).alias("idx"))
+        df.select("v", F.expr(ss_hdr_bucket("v")).alias("idx"))
         .select("v", "idx", hdr_rep("idx").alias("rep"))
         .collect()
     )

@@ -13,10 +13,10 @@ from pyspark.sql import Row, functions as F
 from algorithmproject_spark_spark.queries import REGISTRY
 from algorithmproject_spark_spark.queries.hdr import (
     PCTS,
-    hdr_bucket,
     hdr_rep,
     sql_hdr_bucket,
     sql_hdr_rep,
+    ss_hdr_bucket,
 )
 from algorithmproject_spark_spark.sources.catalog import load_table
 from algorithmproject_spark_spark.streaming.hdrstream import (
@@ -35,7 +35,7 @@ BATTERY = [0, 1, 7, 15, 16, 17, 31, 32, 33, 63, 64, 255, 256, 1000,
 def test_bucket_and_rep_three_engine_battery(spark):
     df = spark.createDataFrame([Row(v=v) for v in BATTERY])
     got = df.select(
-        "v", hdr_bucket(F.col("v")).alias("b")
+        "v", F.expr(ss_hdr_bucket("v")).alias("b")
     ).withColumn("r", hdr_rep("b")).collect()
     con = duckdb.connect()
     for row in got:

@@ -3,10 +3,7 @@
 
 from __future__ import annotations
 
-import math
-
 from algorithmproject_spark_spark.ml.rake import rake_phrases, rake_scores
-from algorithmproject_spark_spark.ml.textrank import textrank_scores
 
 SW = frozenset({"of", "the", "a", "and", "to", "in", "is"})
 
@@ -39,32 +36,6 @@ def test_rake_empty_and_all_stopwords():
     assert rake_scores("the of and", SW) == []
 
 
-def test_textrank_symmetric_pair():
-    # two words, one symmetric edge → equal ranks summing to 1
-    scores = textrank_scores(["x", "y"], frozenset(), window=2, iterations=20)
-    assert scores["x"] == scores["y"]
-    assert math.isclose(scores["x"] + scores["y"], 1.0, rel_tol=1e-9)
-
-
-def test_textrank_hub_outranks_leaf():
-    # star graph: center co-occurs with every leaf → highest rank
-    toks = ["hub", "l1", "hub", "l2", "hub", "l3"]
-    scores = textrank_scores(toks, frozenset(), window=1, iterations=30)
-    assert max(scores, key=scores.get) == "hub"
-
-
-def test_textrank_deterministic():
-    toks = "spark flink spark beam trino flink".split()
-    a = textrank_scores(toks, frozenset(), iterations=20)
-    b = textrank_scores(toks, frozenset(), iterations=20)
-    assert a == b  # bit-identical across runs (fixed fold order)
-
-
-def test_textrank_stopwords_excluded():
-    scores = textrank_scores(["the", "spark", "of", "flink"], SW)
-    assert set(scores) == {"spark", "flink"}
-
-
 def test_textrank_exact_symmetric_pair():
     from algorithmproject_spark_spark.ml.textrank import (
         TR_SCALE,
@@ -75,6 +46,9 @@ def test_textrank_exact_symmetric_pair():
     # symmetric 2-node graph: ranks stay equal at the fixed point
     assert scores["x"] == scores["y"]
     assert 0 < scores["x"] <= TR_SCALE
+    # stopwords never enter the graph
+    scores = textrank_scores_exact(["the", "spark", "of", "flink"], SW)
+    assert set(scores) == {"spark", "flink"}
 
 
 def test_textrank_exact_hub_and_isolated():

@@ -8,12 +8,11 @@ from pyspark.sql import functions as F
 from algorithmproject_spark_spark.functions.pos import (
     _rule_lemma,
     _rule_tag,
-    lemma_pos_map_in_pandas,
-    lemmas,
-    pos_pattern_bigrams,
-    pos_tags,
+    ss_lemmas,
+    ss_pos_pattern_bigrams,
+    ss_pos_tags,
 )
-from algorithmproject_spark_spark.functions.text import tokenize
+from algorithmproject_spark_spark.functions.text import ss_tokenize
 from algorithmproject_spark_spark.operators.core import (
     zip_with_global_index,
     zip_with_index,
@@ -39,37 +38,12 @@ def test_rule_tag_closed_form():
     assert _rule_tag("market") == "NN"
 
 
-def test_catalyst_and_pandas_paths_agree(spark):
-    df = spark.createDataFrame(
-        [
-            ("1", "Famous markets painted quickly the economic stories"),
-            ("2", "class bus this"),
-        ],
-        ["doc_id", "text"],
-    )
-    cat = (
-        df.select(
-            "doc_id",
-            lemmas(tokenize("text")).alias("lemmas"),
-        )
-        .withColumn("tags", pos_tags(F.col("lemmas")))
-        .collect()
-    )
-    arrow = lemma_pos_map_in_pandas(df).collect()
-    cat_m = {r.doc_id: (r.lemmas, r.tags) for r in cat}
-    arrow_m = {r.doc_id: (r.lemmas, r.tags) for r in arrow}
-    assert cat_m == arrow_m
-
-
 def test_pos_pattern_bigrams_admission(spark):
     # famous(JJ) market(NN) grew(NN->? 'grew' -> NN) ; "famous market" JJ+NN kept
     df = spark.createDataFrame([("famous market index",)], ["text"])
+    lem = ss_lemmas(ss_tokenize("text"))
     out = df.select(
-        F.explode(
-            pos_pattern_bigrams(
-                lemmas(tokenize("text")), pos_tags(lemmas(tokenize("text")))
-            )
-        ).alias("g")
+        F.explode(F.expr(ss_pos_pattern_bigrams(lem, ss_pos_tags(lem)))).alias("g")
     ).collect()
     grams = [r.g for r in out]
     assert "famous market" in grams  # JJ+NN

@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 from algorithmproject_spark_spark.functions.pos import (
     ALLOWED_POS_PAIRS,
     ALLOWED_POS_UNI,
-    pos_pattern_bigrams,
+    _rule_lemma,
+    _rule_tag,
+    ss_lemmas,
+    ss_pos_pattern_bigrams,
+    ss_pos_pattern_unigrams,
+    ss_pos_tags,
 )
 
 # The full Penn Treebank tagset (public; Marcus et al. 1993) plus the
@@ -81,12 +86,9 @@ def test_nn_vb_pair_now_admitted(spark):
          ("pretty quickly", )],
         ["text"],
     )
-    toks = F.split(F.col("text"), " ")
-    from algorithmproject_spark_spark.functions.pos import lemmas, pos_tags
-
-    lem = lemmas(toks)
+    lem = ss_lemmas("split(text, ' ')")
     out = df.select(
-        pos_pattern_bigrams(lem, pos_tags(lem)).alias("grams")
+        F.expr(ss_pos_pattern_bigrams(lem, ss_pos_tags(lem))).alias("grams")
     ).collect()
     got = [r.grams for r in out]
     assert got[0] == ["cloud computing"]  # NN+VB (computing tags VB)
@@ -100,10 +102,6 @@ def test_unigram_list_has_runtime_consumer(spark):
     parity-tested — the registered unigram query's admission equals the
     reference predicate over the full tagset, and VB lemmas (admitted
     by the bigram list) are absent from its output by construction."""
-    from algorithmproject_spark_spark.functions.pos import (
-        pos_pattern_unigrams,
-    )
-
     # engine prefix test == reference contains() over the full tagset
     for tag in PENN:
         assert (tag[:2] in ALLOWED_POS_UNI) == _ref_uni_accepts(tag), tag
@@ -114,69 +112,28 @@ def test_unigram_list_has_runtime_consumer(spark):
         "lem array<string>, tag array<string>",
     )
     out = df.select(
-        pos_pattern_unigrams(F.col("lem"), F.col("tag")).alias("u")
+        F.expr(ss_pos_pattern_unigrams("lem", "tag")).alias("u")
     ).collect()[0].u
     assert out == ["house", "beautiful"]  # NN + JJ kept, VB/XX dropped
 
 
-def test_spacy_arrow_path_matches_golden_fixture():
-    """VERDICT r11 #7: the opt-in spaCy path is untestable in-image —
-    this parity test runs against the committed offline golden fixture
-    (tests/golden/spacy_pos_fixture.json) whenever spaCy + model are
-    importable, and skips cleanly when not. Drives the shared per-row
-    kernel IN-PROCESS (not through a Spark worker, whose daemon may
-    predate the opt-in env flag) — the Arrow path calls the identical
-    _lemma_tag_text, so kernel parity is path parity."""
-    import json
-    import pathlib
-
-    import pytest
-
-    try:  # pragma: no cover - spaCy absent from this image
-        import spacy
-
-        nlp = spacy.load("en_core_web_sm")
-    except Exception:
-        pytest.skip("spaCy / en_core_web_sm not installed in this image")
-
-    from algorithmproject_spark_spark.functions.pos import _lemma_tag_text
-
-    fixture = json.loads(
-        (pathlib.Path(__file__).parent / "golden" / "spacy_pos_fixture.json")
-        .read_text()
-    )
-    for k, s in enumerate(fixture["sentences"]):
-        lems, tags = _lemma_tag_text(s["text"], "spacy", nlp)
-        assert lems == s["lemmas"], (k, lems)
-        assert tags == s["tags"], (k, tags)
-
-
 def test_rule_path_kernel_matches_catalyst_twin(spark):
-    """The rule branch of the shared kernel equals the Catalyst
-    lemma+tag expressions on the fixture sentences — so whichever
-    branch _get_nlp resolves, the Arrow path stays aligned with the
-    oracle-checked column path."""
-    import json
-    import pathlib
-
-    from algorithmproject_spark_spark.functions.pos import (
-        _lemma_tag_text,
-        lemmas,
-        pos_tags,
-    )
-
-    fixture = json.loads(
-        (pathlib.Path(__file__).parent / "golden" / "spacy_pos_fixture.json")
-        .read_text()
-    )
-    texts = [s["text"] for s in fixture["sentences"]]
+    """The Python rule reference (_rule_lemma/_rule_tag) equals the
+    Catalyst lemma+tag kernels on every token of the sample sentences
+    (plural/possessive/-ies lemmas, every tag class)."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "cats are running quickly",
+        "Famous markets painted quickly the economic stories",
+        "class bus this market's",
+    ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     rows = (
-        df.select(lemmas(F.split(F.col("text"), " ")).alias("lem"))
-        .withColumn("tag", pos_tags(F.col("lem")))
+        df.select(F.expr(ss_lemmas("split(text, ' ')")).alias("lem"))
+        .withColumn("tag", F.expr(ss_pos_tags("lem")))
         .collect()
     )
     for t, r in zip(texts, rows):
-        lems, tags = _lemma_tag_text(t, "rules", None)
+        lems = [_rule_lemma(w) for w in t.split(" ")]
         assert lems == list(r.lem)
-        assert tags == list(r.tag)
+        assert [_rule_tag(lem) for lem in lems] == list(r.tag)

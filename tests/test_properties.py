@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from algorithmproject_spark_spark.functions.text import ngrams
+from algorithmproject_spark_spark.functions.text import ss_ngrams
 from algorithmproject_spark_spark.operators.core import zip_with_global_index
 from algorithmproject_spark_spark.operators.skew import salted_collect_sorted_list
 
@@ -45,7 +45,7 @@ def test_ngrams_match_python_model(spark, docs):
     for n in (2, 3):
         got = {
             r.i: r.g
-            for r in df.select("i", ngrams(F.col("toks"), n).alias("g")).collect()
+            for r in df.select("i", F.expr(ss_ngrams("toks", n)).alias("g")).collect()
         }
         assert got == {i: model(d, n) for i, d in enumerate(docs)}
 
@@ -112,7 +112,10 @@ def test_jaccard_threshold_monotonicity(spark):
 )
 @SLOW
 def test_longest_match_filter_matches_python_model(spark, phrases):
-    from algorithmproject_spark_spark.functions.text import longest_match_filter
+    from algorithmproject_spark_spark.functions.text import (
+        ss_lit,
+        ss_longest_match_filter,
+    )
 
     def model(cands):
         a = list(dict.fromkeys(c for c in cands if c))
@@ -121,8 +124,10 @@ def test_longest_match_filter_matches_python_model(spark, phrases):
             if not any(o != w and f" {w} " in f" {o} " for o in a)
         ]
 
-    arr = F.array(*[F.lit(p) for p in phrases]).cast("array<string>")
-    got = spark.range(1).select(longest_match_filter(arr).alias("k")).first()["k"]
+    arr = "CAST(array(" + ", ".join(ss_lit(p) for p in phrases) + ") AS array<string>)"
+    got = spark.range(1).select(
+        F.expr(ss_longest_match_filter(arr)).alias("k")
+    ).first()["k"]
     assert got == model(phrases)
 
 
@@ -578,13 +583,13 @@ def test_ratio_e6_equals_unbounded_integer_math(spark, pairs):
 @given(xs=st.lists(st.integers(0, 0xFFFF), min_size=1, max_size=30))
 @SLOW
 def test_spread_bits_is_injective_and_even_positioned(spark, xs):
-    """spread_bits16: bit i of x lands at bit 2i, nothing at odd
+    """ss_spread_bits16: bit i of x lands at bit 2i, nothing at odd
     positions, and the mapping is injective."""
-    from algorithmproject_spark_spark.operators.zorder import spread_bits16
+    from algorithmproject_spark_spark.operators.zorder import ss_spread_bits16
 
     df = spark.createDataFrame([(x,) for x in set(xs)], ["x"])
     out = {r.x: r.s for r in
-           df.select("x", spread_bits16(F.col("x")).alias("s")).collect()}
+           df.select("x", F.expr(ss_spread_bits16("x")).alias("s")).collect()}
     for x, s in out.items():
         assert s == sum(((x >> i) & 1) << (2 * i) for i in range(16))
         assert s & 0xAAAAAAAA == 0  # odd bit positions empty
