@@ -234,9 +234,7 @@ def ann_ivf_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells(spark, sf_dir).groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
 
 
-@register(
-    "ann_ivf_topk",
-    oracle=f"""
+ANN_IVF_TOPK_SQL = f"""
     WITH b AS ({_SQL_CELLS.format(c=sql_cell('embedding'))}),
     q AS (
         SELECT vec_id AS q_id, embedding AS q_emb,
@@ -254,7 +252,12 @@ def ann_ivf_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY q_id ORDER BY cosine_e6 DESC, neighbor_id
         ) AS rk FROM scored
     ) WHERE rk <= {TOP_K}
-    """,
+    """
+
+
+@register(
+    "ann_ivf_topk",
+    oracle=ANN_IVF_TOPK_SQL,
     doc="IVF ANN: probe NPROBE nearest cells, rank candidates by exact "
     "cosine — equi-join on cell key, linear + AQE-skew-safe",
 )
@@ -788,7 +791,29 @@ EXPORTED_CENTROIDS: tuple[tuple[float, ...], ...] = (
 
 @register(
     "ann_ivf_export_centroids_topk",
-    oracle=None,  # installed below — the string embeds EXPORTED_CENTROIDS
+    oracle=f"""
+    WITH b AS (
+        SELECT vec_id, embedding,
+               {sql_cell_from('embedding', EXPORTED_CENTROIDS)} AS cell
+        FROM embeddings
+    ),
+    q AS (
+        SELECT vec_id AS q_id, embedding AS q_emb,
+               unnest({sql_probe_cells_from('embedding', EXPORTED_CENTROIDS)}) AS cell
+        FROM embeddings WHERE vec_id < {N_QUERIES}
+    ),
+    scored AS (
+        SELECT q.q_id, c.vec_id AS neighbor_id,
+               {sql_micros(sql_cosine("q.q_emb", "c.embedding"))} AS cosine_e6
+        FROM q JOIN b c USING (cell)
+        WHERE c.vec_id <> q.q_id
+    )
+    SELECT q_id, neighbor_id, cosine_e6, rk FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY q_id ORDER BY cosine_e6 DESC, neighbor_id
+        ) AS rk FROM scored
+    ) WHERE rk <= {TOP_K}
+    """,
     doc="IVF ANN over EXPORTED learned centroids (one seeded ml-KMeans "
     "fit, frozen as literals): probe NPROBE nearest cells, rank by "
     "exact cosine — fully oracle-checked, the production shape where "
@@ -829,39 +854,3 @@ def ann_ivf_export_centroids_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(f"rk <= {TOP_K}")
         .select("q_id", "neighbor_id", "cosine_e6", "rk")
     )
-
-
-def _install_export_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
-    WITH b AS (
-        SELECT vec_id, embedding,
-               {sql_cell_from('embedding', EXPORTED_CENTROIDS)} AS cell
-        FROM embeddings
-    ),
-    q AS (
-        SELECT vec_id AS q_id, embedding AS q_emb,
-               unnest({sql_probe_cells_from('embedding', EXPORTED_CENTROIDS)}) AS cell
-        FROM embeddings WHERE vec_id < {N_QUERIES}
-    ),
-    scored AS (
-        SELECT q.q_id, c.vec_id AS neighbor_id,
-               {sql_micros(sql_cosine("q.q_emb", "c.embedding"))} AS cosine_e6
-        FROM q JOIN b c USING (cell)
-        WHERE c.vec_id <> q.q_id
-    )
-    SELECT q_id, neighbor_id, cosine_e6, rk FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY cosine_e6 DESC, neighbor_id
-        ) AS rk FROM scored
-    ) WHERE rk <= {TOP_K}
-    """
-    REGISTRY["ann_ivf_export_centroids_topk"] = replace(
-        REGISTRY["ann_ivf_export_centroids_topk"], oracle=oracle
-    )
-
-
-_install_export_oracle()

@@ -106,9 +106,7 @@ def ann_lsh_bucket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bucketed(spark, sf_dir).groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
 
 
-@register(
-    "ann_lsh_topk",
-    oracle=f"""
+ANN_LSH_TOPK_SQL = f"""
     WITH b AS ({_SQL_BUCKETED.format(b=sql_bucket('embedding'))}),
     q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM b WHERE vec_id < {N_QUERIES}),
     scored AS (
@@ -122,7 +120,12 @@ def ann_lsh_bucket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY q_id ORDER BY cosine_e6 DESC, neighbor_id
         ) AS rk FROM scored
     ) WHERE rk <= {TOP_K}
-    """,
+    """
+
+
+@register(
+    "ann_lsh_topk",
+    oracle=ANN_LSH_TOPK_SQL,
     doc="ANN scale path: top-k cosine within the query's LSH bucket "
     "(equi-join on bucket key — linear, AQE-skew-safe)",
 )

@@ -76,54 +76,3 @@ def sql_bfs_levels(edges_cte: str, max_level: int = MAX_LEVEL) -> str:
         SELECT v, CAST(min(lvl) AS BIGINT) AS level
         FROM bfs_walk GROUP BY v
     )"""
-
-
-def _register() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.registry import REGISTRY, register
-
-    @register(
-        "dedup_bfs_levels",
-        oracle=None,  # installed below (needs the dup-pairs CTE)
-        doc=(
-            "BFS hop-level census from the minimum vertex of the "
-            "verified near-dup graph (4 frontier rounds): how far "
-            "does transitive duplication reach from the anchor doc"
-        ),
-        plan=("scalar_cross",),  # min-vertex source is a 1-row scalar
-    )
-    def dedup_bfs_levels(spark, sf_dir):
-        from algorithmproject_spark_spark.queries.dedup import (
-            jaccard_pairs_above,
-        )
-
-        edges = jaccard_pairs_above(spark, sf_dir).selectExpr(
-            "doc_a AS a", "doc_b AS b"
-        )
-        lv = bfs_levels(edges)
-        return (
-            lv.groupBy("level")
-            .agg(
-                F.expr("count(1) AS n_nodes"),
-                F.expr("min(v) AS min_node"),
-            )
-            .selectExpr("CAST(level AS BIGINT) AS level", "n_nodes", "min_node")
-        )
-
-    from algorithmproject_spark_spark.queries.dedup import sql_dup_pairs_cte
-
-    oracle = f"""
-    WITH RECURSIVE {sql_dup_pairs_cte()},
-    bfs_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
-    {sql_bfs_levels('bfs_edges')}
-    SELECT level, CAST(count(*) AS BIGINT) AS n_nodes,
-           CAST(min(v) AS BIGINT) AS min_node
-    FROM bfs_out GROUP BY level
-    """
-    REGISTRY["dedup_bfs_levels"] = replace(
-        REGISTRY["dedup_bfs_levels"], oracle=oracle
-    )
-
-
-_register()

@@ -155,28 +155,27 @@ def bloom_prefilter(
     )
 
 
-def _register() -> None:
-    # small side: BUILDING-segment customers with high balance (~4% of
-    # customers) — the selective dimension a runtime filter exists for
-    _SMALL_PRED = "c_mktsegment = 'BUILDING' AND c_acctbal > 9000.0"
+# small side: BUILDING-segment customers with high balance (~4% of
+# customers) — the selective dimension a runtime filter exists for
+_SMALL_PRED = "c_mktsegment = 'BUILDING' AND c_acctbal > 9000.0"
 
-    pos_sql = sql_positions("o_custkey", M_BITS, K_HASHES)
-    n_words = (M_BITS + WORD_BITS - 1) // WORD_BITS
-    probe = " AND ".join(
-        f"(COALESCE((SELECT mask FROM bl_words WHERE w = ({p}) // {WORD_BITS}),"
-        f" CAST(0 AS BIGINT)) & (CAST(1 AS BIGINT) << (({p}) % {WORD_BITS}))) <> 0"
-        for p in pos_sql
-    )
+_POS_SQL = sql_positions("o_custkey", M_BITS, K_HASHES)
+_PROBE = " AND ".join(
+    f"(COALESCE((SELECT mask FROM bl_words WHERE w = ({p}) // {WORD_BITS}),"
+    f" CAST(0 AS BIGINT)) & (CAST(1 AS BIGINT) << (({p}) % {WORD_BITS}))) <> 0"
+    for p in _POS_SQL
+)
 
-    @register(
-        "bloom_prefilter_join_stats",
-        plan=("scalar_cross",),
-        oracle=f"""
+
+@register(
+    "bloom_prefilter_join_stats",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH bl_small AS (
             SELECT DISTINCT c_custkey FROM customer WHERE {_SMALL_PRED}
         ),
         bl_pos AS (
-            {" UNION ALL ".join(f"SELECT ({p.replace('o_custkey', 'c_custkey')}) AS p FROM bl_small" for p in pos_sql)}
+            {" UNION ALL ".join(f"SELECT ({p.replace('o_custkey', 'c_custkey')}) AS p FROM bl_small" for p in _POS_SQL)}
         ),
         bl_words AS (
             SELECT p // {WORD_BITS} AS w,
@@ -184,7 +183,7 @@ def _register() -> None:
             FROM bl_pos GROUP BY p // {WORD_BITS}
         ),
         bl_pass AS (
-            SELECT o.o_orderkey, o.o_custkey FROM orders o WHERE {probe}
+            SELECT o.o_orderkey, o.o_custkey FROM orders o WHERE {_PROBE}
         ),
         bl_true AS (
             SELECT p.o_orderkey FROM bl_pass p
@@ -197,47 +196,44 @@ def _register() -> None:
                (SELECT CAST(COUNT(*) AS BIGINT) FROM bl_pass)
                  - (SELECT CAST(COUNT(*) AS BIGINT) FROM bl_true) AS n_false_pos
         """,
-        doc="Runtime-filter accounting: portable-hash Bloom bitmap "
-        f"({M_BITS} bits, {K_HASHES} hashes, one bit_or agg + 1-row "
-        "broadcast) built over high-balance BUILDING customers, probed "
-        "map-side by every order; rows = big-side size, key count, "
-        "bloom survivors, true semi-join matches, and the exact "
-        "false-positive count the downstream join absorbs — proves "
-        "the prefilter never loses a match AND measures what it saves",
+    doc="Runtime-filter accounting: portable-hash Bloom bitmap "
+    f"({M_BITS} bits, {K_HASHES} hashes, one bit_or agg + 1-row "
+    "broadcast) built over high-balance BUILDING customers, probed "
+    "map-side by every order; rows = big-side size, key count, "
+    "bloom survivors, true semi-join matches, and the exact "
+    "false-positive count the downstream join absorbs — proves "
+    "the prefilter never loses a match AND measures what it saves",
+)
+def bloom_prefilter_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    small = (
+        cust.filter(
+            "c_mktsegment = 'BUILDING' AND c_acctbal > 9000.0D"
+        )
+        .select("c_custkey")
+        .distinct()
     )
-    def bloom_prefilter_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cust = load_table(spark, sf_dir, "customer")
-        orders = load_table(spark, sf_dir, "orders")
-        small = (
-            cust.filter(
-                "c_mktsegment = 'BUILDING' AND c_acctbal > 9000.0D"
-            )
-            .select("c_custkey")
-            .distinct()
+    passed = tracked_cache(
+        bloom_prefilter(orders, small, "o_custkey", "c_custkey")
+    )
+    true_m = passed.join(
+        F.broadcast(small), passed["o_custkey"] == small["c_custkey"], "left_semi"
+    )
+    return (
+        orders.agg(F.expr("count(1) AS n_big"))
+        .crossJoin(F.broadcast(small.agg(F.expr("count(1) AS n_keys"))))
+        .crossJoin(
+            F.broadcast(passed.agg(F.expr("count(1) AS n_pass_bloom")))
         )
-        passed = tracked_cache(
-            bloom_prefilter(orders, small, "o_custkey", "c_custkey")
+        .crossJoin(
+            F.broadcast(true_m.agg(F.expr("count(1) AS n_true_match")))
         )
-        true_m = passed.join(
-            F.broadcast(small), passed["o_custkey"] == small["c_custkey"], "left_semi"
+        .selectExpr(
+            "n_big",
+            "n_keys",
+            "n_pass_bloom",
+            "n_true_match",
+            "n_pass_bloom - n_true_match AS n_false_pos",
         )
-        return (
-            orders.agg(F.expr("count(1) AS n_big"))
-            .crossJoin(F.broadcast(small.agg(F.expr("count(1) AS n_keys"))))
-            .crossJoin(
-                F.broadcast(passed.agg(F.expr("count(1) AS n_pass_bloom")))
-            )
-            .crossJoin(
-                F.broadcast(true_m.agg(F.expr("count(1) AS n_true_match")))
-            )
-            .selectExpr(
-                "n_big",
-                "n_keys",
-                "n_pass_bloom",
-                "n_true_match",
-                "n_pass_bloom - n_true_match AS n_false_pos",
-            )
-        )
-
-
-_register()
+    )

@@ -25,7 +25,10 @@ each side is ONE aggregation pass with map-side partials.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from algorithmproject_spark_spark.registry import register
+from algorithmproject_spark_spark.sources.catalog import load_table
 
 SEP = "\x1f"  # ASCII unit separator
 
@@ -131,36 +134,31 @@ def sql_bucket_checksums(
     """
 
 
-def _register() -> None:
-    from algorithmproject_spark_spark.registry import register
-    from algorithmproject_spark_spark.sources.catalog import load_table
+_ORDERS_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
 
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
 
-    @register(
-        "table_checksum_orders",
-        oracle=sql_table_checksum("orders", cols),
-        doc="Cross-engine migration-validation checksum of the orders "
-        "table: order-independent bit_xor of 60-bit md5 prefixes + "
-        "row/distinct counts + min/max hash witnesses, one "
-        "aggregation pass per side — the operator form of this "
-        "repo's own oracle gate",
+@register(
+    "table_checksum_orders",
+    oracle=sql_table_checksum("orders", _ORDERS_COLS),
+    doc="Cross-engine migration-validation checksum of the orders "
+    "table: order-independent bit_xor of 60-bit md5 prefixes + "
+    "row/distinct counts + min/max hash witnesses, one "
+    "aggregation pass per side — the operator form of this "
+    "repo's own oracle gate",
+)
+def table_checksum_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table_checksum(load_table(spark, sf_dir, "orders"), _ORDERS_COLS)
+
+
+@register(
+    "orders_partition_merkle",
+    oracle=sql_bucket_checksums("orders", _ORDERS_COLS, "o_orderkey"),
+    doc="Merkle-style per-bucket reconciliation checksums of "
+    "orders (key-mod buckets, xor'd 60-bit md5 prefixes): when "
+    "global checksums diverge, one 64-row compare locates the "
+    "differing key range — the anti-entropy repair primitive",
+)
+def orders_partition_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return bucket_checksums(
+        load_table(spark, sf_dir, "orders"), _ORDERS_COLS, "o_orderkey"
     )
-    def table_checksum_orders(spark, sf_dir):
-        return table_checksum(load_table(spark, sf_dir, "orders"), cols)
-
-    @register(
-        "orders_partition_merkle",
-        oracle=sql_bucket_checksums("orders", cols, "o_orderkey"),
-        doc="Merkle-style per-bucket reconciliation checksums of "
-        "orders (key-mod buckets, xor'd 60-bit md5 prefixes): when "
-        "global checksums diverge, one 64-row compare locates the "
-        "differing key range — the anti-entropy repair primitive",
-    )
-    def orders_partition_merkle(spark, sf_dir):
-        return bucket_checksums(
-            load_table(spark, sf_dir, "orders"), cols, "o_orderkey"
-        )
-
-
-_register()

@@ -18,11 +18,13 @@ Two variants:
 
 - :func:`connected_components_min_label` — FIXED k rounds, exact for
   components whose min-label eccentricity ≤ k. This is the
-  oracle-checkable form (DuckDB unrolls one CTE per round); the driver
-  query pins it.
-- :func:`connected_components` — the production default: neighbor-min
-  PLUS pointer jumping (lbl ← lbl[lbl]) each round, looping until a
-  fixed point. Jumping halves the label-tree depth per round, so
+  oracle-checkable form (DuckDB unrolls one CTE per round); every
+  registered query that needs components uses it.
+- :func:`connected_components` — the convergence reference, called by
+  no registered query: ``test_driver_cc_query_is_converged_at_sf001``
+  runs it to prove the fixed-round labels are already at their fixed
+  point on the real pair graph. Neighbor-min PLUS pointer jumping
+  (lbl ← lbl[lbl]) each round, looping until a fixed point. Jumping halves the label-tree depth per round, so
   convergence is O(log diameter) rounds regardless of chain length —
   a diameter-d path needs ~log₂(d) rounds, not d. The per-round
   convergence probe is one count() on the changed-label set — an

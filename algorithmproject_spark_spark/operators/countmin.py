@@ -18,7 +18,7 @@ oracle only; see ``events_distinct_users_hll``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
@@ -34,12 +34,22 @@ CMS_ROWS = ((1, 0), (2654435761, 40503), (2246822519, 604171), (179424673, 97))
 CMS_P = 2_147_483_629  # prime < 2^31: products stay < 2^62 in BIGINT
 
 
-def _bucket(h: Column, a: int, b: int) -> Column:
-    return ((h * F.lit(a) + F.lit(b)) % F.lit(CMS_P)) % F.lit(CMS_W)
+def _ss_bucket(h_expr: str, a: int, b: int) -> str:
+    return f"((({h_expr}) * {a} + {b}) % {CMS_P}) % {CMS_W}"
 
 
 def _sql_bucket(h_expr: str, a: int, b: int) -> str:
     return f"((({h_expr}) * {a} + {b}) % {CMS_P}) % {CMS_W}"
+
+
+def _ss_row_buckets(col: str) -> str:
+    """Spark text: ``array(struct(row, bucket), ...)`` — one cell per
+    hash row for the string column ``col``."""
+    h = ss_char_fold_hash(col)
+    return "array(" + ", ".join(
+        f"struct({i} AS row, {_ss_bucket(h, a, b)} AS bucket)"
+        for i, (a, b) in enumerate(CMS_ROWS)
+    ) + ")"
 
 
 def cms_counters(
@@ -52,18 +62,10 @@ def cms_counters(
     1 — the compacted-distribution form: feeding a pre-aggregated
     (item, count) relation yields the IDENTICAL counter table while the
     d-way explode runs over |vocab| rows, not the corpus."""
-    h = F.expr(ss_char_fold_hash(col))
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("row"), _bucket(h, a, b).alias("bucket")
-            )
-            for i, (a, b) in enumerate(CMS_ROWS)
-        ]
-    )
-    w = F.col(weight) if weight else F.lit(1)
     return (
-        items.select(w.alias("w_"), F.explode(rows).alias("rb"))
+        items.selectExpr(
+            f"{weight or 1} AS w_", f"explode({_ss_row_buckets(col)}) AS rb"
+        )
         .groupBy(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
         .agg(F.sum("w_").cast("long").alias("n"))
     )
@@ -130,15 +132,8 @@ def words_countmin_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters = cms_counters(wc, "word", weight="exact_n")
 
     topw = wc.orderBy(F.desc("exact_n"), F.asc("word")).limit(20)
-    h = F.expr(ss_char_fold_hash("word"))
-    probe_rows = F.array(
-        *[
-            F.struct(F.lit(i).alias("row"), _bucket(h, a, b).alias("bucket"))
-            for i, (a, b) in enumerate(CMS_ROWS)
-        ]
-    )
-    probes = topw.select(
-        "word", "exact_n", F.explode(probe_rows).alias("rb")
+    probes = topw.selectExpr(
+        "word", "exact_n", f"explode({_ss_row_buckets('word')}) AS rb"
     ).select("word", "exact_n", F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
     return (
         probes.join(F.broadcast(counters), ["row", "bucket"])

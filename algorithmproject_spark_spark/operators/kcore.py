@@ -25,7 +25,7 @@ Oracle: DuckDB unrolls the identical rounds as CTEs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from algorithmproject_spark_spark.cacheutil import tracked_lazy_local_checkpoint
 
@@ -105,43 +105,3 @@ def sql_kcore_vertices(
     parts.append(f"""
     kc_out AS ({sql_vertex_degrees(f'kc_e{rounds}')})""")
     return ",".join(parts)
-
-
-def _register() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.registry import REGISTRY, register
-
-    @register(
-        "dedup_kcore_members",
-        oracle=None,  # installed below (needs the dup-pairs CTE)
-        doc="2-core of the verified near-dup graph (4 unrolled peel "
-        "rounds, one degree agg + one edge semi-join each): vertices "
-        "inside mutually-connected duplicate blobs, with in-core "
-        "degree — the dense-cluster certificate tree/chain components "
-        "never trigger",
-    )
-    def dedup_kcore_members(spark, sf_dir):
-        from algorithmproject_spark_spark.queries.dedup import (
-            jaccard_pairs_above,
-        )
-
-        edges = jaccard_pairs_above(spark, sf_dir).selectExpr(
-            "doc_a AS a", "doc_b AS b"
-        )
-        return kcore_vertices(edges).selectExpr("v AS doc_id", "deg")
-
-    from algorithmproject_spark_spark.queries.dedup import sql_dup_pairs_cte
-
-    oracle = f"""
-    WITH {sql_dup_pairs_cte()},
-    kc_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
-    {sql_kcore_vertices('kc_edges')}
-    SELECT v AS doc_id, deg FROM kc_out
-    """
-    REGISTRY["dedup_kcore_members"] = replace(
-        REGISTRY["dedup_kcore_members"], oracle=oracle
-    )
-
-
-_register()

@@ -19,9 +19,11 @@ inverse of cdc_apply, which applies one).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.operators.checksum import row_hash
+from algorithmproject_spark_spark.operators.checksum import row_hash, sql_row_hash_expr
+from algorithmproject_spark_spark.registry import register
+from algorithmproject_spark_spark.sources.catalog import load_table
 
 
 def table_diff(
@@ -57,10 +59,6 @@ def sql_table_diff_summary(
 ) -> str:
     """DuckDB twin: summary of the keyed diff between two relations
     given as SQL subqueries with a single key column ``key``."""
-    from algorithmproject_spark_spark.operators.checksum import (
-        sql_row_hash_expr,
-    )
-
     h = sql_row_hash_expr(val_cols)
     return f"""
     WITH td_a AS (SELECT {key} AS k, {h} AS ha FROM ({a_sql})),
@@ -79,29 +77,27 @@ def sql_table_diff_summary(
     """
 
 
-def _register() -> None:
-    from algorithmproject_spark_spark.registry import register
-    from algorithmproject_spark_spark.sources.catalog import load_table
+_VALS = ["o_custkey", "o_orderstatus", "o_orderpriority", "o_totalprice"]
 
-    VALS = ["o_custkey", "o_orderstatus", "o_orderpriority", "o_totalprice"]
 
-    def _mutated(orders: DataFrame) -> DataFrame:
-        """Deterministic second snapshot: drop keys ≡0 (mod 97), change
-        priority on keys ≡0 (mod 101), add offset copies of keys ≡0
-        (mod 89)."""
-        kept = orders.filter(F.col("o_orderkey") % 97 != 0)
-        changed = kept.withColumn(
-            "o_orderpriority",
-            F.when(
-                F.col("o_orderkey") % 101 == 0, F.lit("0-RESTATED")
-            ).otherwise(F.col("o_orderpriority")),
-        )
-        added = orders.filter(F.col("o_orderkey") % 89 == 0).withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000)
-        )
-        return changed.unionByName(added)
+def _mutated(orders: DataFrame) -> DataFrame:
+    """Deterministic second snapshot: drop keys ≡0 (mod 97), change
+    priority on keys ≡0 (mod 101), add offset copies of keys ≡0
+    (mod 89)."""
+    kept = orders.filter(F.col("o_orderkey") % 97 != 0)
+    changed = kept.withColumn(
+        "o_orderpriority",
+        F.when(
+            F.col("o_orderkey") % 101 == 0, F.lit("0-RESTATED")
+        ).otherwise(F.col("o_orderpriority")),
+    )
+    added = orders.filter(F.col("o_orderkey") % 89 == 0).withColumn(
+        "o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000)
+    )
+    return changed.unionByName(added)
 
-    _SQL_MUTATED = """
+
+_SQL_MUTATED = """
         SELECT o_orderkey,
                o_custkey, o_orderstatus,
                CASE WHEN o_orderkey % 101 = 0 THEN '0-RESTATED'
@@ -114,20 +110,18 @@ def _register() -> None:
         FROM orders WHERE o_orderkey % 89 = 0
     """
 
-    @register(
-        "orders_snapshot_diff",
-        oracle=sql_table_diff_summary(
-            "SELECT * FROM orders", _SQL_MUTATED, "o_orderkey", VALS
-        ),
-        doc="Keyed snapshot diff (added/removed/changed/unchanged "
-        "counts + key witnesses) between orders and a deterministic "
-        "mutation of it — one full-outer hash join, the inverse of "
-        "cdc_apply",
-    )
-    def orders_snapshot_diff(spark, sf_dir):
-        orders = load_table(spark, sf_dir, "orders")
-        d = table_diff(orders, _mutated(orders), ["o_orderkey"], VALS)
-        return diff_summary(d, "o_orderkey")
 
-
-_register()
+@register(
+    "orders_snapshot_diff",
+    oracle=sql_table_diff_summary(
+        "SELECT * FROM orders", _SQL_MUTATED, "o_orderkey", _VALS
+    ),
+    doc="Keyed snapshot diff (added/removed/changed/unchanged "
+    "counts + key witnesses) between orders and a deterministic "
+    "mutation of it — one full-outer hash join, the inverse of "
+    "cdc_apply",
+)
+def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    d = table_diff(orders, _mutated(orders), ["o_orderkey"], _VALS)
+    return diff_summary(d, "o_orderkey")

@@ -134,11 +134,10 @@ def write_zordered(
 N_BUCKETS_LOG2 = 24  # 32-bit z div 2^24 → ≤256 coarse layout buckets
 
 
-def _register() -> None:
-    @register(
-        "zorder_pruning_stats",
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "zorder_pruning_stats",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH zo_ev AS (
             -- epoch_us // 1e6 floors exactly like Spark's
             -- unix_timestamp; epoch(ts)::BIGINT would ROUND half-even
@@ -180,57 +179,54 @@ def _register() -> None:
                     THEN 1 ELSE 0 END) AS BIGINT) AS scan_both_pred
         FROM zo_b, zo_pred
         """,
-        doc="Z-order layout effectiveness as a CHECKED RESULT: events "
-        "bucketed by Morton(z(user_id, ts_seconds)) div 2^24; per-"
-        "bucket min/max envelopes, then the bucket counts a mid-range "
-        "user predicate, a mid-range time predicate, and their "
-        "conjunction would scan — interleaving keeps BOTH dimensions' "
-        "envelopes tight, which is the whole point of the layout",
+    doc="Z-order layout effectiveness as a CHECKED RESULT: events "
+    "bucketed by Morton(z(user_id, ts_seconds)) div 2^24; per-"
+    "bucket min/max envelopes, then the bucket counts a mid-range "
+    "user predicate, a mid-range time predicate, and their "
+    "conjunction would scan — interleaving keeps BOTH dimensions' "
+    "envelopes tight, which is the whole point of the layout",
+)
+def zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # one-parse text glue (r13): identical shift/mask ladder
+    ev = load_table(spark, sf_dir, "events").selectExpr(
+        "user_id", "unix_timestamp(ts) AS tsec"
     )
-    def zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # one-parse text glue (r13): identical shift/mask ladder
-        ev = load_table(spark, sf_dir, "events").selectExpr(
-            "user_id", "unix_timestamp(ts) AS tsec"
-        )
-        mm = ev.agg(
-            F.expr("min(user_id) AS a_min"),
-            F.expr("max(user_id) AS a_max"),
-            F.expr("min(tsec) AS b_min"),
-            F.expr("max(tsec) AS b_max"),
-        )
-        z = ss_zvalue16(
-            ss_rank16("user_id", "a_min", "a_max"),
-            ss_rank16("tsec", "b_min", "b_max"),
-        )
-        bkt = ev.crossJoin(F.broadcast(mm)).selectExpr(
-            "user_id",
-            "tsec",
-            f"({z}) div {1 << N_BUCKETS_LOG2} AS bkt",
-            # thread the predicate bounds through (exact integer mids)
-            "a_min + (a_max - a_min) div 4 AS u_a",
-            "a_min + (a_max - a_min) div 2 AS u_b",
-            "b_min + (b_max - b_min) div 4 AS t_a",
-            "b_min + (b_max - b_min) div 2 AS t_b",
-        )
-        per_bucket = bkt.groupBy("bkt", "u_a", "u_b", "t_a", "t_b").agg(
-            F.expr("count(1) AS n"),
-            F.expr("min(user_id) AS u_lo"),
-            F.expr("max(user_id) AS u_hi"),
-            F.expr("min(tsec) AS t_lo"),
-            F.expr("max(tsec) AS t_hi"),
-        )
-        hit_u = "(u_hi >= u_a AND u_lo <= u_b)"
-        hit_t = "(t_hi >= t_a AND t_lo <= t_b)"
-        return per_bucket.agg(
-            F.expr("count(1) AS n_buckets"),
-            F.expr("sum(n) AS n_rows"),
-            F.expr(f"sum(CAST({hit_u} AS BIGINT)) AS scan_user_pred"),
-            F.expr(f"sum(CAST({hit_t} AS BIGINT)) AS scan_ts_pred"),
-            F.expr(
-                f"sum(CAST({hit_u} AND {hit_t} AS BIGINT))"
-                " AS scan_both_pred"
-            ),
-        )
-
-
-_register()
+    mm = ev.agg(
+        F.expr("min(user_id) AS a_min"),
+        F.expr("max(user_id) AS a_max"),
+        F.expr("min(tsec) AS b_min"),
+        F.expr("max(tsec) AS b_max"),
+    )
+    z = ss_zvalue16(
+        ss_rank16("user_id", "a_min", "a_max"),
+        ss_rank16("tsec", "b_min", "b_max"),
+    )
+    bkt = ev.crossJoin(F.broadcast(mm)).selectExpr(
+        "user_id",
+        "tsec",
+        f"({z}) div {1 << N_BUCKETS_LOG2} AS bkt",
+        # thread the predicate bounds through (exact integer mids)
+        "a_min + (a_max - a_min) div 4 AS u_a",
+        "a_min + (a_max - a_min) div 2 AS u_b",
+        "b_min + (b_max - b_min) div 4 AS t_a",
+        "b_min + (b_max - b_min) div 2 AS t_b",
+    )
+    per_bucket = bkt.groupBy("bkt", "u_a", "u_b", "t_a", "t_b").agg(
+        F.expr("count(1) AS n"),
+        F.expr("min(user_id) AS u_lo"),
+        F.expr("max(user_id) AS u_hi"),
+        F.expr("min(tsec) AS t_lo"),
+        F.expr("max(tsec) AS t_hi"),
+    )
+    hit_u = "(u_hi >= u_a AND u_lo <= u_b)"
+    hit_t = "(t_hi >= t_a AND t_lo <= t_b)"
+    return per_bucket.agg(
+        F.expr("count(1) AS n_buckets"),
+        F.expr("sum(n) AS n_rows"),
+        F.expr(f"sum(CAST({hit_u} AS BIGINT)) AS scan_user_pred"),
+        F.expr(f"sum(CAST({hit_t} AS BIGINT)) AS scan_ts_pred"),
+        F.expr(
+            f"sum(CAST({hit_u} AND {hit_t} AS BIGINT))"
+            " AS scan_both_pred"
+        ),
+    )

@@ -47,6 +47,18 @@ from algorithmproject_spark_spark.queries.dedup import (
     jaccard_pairs_above,
     sql_dup_pairs_cte,
 )
+from algorithmproject_spark_spark.queries.llmprep import (
+    BENCH_DOCS,
+    SPLIT_MOD,
+    SPLIT_TRAIN_LT,
+    SPLIT_VAL_LT,
+    _sql_contam_grams,
+    contamination_hits,
+)
+from algorithmproject_spark_spark.queries.spandedup import (
+    _sql_dup_span_stats,
+    dup_span_stats,
+)
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 QUALITY_MIN_CHARS = 120
@@ -534,78 +546,7 @@ PRETRAIN_MAX_DUP_PERMILLE = 800
 
 @register(
     "pretrain_corpus_pipeline",
-    oracle=None,  # installed below (composes the stage CTEs)
-    doc="Full pretraining-data curation in one plan: exact dedup "
-    "(min-id survivor) → ≥30-token gate → drop 3-gram benchmark "
-    "contamination vs the held-out set → drop docs ≥80% duplicated "
-    "spans → 80/10/10 hash split → per-(split, lang) counts, token "
-    "totals, id checksums",
-)
-def pretrain_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.queries.llmprep import (
-        BENCH_DOCS,
-        contamination_hits,
-    )
-    from algorithmproject_spark_spark.queries.llmprep import (
-        SPLIT_MOD,
-        SPLIT_TRAIN_LT,
-        SPLIT_VAL_LT,
-    )
-    from algorithmproject_spark_spark.queries.spandedup import dup_span_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    surv = dedup_exact(docs, "text", keep_min_of="doc_id")
-    gated = surv.filter(
-        (F.size(F.split(F.col("text"), " ")) >= PRETRAIN_MIN_TOKENS)
-        & (F.col("doc_id") >= BENCH_DOCS)  # held-out set never trains
-    )
-    contaminated = contamination_hits(
-        docs.filter(F.col("doc_id") >= BENCH_DOCS),
-        docs.filter(F.col("doc_id") < BENCH_DOCS),
-    ).select("doc_id")
-    clean = gated.join(contaminated, "doc_id", "left_anti")
-    spans = dup_span_stats(docs).select("doc_id", "dup_permille")
-    kept = clean.join(spans, "doc_id").filter(
-        F.col("dup_permille") < PRETRAIN_MAX_DUP_PERMILLE
-    )
-    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
-    split = (
-        F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
-        .when(bucket < SPLIT_VAL_LT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return (
-        kept.select(
-            split.alias("split"),
-            "lang",
-            "doc_id",
-            F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok"),
-        )
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
-            F.sum("doc_id").alias("id_checksum"),
-        )
-    )
-
-
-def _install_pretrain_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.queries.llmprep import (
-        BENCH_DOCS,
-        SPLIT_MOD,
-        SPLIT_TRAIN_LT,
-        SPLIT_VAL_LT,
-        _sql_contam_grams,
-    )
-    from algorithmproject_spark_spark.queries.spandedup import (
-        _sql_dup_span_stats,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
+    oracle=f"""
     WITH pc_surv AS (
         SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text
     ),
@@ -645,10 +586,46 @@ def _install_pretrain_oracle() -> None:
            CAST(SUM(doc_id) AS BIGINT) AS id_checksum
     FROM pc_kept
     GROUP BY 1, 2
-    """
-    REGISTRY["pretrain_corpus_pipeline"] = replace(
-        REGISTRY["pretrain_corpus_pipeline"], oracle=oracle
+    """,
+    doc="Full pretraining-data curation in one plan: exact dedup "
+    "(min-id survivor) → ≥30-token gate → drop 3-gram benchmark "
+    "contamination vs the held-out set → drop docs ≥80% duplicated "
+    "spans → 80/10/10 hash split → per-(split, lang) counts, token "
+    "totals, id checksums",
+)
+def pretrain_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    surv = dedup_exact(docs, "text", keep_min_of="doc_id")
+    gated = surv.filter(
+        (F.size(F.split(F.col("text"), " ")) >= PRETRAIN_MIN_TOKENS)
+        & (F.col("doc_id") >= BENCH_DOCS)  # held-out set never trains
     )
-
-
-_install_pretrain_oracle()
+    contaminated = contamination_hits(
+        docs.filter(F.col("doc_id") >= BENCH_DOCS),
+        docs.filter(F.col("doc_id") < BENCH_DOCS),
+    ).select("doc_id")
+    clean = gated.join(contaminated, "doc_id", "left_anti")
+    spans = dup_span_stats(docs).select("doc_id", "dup_permille")
+    kept = clean.join(spans, "doc_id").filter(
+        F.col("dup_permille") < PRETRAIN_MAX_DUP_PERMILLE
+    )
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
+    split = (
+        F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
+        .when(bucket < SPLIT_VAL_LT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+    return (
+        kept.select(
+            split.alias("split"),
+            "lang",
+            "doc_id",
+            F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok"),
+        )
+        .groupBy("split", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tok").alias("n_tokens"),
+            F.sum("doc_id").alias("id_checksum"),
+        )
+    )

@@ -60,7 +60,6 @@ from algorithmproject_spark_spark.operators import groupedagg  # noqa: F401,E402
 from algorithmproject_spark_spark.operators import countmin  # noqa: F401,E402
 from algorithmproject_spark_spark.operators import checksum  # noqa: F401,E402
 from algorithmproject_spark_spark.operators import tablediff  # noqa: F401,E402
-from algorithmproject_spark_spark.operators import kcore  # noqa: F401,E402
 from algorithmproject_spark_spark.operators import zorder  # noqa: F401,E402
 from algorithmproject_spark_spark.operators import bloomjoin  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import reco  # noqa: F401,E402
@@ -71,7 +70,6 @@ from algorithmproject_spark_spark.queries import trend  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import search  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import profiling  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import spatial  # noqa: F401,E402
-from algorithmproject_spark_spark.operators import bfs  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import product  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import revenue  # noqa: F401,E402
 from algorithmproject_spark_spark.queries import spc  # noqa: F401,E402

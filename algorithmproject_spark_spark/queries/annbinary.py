@@ -30,8 +30,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.vectors import EMB_DIM
-from algorithmproject_spark_spark.queries.similarity import N_QUERIES, TOP_K
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.queries.similarity import (
+    KNN_BRUTEFORCE_COSINE_SQL,
+    N_QUERIES,
+    TOP_K,
+    knn_bruteforce_cosine,
+)
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 _HALF = EMB_DIM // 2  # bits per BIGINT half (64-dim → 32+32)
@@ -142,15 +147,12 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
-
-
 @register(
     "ann_binary_recall",
     plan=("scalar_cross",),
     oracle=f"""
     WITH bin AS ({_BIN_TOPK_SQL}),
-    bf AS ({_BF_SQL})
+    bf AS ({KNN_BRUTEFORCE_COSINE_SQL})
     SELECT bf.q_id, count(bin.neighbor_id) AS n_hits,
            count(*) AS k
     FROM bf LEFT JOIN bin
@@ -167,7 +169,7 @@ def ann_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin_tk = ann_binary_hamming_topk(spark, sf_dir).select(
         "q_id", F.col("neighbor_id").alias("bin_neighbor")
     )
-    bf = REGISTRY["knn_bruteforce_cosine"].fn(spark, sf_dir).select(
+    bf = knn_bruteforce_cosine(spark, sf_dir).select(
         "q_id", "neighbor_id"
     )
     hit = bf.join(

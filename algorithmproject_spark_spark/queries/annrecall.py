@@ -15,13 +15,32 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
-from algorithmproject_spark_spark.functions.vectors import ss_cosine
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.functions.numeric import (
+    sql_micros,
+    ss_floordiv,
+    ss_micros,
+)
+from algorithmproject_spark_spark.functions.vectors import sql_cosine, ss_cosine
+from algorithmproject_spark_spark.operators.annivf import (
+    ANN_IVF_TOPK_SQL,
+    ann_ivf_topk,
+)
+from algorithmproject_spark_spark.operators.annlsh import (
+    ANN_LSH_TOPK_SQL,
+    ann_lsh_topk,
+)
+from algorithmproject_spark_spark.queries.similarity import (
+    KNN_BRUTEFORCE_COSINE_SQL,
+    N_QUERIES,
+    TOP_K,
+    knn_bruteforce_cosine,
+)
+from algorithmproject_spark_spark.registry import QueryFn, register
+from algorithmproject_spark_spark.sources.catalog import load_table
 
 
 def _retriever(
-    spark: SparkSession, sf_dir: str, name: str, cache: bool = False
+    spark: SparkSession, sf_dir: str, fn: QueryFn, cache: bool = False
 ) -> DataFrame:
     """One ANN candidate list (``ann_lsh_topk`` / ``ann_ivf_topk`` /
     ``knn_bruteforce_cosine``), UNCACHED by default (VERDICT r11 #2).
@@ -38,19 +57,16 @@ def _retriever(
     genuinely references a list at several sites; the cached relation
     is top-k-per-query sized (N_QUERIES × TOP_K rows), always
     executor-memory-trivial."""
-    df = REGISTRY[name].fn(spark, sf_dir)
+    df = fn(spark, sf_dir)
     return tracked_cache(df) if cache else df
-
-_LSH_SQL = REGISTRY["ann_lsh_topk"].oracle
-_BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
 
 
 @register(
     "ann_lsh_recall",
     plan=("scalar_cross",),
     oracle=f"""
-    WITH lsh AS ({_LSH_SQL}),
-    bf AS ({_BF_SQL})
+    WITH lsh AS ({ANN_LSH_TOPK_SQL}),
+    bf AS ({KNN_BRUTEFORCE_COSINE_SQL})
     SELECT bf.q_id, count(lsh.neighbor_id) AS n_hits,
            count(*) AS k
     FROM bf LEFT JOIN lsh
@@ -62,10 +78,10 @@ _BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
     "oracle-checked quality metric",
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lsh = _retriever(spark, sf_dir, "ann_lsh_topk").select(
+    lsh = _retriever(spark, sf_dir, ann_lsh_topk).select(
         "q_id", F.col("neighbor_id").alias("lsh_neighbor")
     )
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
+    bf = _retriever(spark, sf_dir, knn_bruteforce_cosine).select(
         "q_id", "neighbor_id"
     )
     hit = bf.join(
@@ -79,15 +95,12 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_SQL = REGISTRY["ann_ivf_topk"].oracle
-
-
 @register(
     "ann_ivf_recall",
     plan=("scalar_cross",),
     oracle=f"""
-    WITH ivf AS ({_IVF_SQL}),
-    bf AS ({_BF_SQL})
+    WITH ivf AS ({ANN_IVF_TOPK_SQL}),
+    bf AS ({KNN_BRUTEFORCE_COSINE_SQL})
     SELECT bf.q_id, count(ivf.neighbor_id) AS n_hits,
            count(*) AS k
     FROM bf LEFT JOIN ivf
@@ -98,10 +111,10 @@ _IVF_SQL = REGISTRY["ann_ivf_topk"].oracle
     "query vector",
 )
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ivf = _retriever(spark, sf_dir, "ann_ivf_topk").select(
+    ivf = _retriever(spark, sf_dir, ann_ivf_topk).select(
         "q_id", F.col("neighbor_id").alias("ivf_neighbor")
     )
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
+    bf = _retriever(spark, sf_dir, knn_bruteforce_cosine).select(
         "q_id", "neighbor_id"
     )
     hit = bf.join(
@@ -123,20 +136,20 @@ def _approx_union(
     ``cache`` is forwarded per retriever (see :func:`_retriever` for
     why it defaults off)."""
     lsh = (
-        _retriever(spark, sf_dir, "ann_lsh_topk", cache=cache)
+        _retriever(spark, sf_dir, ann_lsh_topk, cache=cache)
         .select(F.lit("lsh").alias("method"), "q_id", "neighbor_id", "rk")
     )
     ivf = (
-        _retriever(spark, sf_dir, "ann_ivf_topk", cache=cache)
+        _retriever(spark, sf_dir, ann_ivf_topk, cache=cache)
         .select(F.lit("ivf").alias("method"), "q_id", "neighbor_id", "rk")
     )
     return lsh.unionAll(ivf)
 
 
 _SQL_APPROX_UNION = f"""
-        SELECT 'lsh' AS method, q_id, neighbor_id, rk FROM ({_LSH_SQL})
+        SELECT 'lsh' AS method, q_id, neighbor_id, rk FROM ({ANN_LSH_TOPK_SQL})
         UNION ALL
-        SELECT 'ivf' AS method, q_id, neighbor_id, rk FROM ({_IVF_SQL})
+        SELECT 'ivf' AS method, q_id, neighbor_id, rk FROM ({ANN_IVF_TOPK_SQL})
 """
 
 
@@ -145,7 +158,7 @@ _SQL_APPROX_UNION = f"""
     plan=("scalar_cross",),
     oracle=f"""
     WITH approx AS ({_SQL_APPROX_UNION}),
-    bf AS ({_BF_SQL}),
+    bf AS ({KNN_BRUTEFORCE_COSINE_SQL}),
     joined AS (
         SELECT a.method, bf.q_id, bf.rk AS bf_rk, a.rk AS a_rk
         FROM bf LEFT JOIN approx a
@@ -203,7 +216,7 @@ def ann_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose independent subtrees overlap across cores.
     """
     approx = _approx_union(spark, sf_dir).withColumnRenamed("rk", "a_rk")
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
+    bf = _retriever(spark, sf_dir, knn_bruteforce_cosine).select(
         "q_id", "neighbor_id", F.col("rk").alias("bf_rk")
     )
     joined = approx.join(bf, ["q_id", "neighbor_id"], "left")
@@ -298,13 +311,6 @@ MATRYOSHKA_DIMS = 8
 
 
 def _sql_trunc_topk() -> str:
-    from algorithmproject_spark_spark.functions.numeric import sql_micros
-    from algorithmproject_spark_spark.functions.vectors import sql_cosine
-    from algorithmproject_spark_spark.queries.similarity import (
-        N_QUERIES,
-        TOP_K,
-    )
-
     d = MATRYOSHKA_DIMS
     return f"""
     SELECT q_id, neighbor_id, rk FROM (
@@ -324,75 +330,63 @@ def _sql_trunc_topk() -> str:
     """
 
 
-def _install_matryoshka() -> None:
-    from algorithmproject_spark_spark.queries.similarity import (
-        N_QUERIES,
-        TOP_K,
-    )
-    from algorithmproject_spark_spark.sources.catalog import load_table
-
-    bf_sql = REGISTRY["knn_bruteforce_cosine"].oracle
-
-    @register(
-        "ann_matryoshka_recall",
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "ann_matryoshka_recall",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH tr AS ({_sql_trunc_topk()}),
-        bf AS ({bf_sql})
+        bf AS ({KNN_BRUTEFORCE_COSINE_SQL})
         SELECT bf.q_id, count(tr.neighbor_id) AS n_hits, count(*) AS k
         FROM bf LEFT JOIN tr
           ON bf.q_id = tr.q_id AND bf.neighbor_id = tr.neighbor_id
         GROUP BY bf.q_id
         """,
-        doc=(
-            "Matryoshka recall: exact top-k using only the FIRST "
-            f"{MATRYOSHKA_DIMS} embedding dims vs the full-dimension "
-            "exact top-k, per query — measures whether a truncated "
-            "(4x cheaper) index preserves the ranking before shipping "
-            "it; same broadcast-query brute-force shape as the "
-            "baseline, arrays sliced in-plan"
-        ),
+    doc=(
+        "Matryoshka recall: exact top-k using only the FIRST "
+        f"{MATRYOSHKA_DIMS} embedding dims vs the full-dimension "
+        "exact top-k, per query — measures whether a truncated "
+        "(4x cheaper) index preserves the ranking before shipping "
+        "it; same broadcast-query brute-force shape as the "
+        "baseline, arrays sliced in-plan"
+    ),
+)
+def ann_matryoshka_recall(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    d = MATRYOSHKA_DIMS
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.slice(F.col("embedding"), 1, d).alias("q_emb"),
     )
-    def ann_matryoshka_recall(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        d = MATRYOSHKA_DIMS
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.slice(F.col("embedding"), 1, d).alias("q_emb"),
+    scored = (
+        emb.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.expr(
+                ss_micros(ss_cosine("q_emb", f"slice(embedding, 1, {d})"))
+            ).alias("cosine_e6"),
         )
-        scored = (
-            emb.crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select(
-                "q_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(
-                    ss_micros(ss_cosine("q_emb", f"slice(embedding, 1, {d})"))
-                ).alias("cosine_e6"),
-            )
-        )
-        w = W.partitionBy("q_id").orderBy(
-            F.desc("cosine_e6"), F.asc("neighbor_id")
-        )
-        tr = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= TOP_K)
-            .select("q_id", F.col("neighbor_id").alias("tr_neighbor"))
-        )
-        bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
-            "q_id", "neighbor_id"
-        )
-        hit = bf.join(
-            tr,
-            (bf.q_id == tr.q_id) & (bf.neighbor_id == tr.tr_neighbor),
-            "left",
-        ).select(bf.q_id, tr.tr_neighbor)
-        return hit.groupBy("q_id").agg(
-            F.count("tr_neighbor").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-        )
-
-
-_install_matryoshka()
+    )
+    w = W.partitionBy("q_id").orderBy(
+        F.desc("cosine_e6"), F.asc("neighbor_id")
+    )
+    tr = (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .select("q_id", F.col("neighbor_id").alias("tr_neighbor"))
+    )
+    bf = _retriever(spark, sf_dir, knn_bruteforce_cosine).select(
+        "q_id", "neighbor_id"
+    )
+    hit = bf.join(
+        tr,
+        (bf.q_id == tr.q_id) & (bf.neighbor_id == tr.tr_neighbor),
+        "left",
+    ).select(bf.q_id, tr.tr_neighbor)
+    return hit.groupBy("q_id").agg(
+        F.count("tr_neighbor").alias("n_hits"),
+        F.count(F.lit(1)).alias("k"),
+    )

@@ -79,10 +79,9 @@ def error_burst_recovery(events: DataFrame) -> DataFrame:
     )
 
 
-def _register() -> None:
-    @register(
-        "events_error_burst_recovery",
-        oracle=f"""
+@register(
+    "events_error_burst_recovery",
+    oracle=f"""
         WITH cep_b AS (
             SELECT user_id, event_id, event_type, epoch_us(ts) AS t
             FROM events
@@ -114,26 +113,22 @@ def _register() -> None:
                CAST(MIN(t3 - t) AS BIGINT) AS min_burst_span_us
         FROM cep_m GROUP BY user_id
         """,
-        doc="CEP pattern 'ERROR{3} within 48h then PURCHASE within "
-        "24h' compiled to two keyed window passes (next-closing-"
-        "symbol carried via lead) — zero self-joins, per-user "
-        "burst/recovery counts; the MATCH_RECOGNIZE class Spark "
-        "lacks natively",
-    )
-    def events_error_burst_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return error_burst_recovery(load_table(spark, sf_dir, "events"))
-
-
-_register()
+    doc="CEP pattern 'ERROR{3} within 48h then PURCHASE within "
+    "24h' compiled to two keyed window passes (next-closing-"
+    "symbol carried via lead) — zero self-joins, per-user "
+    "burst/recovery counts; the MATCH_RECOGNIZE class Spark "
+    "lacks natively",
+)
+def events_error_burst_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return error_burst_recovery(load_table(spark, sf_dir, "events"))
 
 
 FUNNEL_GAP_US = 24 * 3600 * 1_000_000
 
 
-def _register_strict_funnel() -> None:
-    @register(
-        "events_strict_funnel_matches",
-        oracle=f"""
+@register(
+    "events_strict_funnel_matches",
+    oracle=f"""
         WITH pm_r AS (
             SELECT user_id AS key, epoch_us(ts) AS t, event_id,
                    event_type = 'view' AS s0,
@@ -161,44 +156,40 @@ def _register_strict_funnel() -> None:
                CAST(MIN(lt2 - t) AS BIGINT) AS min_span_us
         FROM pm_m GROUP BY key
         """,
-        doc="general pattern matcher (operators/pattern.py) on the "
-        "strict view→click→purchase funnel: MATCH_RECOGNIZE "
-        "contiguity over the relevant substream (an intervening "
-        "relevant event breaks the match), 24h step bounds, one "
-        "keyed window pass for any pattern length — per-user match "
-        "counts and tightest span",
+    doc="general pattern matcher (operators/pattern.py) on the "
+    "strict view→click→purchase funnel: MATCH_RECOGNIZE "
+    "contiguity over the relevant substream (an intervening "
+    "relevant event breaks the match), 24h step bounds, one "
+    "keyed window pass for any pattern length — per-user match "
+    "counts and tightest span",
+)
+def events_strict_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from algorithmproject_spark_spark.operators.pattern import (
+        match_contiguous_pattern,
     )
-    def events_strict_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from algorithmproject_spark_spark.operators.pattern import (
-            match_contiguous_pattern,
-        )
 
-        ev = load_table(spark, sf_dir, "events")
-        m = match_contiguous_pattern(
-            ev,
-            "user_id",
-            "ts",
-            "event_id",
-            [
-                F.col("event_type") == "view",
-                F.col("event_type") == "click",
-                F.col("event_type") == "purchase",
-            ],
-            [FUNNEL_GAP_US, FUNNEL_GAP_US],
-        )
-        return m.groupBy(F.col("key").alias("user_id")).agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("span_us").alias("min_span_us"),
-        )
+    ev = load_table(spark, sf_dir, "events")
+    m = match_contiguous_pattern(
+        ev,
+        "user_id",
+        "ts",
+        "event_id",
+        [
+            F.col("event_type") == "view",
+            F.col("event_type") == "click",
+            F.col("event_type") == "purchase",
+        ],
+        [FUNNEL_GAP_US, FUNNEL_GAP_US],
+    )
+    return m.groupBy(F.col("key").alias("user_id")).agg(
+        F.count(F.lit(1)).alias("n_matches"),
+        F.min("span_us").alias("min_span_us"),
+    )
 
 
-_register_strict_funnel()
-
-
-def _register_skip_funnel() -> None:
-    @register(
-        "events_skip_funnel_matches",
-        oracle=f"""
+@register(
+    "events_skip_funnel_matches",
+    oracle=f"""
         WITH sk_r AS (
             SELECT user_id AS key, epoch_us(ts) AS t, event_id AS o,
                    event_type = 'view' AS s0,
@@ -235,38 +226,35 @@ def _register_skip_funnel() -> None:
                CAST(MIN(t_end - t) AS BIGINT) AS min_span_us
         FROM sk_m GROUP BY key
         """,
-        doc="skip-till-next-match funnel view->click->purchase "
-        "(operators/pattern.py::match_skip_to_next): events between "
-        "steps are ALLOWED — each step binds to the first matching "
-        "event strictly after the previous step (FlinkCEP followedBy "
-        "semantics, greedy, no backtracking), 24h per-step bounds, "
-        "ties broken by event_id. Compiled to two backward "
-        "running-min window passes over one keyed sort; the oracle "
-        "pins the binding (first occurrence), tie, and timeout "
-        "semantics via the identical struct-min algebra",
+    doc="skip-till-next-match funnel view->click->purchase "
+    "(operators/pattern.py::match_skip_to_next): events between "
+    "steps are ALLOWED — each step binds to the first matching "
+    "event strictly after the previous step (FlinkCEP followedBy "
+    "semantics, greedy, no backtracking), 24h per-step bounds, "
+    "ties broken by event_id. Compiled to two backward "
+    "running-min window passes over one keyed sort; the oracle "
+    "pins the binding (first occurrence), tie, and timeout "
+    "semantics via the identical struct-min algebra",
+)
+def events_skip_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from algorithmproject_spark_spark.operators.pattern import (
+        match_skip_to_next,
     )
-    def events_skip_funnel_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from algorithmproject_spark_spark.operators.pattern import (
-            match_skip_to_next,
-        )
 
-        ev = load_table(spark, sf_dir, "events")
-        m = match_skip_to_next(
-            ev,
-            "user_id",
-            "ts",
-            "event_id",
-            [
-                F.col("event_type") == "view",
-                F.col("event_type") == "click",
-                F.col("event_type") == "purchase",
-            ],
-            [FUNNEL_GAP_US, FUNNEL_GAP_US],
-        )
-        return m.groupBy(F.col("key").alias("user_id")).agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("span_us").alias("min_span_us"),
-        )
-
-
-_register_skip_funnel()
+    ev = load_table(spark, sf_dir, "events")
+    m = match_skip_to_next(
+        ev,
+        "user_id",
+        "ts",
+        "event_id",
+        [
+            F.col("event_type") == "view",
+            F.col("event_type") == "click",
+            F.col("event_type") == "purchase",
+        ],
+        [FUNNEL_GAP_US, FUNNEL_GAP_US],
+    )
+    return m.groupBy(F.col("key").alias("user_id")).agg(
+        F.count(F.lit(1)).alias("n_matches"),
+        F.min("span_us").alias("min_span_us"),
+    )

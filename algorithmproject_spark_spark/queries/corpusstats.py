@@ -181,13 +181,12 @@ def seqlen_bucket_waste(docs: DataFrame) -> DataFrame:
     ).orderBy("bucket_len")
 
 
-def _register() -> None:
-    @register(
-        "vocab_coverage_curve",
-        # scalar_cross: the rank-R count threshold is a 1-row broadcast
-        # joined back onto the vocabulary counts (VERDICT r11 #3).
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "vocab_coverage_curve",
+    # scalar_cross: the rank-R count threshold is a 1-row broadcast
+    # joined back onto the vocabulary counts (VERDICT r11 #3).
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH vc_c AS (
             SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
             FROM (SELECT unnest(string_split(text, chr(32))) AS tok
@@ -205,17 +204,17 @@ def _register() -> None:
         FROM vc_r WHERE rk IN ({", ".join(map(str, COVERAGE_LADDER))})
         ORDER BY v
         """,
-        doc="Tokenizer-budget curve: exact corpus-token coverage ppm "
-        "of the top-V vocabulary entries for V in a doubling ladder "
-        "— rank + cumulative sum over the vocabulary-sized (not "
-        "corpus-sized) relation",
-    )
-    def vocab_coverage_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return vocab_coverage_curve(load_table(spark, sf_dir, "documents"))
+    doc="Tokenizer-budget curve: exact corpus-token coverage ppm "
+    "of the top-V vocabulary entries for V in a doubling ladder "
+    "— rank + cumulative sum over the vocabulary-sized (not "
+    "corpus-sized) relation",
+)
+def vocab_coverage_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return vocab_coverage_curve(load_table(spark, sf_dir, "documents"))
 
-    @register(
-        "orders_key_skew_report",
-        oracle=f"""
+@register(
+    "orders_key_skew_report",
+    oracle=f"""
         WITH ks_c AS (
             SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS c
             FROM orders GROUP BY o_custkey
@@ -240,19 +239,19 @@ def _register() -> None:
                {sql_ppm('max_c', 'n_rows')} AS top1_share_ppm
         FROM ks_agg
         """,
-        doc="Shuffle pre-flight skew report for orders.o_custkey: "
-        "exact p50/p99/max of the per-key count distribution plus "
-        "heaviest-key row share — computed over the compacted "
-        "(count → frequency) relation, never a data-row sort; the "
-        "evidence for choosing salting / AQE skew handling",
-    )
-    def orders_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return key_skew_report(load_table(spark, sf_dir, "orders"), "o_custkey")
+    doc="Shuffle pre-flight skew report for orders.o_custkey: "
+    "exact p50/p99/max of the per-key count distribution plus "
+    "heaviest-key row share — computed over the compacted "
+    "(count → frequency) relation, never a data-row sort; the "
+    "evidence for choosing salting / AQE skew handling",
+)
+def orders_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return key_skew_report(load_table(spark, sf_dir, "orders"), "o_custkey")
 
-    @register(
-        "seqlen_bucket_waste",
-        plan=("global_sort",),
-        oracle=f"""
+@register(
+    "seqlen_bucket_waste",
+    plan=("global_sort",),
+    oracle=f"""
         WITH sb_l AS (
             SELECT CAST(len(string_split(text, chr(32))) AS BIGINT) AS l
             FROM documents
@@ -274,17 +273,17 @@ def _register() -> None:
                {sql_ppm('pad_tokens', 'pad_tokens + kept')} AS waste_ppm
         FROM sb_g ORDER BY bucket_len
         """,
-        doc="Batching-efficiency report: padding tokens and exact "
-        "waste ppm if docs are batched at each bucket rung (16..128, "
-        "longest rung truncates) — the evidence for bucketed batching "
-        "vs sequence packing (doc_pack_sequences)",
-    )
-    def seqlen_bucket_waste_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return seqlen_bucket_waste(load_table(spark, sf_dir, "documents"))
+    doc="Batching-efficiency report: padding tokens and exact "
+    "waste ppm if docs are batched at each bucket rung (16..128, "
+    "longest rung truncates) — the evidence for bucketed batching "
+    "vs sequence packing (doc_pack_sequences)",
+)
+def seqlen_bucket_waste_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return seqlen_bucket_waste(load_table(spark, sf_dir, "documents"))
 
-    @register(
-        "join_blowup_estimate",
-        oracle=f"""
+@register(
+    "join_blowup_estimate",
+    oracle=f"""
         WITH jb_c AS (
             SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS c
             FROM lineitem GROUP BY l_partkey
@@ -298,15 +297,15 @@ def _register() -> None:
                         'CAST(SUM(c * c) AS BIGINT)')} AS top_key_cost_ppm
         FROM jb_c
         """,
-        doc="Join blow-up estimator: the EXACT output size a self-"
-        "equi-join on lineitem.l_partkey would produce (Σc² rows, "
-        "Σc(c-1)/2 distinct pairs) from one keyed count — the Σdf² "
-        "candidate-cost arithmetic the dedup posting joins budget "
-        "with, productized as a pre-flight diagnostic; top-key ppm "
-        "share shows whether one hot key dominates the quadratic cost",
-    )
-    def join_blowup_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Overflow contract (ppm-style, functions/numeric.py): Σc² is
+    doc="Join blow-up estimator: the EXACT output size a self-"
+    "equi-join on lineitem.l_partkey would produce (Σc² rows, "
+    "Σc(c-1)/2 distinct pairs) from one keyed count — the Σdf² "
+    "candidate-cost arithmetic the dedup posting joins budget "
+    "with, productized as a pre-flight diagnostic; top-key ppm "
+    "share shows whether one hot key dominates the quadratic cost",
+)
+def join_blowup_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overflow contract (ppm-style, functions/numeric.py): Σc² is
         BIGINT, so the estimator requires every per-key count
         c < 2^31.5 ≈ 3.04e9 (and Σc² < 2^63 overall). Past that bound
         BOTH engines raise loudly (ANSI Spark ARITHMETIC_OVERFLOW,
@@ -315,33 +314,30 @@ def _register() -> None:
         pre-scale (count in millions) before squaring; kept exact here
         because the diagnostic's value IS its exactness in the regime
         where the joins it guards are still plannable."""
-        c = (
-            load_table(spark, sf_dir, "lineitem")
-            .groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        return c.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("c").alias("n_rows"),
-            F.sum(F.col("c") * F.col("c")).alias("selfjoin_rows"),
-            # exact `div 2` (the sum is always even) — double `/` + cast
-            # truncates vs DuckDB's rounding cast past 2^53, exactly
-            # the regime a blow-up estimator exists to warn about
-            F.expr(ss_floordiv("sum(c * (c - 1))", "2")).alias("distinct_pairs"),
-            F.max("c").alias("max_key_rows"),
-        ).select(
-            "n_keys",
-            "n_rows",
-            "selfjoin_rows",
-            "distinct_pairs",
-            "max_key_rows",
-            F.expr(
-                ss_ppm("max_key_rows * max_key_rows", "selfjoin_rows")
-            ).alias("top_key_cost_ppm"),
-        )
-
-
-_register()
+    c = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return c.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum("c").alias("n_rows"),
+        F.sum(F.col("c") * F.col("c")).alias("selfjoin_rows"),
+        # exact `div 2` (the sum is always even) — double `/` + cast
+        # truncates vs DuckDB's rounding cast past 2^53, exactly
+        # the regime a blow-up estimator exists to warn about
+        F.expr(ss_floordiv("sum(c * (c - 1))", "2")).alias("distinct_pairs"),
+        F.max("c").alias("max_key_rows"),
+    ).select(
+        "n_keys",
+        "n_rows",
+        "selfjoin_rows",
+        "distinct_pairs",
+        "max_key_rows",
+        F.expr(
+            ss_ppm("max_key_rows * max_key_rows", "selfjoin_rows")
+        ).alias("top_key_cost_ppm"),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -27,21 +27,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.queries.text import (
+    DOC_FINGERPRINT_SQL,
+    DOC_QUALITY_SCORE_SQL,
+    DOC_TOKEN_STATS_SQL,
+    doc_fingerprint,
+    doc_quality_score,
+    doc_token_stats,
+)
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
-
-_TOKSTATS_SQL = REGISTRY["doc_token_stats"].oracle
-_QUALITY_SQL = REGISTRY["doc_quality_score"].oracle
-_FP_SQL = REGISTRY["doc_fingerprint"].oracle
-
 
 @register(
     "corpus_datacard",
     plan=("scalar_cross",),
     oracle=f"""
-    WITH ts AS ({_TOKSTATS_SQL}),
-    q AS ({_QUALITY_SQL}),
-    fp AS ({_FP_SQL}),
+    WITH ts AS ({DOC_TOKEN_STATS_SQL}),
+    q AS ({DOC_QUALITY_SCORE_SQL}),
+    fp AS ({DOC_FINGERPRINT_SQL}),
     vol AS (
         SELECT CAST(count(*) AS BIGINT) AS n_docs,
                CAST(sum(n_tokens) AS BIGINT) AS total_tokens
@@ -96,14 +99,14 @@ _FP_SQL = REGISTRY["doc_fingerprint"].oracle
 )
 def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-parse text glue (r13): identical expressions
-    vol = REGISTRY["doc_token_stats"].fn(spark, sf_dir).agg(
+    vol = doc_token_stats(spark, sf_dir).agg(
         F.expr("CAST(count(1) AS BIGINT) AS n_docs"),
         F.expr("CAST(sum(n_tokens) AS BIGINT) AS total_tokens"),
     )
-    keep = REGISTRY["doc_quality_score"].fn(spark, sf_dir).agg(
+    keep = doc_quality_score(spark, sf_dir).agg(
         F.expr("CAST(sum(keep) AS BIGINT) AS n_keep")
     )
-    dup = REGISTRY["doc_fingerprint"].fn(spark, sf_dir).agg(
+    dup = doc_fingerprint(spark, sf_dir).agg(
         F.expr(
             "CAST(count(1) - count(DISTINCT fingerprint) AS BIGINT)"
             " AS n_dups"

@@ -31,9 +31,29 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import (
     sql_hash_mod,
+    sql_ppm,
     ss_hash_mod,
     ss_micros,
     ss_ppm,
+)
+from algorithmproject_spark_spark.operators.bfs import bfs_levels, sql_bfs_levels
+from algorithmproject_spark_spark.operators.components import (
+    CC_ITERS,
+    connected_components_min_label,
+    sql_connected_components,
+)
+from algorithmproject_spark_spark.operators.kcore import (
+    kcore_vertices,
+    sql_kcore_vertices,
+)
+from algorithmproject_spark_spark.operators.labelprop import (
+    LPA_ITERS,
+    label_propagation,
+    sql_label_propagation,
+)
+from algorithmproject_spark_spark.operators.triangles import (
+    sql_vertex_triangle_counts,
+    vertex_triangle_counts,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -603,15 +623,17 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "dedup_cluster_reps",
-    oracle=None,  # set below — needs sql_dup_pairs_cte defined first
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()},
+    {sql_connected_components('dup_pairs')}
+    SELECT v AS doc_id, lbl AS cluster_rep,
+           CASE WHEN v = lbl THEN 1 ELSE 0 END AS is_survivor
+    FROM cc{CC_ITERS}
+    """,
     doc="near-dup clusters: connected components over verified pairs, "
     "component-min survivor per doc (transitive chains collapse to one)",
 )
 def dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.operators.components import (
-        connected_components_min_label,
-    )
-
     pairs = jaccard_verified_pairs(spark, sf_dir)
     labels = connected_components_min_label(pairs)
     return labels.select(
@@ -619,30 +641,6 @@ def dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lbl").alias("cluster_rep"),
         F.when(F.col("v") == F.col("lbl"), 1).otherwise(0).alias("is_survivor"),
     )
-
-
-def _install_cluster_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.components import (
-        CC_ITERS,
-        sql_connected_components,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
-    WITH {sql_dup_pairs_cte()},
-    {sql_connected_components('dup_pairs')}
-    SELECT v AS doc_id, lbl AS cluster_rep,
-           CASE WHEN v = lbl THEN 1 ELSE 0 END AS is_survivor
-    FROM cc{CC_ITERS}
-    """
-    REGISTRY["dedup_cluster_reps"] = replace(
-        REGISTRY["dedup_cluster_reps"], oracle=oracle
-    )
-
-
-_install_cluster_oracle()
 
 
 # Soft dedup: instead of DROPPING near-duplicates, downweight every
@@ -656,7 +654,23 @@ _install_cluster_oracle()
 # (broadcast); the corpus-side cost is ONE left equi-join on doc_id.
 @register(
     "dedup_soft_weights",
-    oracle=None,  # set below — shares the dup_pairs + components CTEs
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()},
+    {sql_connected_components('dup_pairs')},
+    sw_sizes AS (
+        SELECT lbl, CAST(count(*) AS BIGINT) AS cluster_size
+        FROM cc{CC_ITERS} GROUP BY lbl
+    ),
+    sw_clustered AS (
+        SELECT c.v AS doc_id, c.lbl AS cluster_rep, s.cluster_size
+        FROM cc{CC_ITERS} c JOIN sw_sizes s USING (lbl)
+    )
+    SELECT d.doc_id,
+           coalesce(c.cluster_rep, d.doc_id) AS cluster_rep,
+           coalesce(c.cluster_size, 1) AS cluster_size,
+           1000000 // coalesce(c.cluster_size, 1) AS w_ppm
+    FROM documents d LEFT JOIN sw_clustered c ON d.doc_id = c.doc_id
+    """,
     doc=(
         "soft near-dup weights: every member of a verified near-dup "
         "cluster gets weight 1e6/|cluster| ppm (cluster contributes "
@@ -666,10 +680,6 @@ _install_cluster_oracle()
     ),
 )
 def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.operators.components import (
-        connected_components_min_label,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     labels = connected_components_min_label(
         jaccard_verified_pairs(spark, sf_dir)
@@ -690,40 +700,6 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         size.alias("cluster_size"),
         F.call_function("div", F.lit(1_000_000), size).alias("w_ppm"),
     )
-
-
-def _install_soft_weights_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.components import (
-        CC_ITERS,
-        sql_connected_components,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
-    WITH {sql_dup_pairs_cte()},
-    {sql_connected_components('dup_pairs')},
-    sw_sizes AS (
-        SELECT lbl, CAST(count(*) AS BIGINT) AS cluster_size
-        FROM cc{CC_ITERS} GROUP BY lbl
-    ),
-    sw_clustered AS (
-        SELECT c.v AS doc_id, c.lbl AS cluster_rep, s.cluster_size
-        FROM cc{CC_ITERS} c JOIN sw_sizes s USING (lbl)
-    )
-    SELECT d.doc_id,
-           coalesce(c.cluster_rep, d.doc_id) AS cluster_rep,
-           coalesce(c.cluster_size, 1) AS cluster_size,
-           1000000 // coalesce(c.cluster_size, 1) AS w_ppm
-    FROM documents d LEFT JOIN sw_clustered c ON d.doc_id = c.doc_id
-    """
-    REGISTRY["dedup_soft_weights"] = replace(
-        REGISTRY["dedup_soft_weights"], oracle=oracle
-    )
-
-
-_install_soft_weights_oracle()
 
 
 # Inverted-index n-gram Jaccard — the EXACT candidate generator, the
@@ -938,35 +914,7 @@ def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_label_prop_communities",
-    oracle=None,  # installed below (needs the dup-pairs CTE + LPA unroll)
-    doc="Label-propagation communities over the verified near-dup "
-    "graph: synchronous LPA, most-frequent-neighbor label with min "
-    "tie-break, 3 fixed rounds — splits weakly-bridged components "
-    "into tight clusters (finer than connected components). Each "
-    "round is one O(edges) equi-join + a per-vertex top-1 window; "
-    "the DuckDB oracle unrolls one CTE per round",
-)
-def dedup_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.operators.labelprop import (
-        label_propagation,
-    )
-
-    pairs = jaccard_pairs_above(spark, sf_dir).select("doc_a", "doc_b")
-    return label_propagation(pairs).select(
-        F.col("v").alias("doc_id"), "community"
-    )
-
-
-def _install_lpa_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.labelprop import (
-        LPA_ITERS,
-        sql_label_propagation,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
+    oracle=f"""
     WITH {sql_dup_pairs_cte()},
     lp_edges AS (
         SELECT doc_a AS s, doc_b AS d FROM dup_pairs
@@ -975,59 +923,106 @@ def _install_lpa_oracle() -> None:
     ),
     {sql_label_propagation('lp_edges', LPA_ITERS)}
     SELECT v AS doc_id, lbl AS community FROM lp{LPA_ITERS}
-    """
-    REGISTRY["dedup_label_prop_communities"] = replace(
-        REGISTRY["dedup_label_prop_communities"], oracle=oracle
+    """,
+    doc="Label-propagation communities over the verified near-dup "
+    "graph: synchronous LPA, most-frequent-neighbor label with min "
+    "tie-break, 3 fixed rounds — splits weakly-bridged components "
+    "into tight clusters (finer than connected components). Each "
+    "round is one O(edges) equi-join + a per-vertex top-1 window; "
+    "the DuckDB oracle unrolls one CTE per round",
+)
+def dedup_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = jaccard_pairs_above(spark, sf_dir).select("doc_a", "doc_b")
+    return label_propagation(pairs).select(
+        F.col("v").alias("doc_id"), "community"
     )
-
-
-_install_lpa_oracle()
 
 
 @register(
     "dedup_triangle_counts",
-    oracle=None,  # installed below (needs the dup-pairs CTE)
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()},
+    tc_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
+    {sql_vertex_triangle_counts('tc_edges')}
+    SELECT v AS doc_id, n_triangles FROM tc_counts
+    """,
     doc="Per-doc triangle participation over the verified near-dup "
     "graph (degree-ordered wedge joins — each triangle generated "
     "once from its minimum-(degree,id) vertex, hot-vertex wedge "
     "blowup eliminated). Dense triangle clusters flag template spam",
 )
 def dedup_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.operators.triangles import (
-        vertex_triangle_counts,
-    )
-
     edges = jaccard_pairs_above(spark, sf_dir).select("doc_a", "doc_b")
     return vertex_triangle_counts(edges).select(
         F.col("v").alias("doc_id"), "n_triangles"
     )
 
 
-def _install_triangle_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.triangles import (
-        sql_vertex_triangle_counts,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
+@register(
+    "dedup_kcore_members",
+    oracle=f"""
     WITH {sql_dup_pairs_cte()},
-    tc_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
-    {sql_vertex_triangle_counts('tc_edges')}
-    SELECT v AS doc_id, n_triangles FROM tc_counts
-    """
-    REGISTRY["dedup_triangle_counts"] = replace(
-        REGISTRY["dedup_triangle_counts"], oracle=oracle
+    kc_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
+    {sql_kcore_vertices('kc_edges')}
+    SELECT v AS doc_id, deg FROM kc_out
+    """,
+    doc="2-core of the verified near-dup graph (4 unrolled peel "
+    "rounds, one degree agg + one edge semi-join each): vertices "
+    "inside mutually-connected duplicate blobs, with in-core "
+    "degree — the dense-cluster certificate tree/chain components "
+    "never trigger",
+)
+def dedup_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    edges = jaccard_pairs_above(spark, sf_dir).selectExpr(
+        "doc_a AS a", "doc_b AS b"
     )
+    return kcore_vertices(edges).selectExpr("v AS doc_id", "deg")
 
 
-_install_triangle_oracle()
+@register(
+    "dedup_bfs_levels",
+    oracle=f"""
+    WITH RECURSIVE {sql_dup_pairs_cte()},
+    bfs_edges AS (SELECT doc_a AS a, doc_b AS b FROM dup_pairs),
+    {sql_bfs_levels('bfs_edges')}
+    SELECT level, CAST(count(*) AS BIGINT) AS n_nodes,
+           CAST(min(v) AS BIGINT) AS min_node
+    FROM bfs_out GROUP BY level
+    """,
+    doc=(
+        "BFS hop-level census from the minimum vertex of the "
+        "verified near-dup graph (4 frontier rounds): how far "
+        "does transitive duplication reach from the anchor doc"
+    ),
+    plan=("scalar_cross",),  # min-vertex source is a 1-row scalar
+)
+def dedup_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    edges = jaccard_pairs_above(spark, sf_dir).selectExpr(
+        "doc_a AS a", "doc_b AS b"
+    )
+    lv = bfs_levels(edges)
+    return (
+        lv.groupBy("level")
+        .agg(
+            F.expr("count(1) AS n_nodes"),
+            F.expr("min(v) AS min_node"),
+        )
+        .selectExpr("CAST(level AS BIGINT) AS level", "n_nodes", "min_node")
+    )
 
 
 @register(
     "cross_source_dup_matrix",
-    oracle=None,  # installed below (needs the dup-pairs CTE)
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()}
+    SELECT LEAST(da.source, db.source) AS source_a,
+           GREATEST(da.source, db.source) AS source_b,
+           CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
+    FROM dup_pairs p
+    JOIN documents da ON p.doc_a = da.doc_id
+    JOIN documents db ON p.doc_b = db.doc_id
+    GROUP BY 1, 2
+    """,
     doc="Cross-source duplication matrix: verified near-dup pairs "
     "bucketed by their docs' (source_a, source_b) — the data-lineage "
     "leakage report that tells a curation run which feeds copy from "
@@ -1067,7 +1062,12 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_threshold_histogram",
-    oracle=None,  # installed below
+    oracle=f"""
+    WITH {sql_dup_pairs_cte(threshold_e6=0)}
+    SELECT jaccard_e6 * 10 // 1000000 AS decile,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs
+    FROM dup_pairs GROUP BY 1
+    """,
     doc="Near-dup threshold tuning curve in ONE pass: LSH candidates "
     "verified once, pair counts bucketed per Jaccard decile — the "
     "curve a curation run reads to place its dedup bar, without "
@@ -1083,39 +1083,6 @@ def near_dup_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("decile")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
-
-
-def _install_source_matrix_oracles() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    matrix = f"""
-    WITH {sql_dup_pairs_cte()}
-    SELECT LEAST(da.source, db.source) AS source_a,
-           GREATEST(da.source, db.source) AS source_b,
-           CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
-    FROM dup_pairs p
-    JOIN documents da ON p.doc_a = da.doc_id
-    JOIN documents db ON p.doc_b = db.doc_id
-    GROUP BY 1, 2
-    """
-    REGISTRY["cross_source_dup_matrix"] = replace(
-        REGISTRY["cross_source_dup_matrix"], oracle=matrix
-    )
-
-    hist = f"""
-    WITH {sql_dup_pairs_cte(threshold_e6=0)}
-    SELECT jaccard_e6 * 10 // 1000000 AS decile,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM dup_pairs GROUP BY 1
-    """
-    REGISTRY["near_dup_threshold_histogram"] = replace(
-        REGISTRY["near_dup_threshold_histogram"], oracle=hist
-    )
-
-
-_install_source_matrix_oracles()
 
 
 # --------------------------------------------------------------------------
@@ -1356,49 +1323,9 @@ def quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "neardup_flavor_agreement",
     plan=("arrow",),  # composes simhash_hamming_pairs' fp124 kernel
-    oracle=None,  # installed below (composes both pair CTE chains)
-    doc=(
-        "agreement report between the two native near-dup flavors: "
-        "pairs found by banded MinHash-Jaccard vs banded SimHash-"
-        "Hamming — counts of both/minhash-only/simhash-only and the "
-        "pair-set Jaccard in ppm; one full-outer join of two bounded "
-        "candidate-verified pair relations"
-    ),
-)
-def neardup_flavor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mh = jaccard_pairs_above(spark, sf_dir).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_mh")
-    )
-    sh_p = simhash_hamming_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_sh")
-    )
-    j = mh.join(sh_p, ["doc_a", "doc_b"], "full_outer")
-    both = "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
-    return j.agg(
-        F.expr(both).alias("n_both"),
-        F.expr(
-            "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NULL)) AS BIGINT))"
-        ).alias("n_minhash_only"),
-        F.expr(
-            "sum(CAST(((in_mh IS NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
-        ).alias("n_simhash_only"),
-        F.expr("CAST(count(1) AS BIGINT)").alias("n_union"),
-        F.expr(
-            f"CASE WHEN count(1) > 0 THEN {ss_ppm(both, 'count(1)')}"
-            " ELSE CAST(NULL AS BIGINT) END"
-        ).alias("agreement_ppm"),
-    )
-
-
-def _install_flavor_agreement_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.functions.numeric import sql_ppm
-    from algorithmproject_spark_spark.registry import REGISTRY
-
     # NOTE: sql_dup_pairs_cte already claims the names sh/sig/bands/
     # cand/dup_pairs, so the SimHash chain here uses fa_-prefixed names
-    oracle = f"""
+    oracle=f"""
     WITH {sql_dup_pairs_cte()},
     {_sql_fp124()},
     fa_bands AS (
@@ -1436,10 +1363,35 @@ def _install_flavor_agreement_oracle() -> None:
                         'COUNT(*)')}
            ELSE NULL END AS agreement_ppm
     FROM fa_j
-    """
-    REGISTRY["neardup_flavor_agreement"] = replace(
-        REGISTRY["neardup_flavor_agreement"], oracle=oracle
+    """,
+    doc=(
+        "agreement report between the two native near-dup flavors: "
+        "pairs found by banded MinHash-Jaccard vs banded SimHash-"
+        "Hamming — counts of both/minhash-only/simhash-only and the "
+        "pair-set Jaccard in ppm; one full-outer join of two bounded "
+        "candidate-verified pair relations"
+    ),
+)
+def neardup_flavor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    mh = jaccard_pairs_above(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("in_mh")
     )
-
-
-_install_flavor_agreement_oracle()
+    sh_p = simhash_hamming_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("in_sh")
+    )
+    j = mh.join(sh_p, ["doc_a", "doc_b"], "full_outer")
+    both = "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
+    return j.agg(
+        F.expr(both).alias("n_both"),
+        F.expr(
+            "sum(CAST(((in_mh IS NOT NULL) AND (in_sh IS NULL)) AS BIGINT))"
+        ).alias("n_minhash_only"),
+        F.expr(
+            "sum(CAST(((in_mh IS NULL) AND (in_sh IS NOT NULL)) AS BIGINT))"
+        ).alias("n_simhash_only"),
+        F.expr("CAST(count(1) AS BIGINT)").alias("n_union"),
+        F.expr(
+            f"CASE WHEN count(1) > 0 THEN {ss_ppm(both, 'count(1)')}"
+            " ELSE CAST(NULL AS BIGINT) END"
+        ).alias("agreement_ppm"),
+    )

@@ -78,11 +78,10 @@ def token_drift(docs: DataFrame, top_n: int = TOP_N) -> DataFrame:
     return ranked.orderBy(F.col("drift_ppm").desc(), "tok").limit(top_n)
 
 
-def _register() -> None:
-    @register(
-        "corpus_token_drift",
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "corpus_token_drift",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH cd_t AS (
             SELECT {sql_hash_mod('doc_id', 2)} AS side,
                    unnest(string_split(text, chr(32))) AS tok
@@ -102,23 +101,19 @@ def _register() -> None:
         FROM cd_c, cd_n
         ORDER BY drift_ppm DESC, tok LIMIT {TOP_N}
         """,
-        doc="Corpus drift between the two hash-mod halves of the "
-        "corpus: per-token exact ppm frequencies and |Δppm| (the "
-        "total-variation contribution), overflow-bounded two-step "
-        "integer scaling, top-50 movers — the distribution-shift "
-        "gate a corpus refresh runs before swapping sources",
-    )
-    def corpus_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return token_drift(load_table(spark, sf_dir, "documents"))
+    doc="Corpus drift between the two hash-mod halves of the "
+    "corpus: per-token exact ppm frequencies and |Δppm| (the "
+    "total-variation contribution), overflow-bounded two-step "
+    "integer scaling, top-50 movers — the distribution-shift "
+    "gate a corpus refresh runs before swapping sources",
+)
+def corpus_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return token_drift(load_table(spark, sf_dir, "documents"))
 
 
-_register()
-
-
-def _register_daily() -> None:
-    @register(
-        "events_daily_drift_tv",
-        oracle=f"""
+@register(
+    "events_daily_drift_tv",
+    oracle=f"""
         WITH dd_c AS (
             SELECT CAST(ts AS DATE) AS day, event_type,
                    CAST(COUNT(*) AS BIGINT) AS c
@@ -154,48 +149,45 @@ def _register_daily() -> None:
           AND EXISTS (SELECT 1 FROM dd_n y WHERE y.day = j.day)
         GROUP BY j.day
         """,
-        doc="day-over-day distribution shift monitor: total-variation "
-        "distance (exact ppm, Σ|Δppm| div 2) between each day's and "
-        "the previous day's event-type mix — the alerting primitive "
-        "behind 'did the traffic mix change overnight'; one keyed "
-        "count + a self-join on the tiny (day, type) relation",
+    doc="day-over-day distribution shift monitor: total-variation "
+    "distance (exact ppm, Σ|Δppm| div 2) between each day's and "
+    "the previous day's event-type mix — the alerting primitive "
+    "behind 'did the traffic mix change overnight'; one keyed "
+    "count + a self-join on the tiny (day, type) relation",
+)
+def events_daily_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    c = ev.groupBy(
+        F.to_date("ts").alias("day"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("c"))
+    n = c.groupBy("day").agg(F.sum("c").alias("n"))
+    p = c.join(n, "day").select(
+        "day", "event_type", F.expr(ss_ppm("c", "n")).alias("p")
     )
-    def events_daily_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = load_table(spark, sf_dir, "events")
-        c = ev.groupBy(
-            F.to_date("ts").alias("day"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("c"))
-        n = c.groupBy("day").agg(F.sum("c").alias("n"))
-        p = c.join(n, "day").select(
-            "day", "event_type", F.expr(ss_ppm("c", "n")).alias("p")
-        )
-        prev = p.select(
-            F.date_add("day", 1).alias("day"),
-            F.col("event_type"),
-            F.col("p").alias("p_prev"),
-        )
-        # FULL join over the union of both days' type sets: a type
-        # present only yesterday still contributes |0 - p_prev| (a
-        # left join would under-count the distance)
-        joined = p.join(prev, ["day", "event_type"], "full_outer").select(
-            "day",
-            F.abs(
-                F.coalesce("p", F.lit(0)) - F.coalesce("p_prev", F.lit(0))
-            ).alias("d"),
-        )
-        # keep only days where BOTH sides exist (first/last day have
-        # no pair — no distribution to compare against)
-        today_days = n.select("day")
-        prev_days = n.select(F.date_add("day", 1).alias("day")).distinct()
-        return (
-            joined.join(today_days, "day", "left_semi")
-            .join(prev_days, "day", "left_semi")
-            .groupBy("day")
-            .agg(F.expr(ss_floordiv("sum(d)", "2")).alias("tv_ppm"))
-        )
-
-
-_register_daily()
+    prev = p.select(
+        F.date_add("day", 1).alias("day"),
+        F.col("event_type"),
+        F.col("p").alias("p_prev"),
+    )
+    # FULL join over the union of both days' type sets: a type
+    # present only yesterday still contributes |0 - p_prev| (a
+    # left join would under-count the distance)
+    joined = p.join(prev, ["day", "event_type"], "full_outer").select(
+        "day",
+        F.abs(
+            F.coalesce("p", F.lit(0)) - F.coalesce("p_prev", F.lit(0))
+        ).alias("d"),
+    )
+    # keep only days where BOTH sides exist (first/last day have
+    # no pair — no distribution to compare against)
+    today_days = n.select("day")
+    prev_days = n.select(F.date_add("day", 1).alias("day")).distinct()
+    return (
+        joined.join(today_days, "day", "left_semi")
+        .join(prev_days, "day", "left_semi")
+        .groupBy("day")
+        .agg(F.expr(ss_floordiv("sum(d)", "2")).alias("tv_ppm"))
+    )
 
 
 # --------------------------------------------------------------------------

@@ -36,18 +36,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv
-from algorithmproject_spark_spark.registry import REGISTRY, register
-
-_LANG_ID_SQL = REGISTRY["doc_lang_id"].oracle
+from algorithmproject_spark_spark.queries.text import DOC_LANG_ID_SQL, doc_lang_id
+from algorithmproject_spark_spark.registry import register
 
 _SQL_PAIRS = f"""
-        SELECT lang AS t, pred_lang AS p FROM ({_LANG_ID_SQL})
+        SELECT lang AS t, pred_lang AS p FROM ({DOC_LANG_ID_SQL})
 """
 
 
 def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        REGISTRY["doc_lang_id"].fn(spark, sf_dir)
+        doc_lang_id(spark, sf_dir)
         .select(F.col("lang").alias("t"), F.col("pred_lang").alias("p"))
     )
 

@@ -30,8 +30,17 @@ would have needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from algorithmproject_spark_spark.operators.components import (
+    CC_ITERS,
+    connected_components_min_label,
+    sql_connected_components,
+)
+from algorithmproject_spark_spark.queries.dedup import (
+    jaccard_verified_pairs,
+    sql_dup_pairs_cte,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -86,41 +95,9 @@ def golden_records(
     )
 
 
-def _register() -> None:
-    @register(
-        "dedup_golden_records",
-        oracle=None,  # installed below (needs the dup-pairs CTE chain)
-        doc="MDM golden-record merge over near-dup clusters: survivor "
-        "= (n_chars desc, doc_id) per component, attributes "
-        "consolidated (member count, char totals, sorted distinct "
-        "langs/sources) — the merge step downstream of "
-        "dedup_cluster_reps, one cluster-keyed window + one agg",
-    )
-    def dedup_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from algorithmproject_spark_spark.operators.components import (
-            connected_components_min_label,
-        )
-        from algorithmproject_spark_spark.queries.dedup import (
-            jaccard_verified_pairs,
-        )
-
-        pairs = jaccard_verified_pairs(spark, sf_dir)
-        labels = connected_components_min_label(pairs)
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "n_chars"
-        )
-        return golden_records(docs, labels)
-
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.components import (
-        CC_ITERS,
-        sql_connected_components,
-    )
-    from algorithmproject_spark_spark.queries.dedup import sql_dup_pairs_cte
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
+@register(
+    "dedup_golden_records",
+    oracle=f"""
     WITH {sql_dup_pairs_cte()},
     {sql_connected_components('dup_pairs')},
     gr_m AS (
@@ -149,10 +126,17 @@ def _register() -> None:
     SELECT s.cluster, s.golden_doc, a.n_members, a.total_chars,
            a.max_chars, a.langs, a.sources
     FROM gr_s s JOIN gr_a a ON s.cluster = a.cluster
-    """
-    REGISTRY["dedup_golden_records"] = replace(
-        REGISTRY["dedup_golden_records"], oracle=oracle
+    """,
+    doc="MDM golden-record merge over near-dup clusters: survivor "
+    "= (n_chars desc, doc_id) per component, attributes "
+    "consolidated (member count, char totals, sorted distinct "
+    "langs/sources) — the merge step downstream of "
+    "dedup_cluster_reps, one cluster-keyed window + one agg",
+)
+def dedup_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = jaccard_verified_pairs(spark, sf_dir)
+    labels = connected_components_min_label(pairs)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
     )
-
-
-_register()
+    return golden_records(docs, labels)

@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.numeric import sql_ppm, ss_ppm
+from algorithmproject_spark_spark.operators.labelprop import (
+    LPA_ITERS,
+    label_propagation,
+    sql_label_propagation,
+)
 from algorithmproject_spark_spark.queries.dedup import (
     jaccard_pairs_above,
     sql_dup_pairs_cte,
@@ -43,7 +48,51 @@ E6 = 1_000_000
 @register(
     "dedup_community_modularity",
     plan=("scalar_cross",),
-    oracle=None,  # installed below (needs the LPA unroll helper)
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()},
+    lp_edges AS (
+        SELECT doc_a AS s, doc_b AS d FROM dup_pairs
+        UNION ALL
+        SELECT doc_b AS s, doc_a AS d FROM dup_pairs
+    ),
+    {sql_label_propagation('lp_edges', LPA_ITERS)},
+    gm_comm AS (SELECT v, lbl AS community FROM lp{LPA_ITERS}),
+    gm_m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM dup_pairs),
+    gm_deg AS (
+        SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
+            SELECT doc_a AS v FROM dup_pairs
+            UNION ALL SELECT doc_b FROM dup_pairs
+        ) GROUP BY v
+    ),
+    gm_pn AS (
+        SELECT c.community,
+               CAST(count(*) AS BIGINT) AS n_nodes,
+               CAST(sum(d.deg) AS BIGINT) AS d_sum
+        FROM gm_deg d JOIN gm_comm c USING (v) GROUP BY c.community
+    ),
+    gm_intra AS (
+        SELECT a.community, CAST(count(*) AS BIGINT) AS e_intra
+        FROM dup_pairs p
+        JOIN gm_comm a ON p.doc_a = a.v
+        JOIN gm_comm b ON p.doc_b = b.v
+        WHERE a.community = b.community
+        GROUP BY a.community
+    ),
+    gm_rows AS (
+        SELECT pn.community, pn.n_nodes,
+               COALESCE(i.e_intra, 0) AS e_intra, pn.d_sum, m.m
+        FROM gm_pn pn LEFT JOIN gm_intra i USING (community)
+        CROSS JOIN gm_m m
+    )
+    SELECT community, n_nodes, e_intra, d_sum,
+           {sql_ppm('e_intra', 'm')} AS intra_ppm,
+           ({sql_ppm('d_sum', '2 * m')} * {sql_ppm('d_sum', '2 * m')})
+               // 1000000 AS expected_ppm,
+           CAST({sql_ppm('e_intra', 'm')}
+               - ({sql_ppm('d_sum', '2 * m')} * {sql_ppm('d_sum', '2 * m')})
+                   // 1000000 AS BIGINT) AS q_ppm
+    FROM gm_rows
+    """,
     doc=(
         "Newman modularity of the label-propagation communities over "
         "the verified near-dup graph: per community the node count, "
@@ -57,10 +106,6 @@ E6 = 1_000_000
 def dedup_community_modularity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from algorithmproject_spark_spark.operators.labelprop import (
-        label_propagation,
-    )
-
     pairs = tracked_cache(
         jaccard_pairs_above(spark, sf_dir).select("doc_a", "doc_b")
     )
@@ -110,65 +155,3 @@ def dedup_community_modularity(
         f"{expected_ppm} AS expected_ppm",
         f"({intra_ppm}) - ({expected_ppm}) AS q_ppm",
     )
-
-
-def _install_modularity_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.operators.labelprop import (
-        LPA_ITERS,
-        sql_label_propagation,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    oracle = f"""
-    WITH {sql_dup_pairs_cte()},
-    lp_edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM dup_pairs
-        UNION ALL
-        SELECT doc_b AS s, doc_a AS d FROM dup_pairs
-    ),
-    {sql_label_propagation('lp_edges', LPA_ITERS)},
-    gm_comm AS (SELECT v, lbl AS community FROM lp{LPA_ITERS}),
-    gm_m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM dup_pairs),
-    gm_deg AS (
-        SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-            SELECT doc_a AS v FROM dup_pairs
-            UNION ALL SELECT doc_b FROM dup_pairs
-        ) GROUP BY v
-    ),
-    gm_pn AS (
-        SELECT c.community,
-               CAST(count(*) AS BIGINT) AS n_nodes,
-               CAST(sum(d.deg) AS BIGINT) AS d_sum
-        FROM gm_deg d JOIN gm_comm c USING (v) GROUP BY c.community
-    ),
-    gm_intra AS (
-        SELECT a.community, CAST(count(*) AS BIGINT) AS e_intra
-        FROM dup_pairs p
-        JOIN gm_comm a ON p.doc_a = a.v
-        JOIN gm_comm b ON p.doc_b = b.v
-        WHERE a.community = b.community
-        GROUP BY a.community
-    ),
-    gm_rows AS (
-        SELECT pn.community, pn.n_nodes,
-               COALESCE(i.e_intra, 0) AS e_intra, pn.d_sum, m.m
-        FROM gm_pn pn LEFT JOIN gm_intra i USING (community)
-        CROSS JOIN gm_m m
-    )
-    SELECT community, n_nodes, e_intra, d_sum,
-           {sql_ppm('e_intra', 'm')} AS intra_ppm,
-           ({sql_ppm('d_sum', '2 * m')} * {sql_ppm('d_sum', '2 * m')})
-               // 1000000 AS expected_ppm,
-           CAST({sql_ppm('e_intra', 'm')}
-               - ({sql_ppm('d_sum', '2 * m')} * {sql_ppm('d_sum', '2 * m')})
-                   // 1000000 AS BIGINT) AS q_ppm
-    FROM gm_rows
-    """
-    REGISTRY["dedup_community_modularity"] = replace(
-        REGISTRY["dedup_community_modularity"], oracle=oracle
-    )
-
-
-_install_modularity_oracle()

@@ -35,7 +35,7 @@ from algorithmproject_spark_spark.queries.dedup import (
     jaccard_pairs_above,
     sql_dup_pairs_cte,
 )
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 #: frozen per-field (agreement, disagreement) weights in MILLI-BITS

@@ -35,6 +35,10 @@ from algorithmproject_spark_spark.functions.numeric import (
     ss_micros,
 )
 from algorithmproject_spark_spark.functions.text import sql_ngrams, ss_ngrams, ss_tokenize
+from algorithmproject_spark_spark.queries.dedup import (
+    jaccard_pairs_above,
+    sql_dup_pairs_cte,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -976,7 +980,29 @@ def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "split_leakage_audit",
-    oracle=None,  # installed below (needs dedup's pair CTE)
+    oracle=f"""
+    WITH {sql_dup_pairs_cte()},
+    sl_split AS (
+        SELECT doc_id,
+               CASE WHEN {sql_hash_mod('doc_id', SPLIT_MOD)} < {SPLIT_TRAIN_LT}
+                    THEN 'train'
+                    WHEN {sql_hash_mod('doc_id', SPLIT_MOD)} < {SPLIT_VAL_LT}
+                    THEN 'val' ELSE 'test' END AS split
+        FROM documents
+    ),
+    sl_tagged AS (
+        SELECT least(a.split, b.split) AS split_lo,
+               greatest(a.split, b.split) AS split_hi
+        FROM dup_pairs p
+        JOIN sl_split a ON p.doc_a = a.doc_id
+        JOIN sl_split b ON p.doc_b = b.doc_id
+    )
+    SELECT split_lo, split_hi,
+           CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(CASE WHEN split_lo <> split_hi THEN 1 ELSE 0 END AS BIGINT)
+               AS is_cross_split
+    FROM sl_tagged GROUP BY split_lo, split_hi
+    """,
     doc=(
         "near-dup split leakage audit: verified near-dup pairs whose "
         "endpoints land in different train/val/test splits, counted "
@@ -987,10 +1013,6 @@ def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.queries.dedup import (
-        jaccard_pairs_above,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
@@ -1025,40 +1047,3 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("is_cross_split"),
         )
     )
-
-
-def _install_split_leakage_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.queries.dedup import sql_dup_pairs_cte
-    from algorithmproject_spark_spark.registry import REGISTRY as _REG
-
-    oracle = f"""
-    WITH {sql_dup_pairs_cte()},
-    sl_split AS (
-        SELECT doc_id,
-               CASE WHEN {sql_hash_mod('doc_id', SPLIT_MOD)} < {SPLIT_TRAIN_LT}
-                    THEN 'train'
-                    WHEN {sql_hash_mod('doc_id', SPLIT_MOD)} < {SPLIT_VAL_LT}
-                    THEN 'val' ELSE 'test' END AS split
-        FROM documents
-    ),
-    sl_tagged AS (
-        SELECT least(a.split, b.split) AS split_lo,
-               greatest(a.split, b.split) AS split_hi
-        FROM dup_pairs p
-        JOIN sl_split a ON p.doc_a = a.doc_id
-        JOIN sl_split b ON p.doc_b = b.doc_id
-    )
-    SELECT split_lo, split_hi,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(CASE WHEN split_lo <> split_hi THEN 1 ELSE 0 END AS BIGINT)
-               AS is_cross_split
-    FROM sl_tagged GROUP BY split_lo, split_hi
-    """
-    _REG["split_leakage_audit"] = replace(
-        _REG["split_leakage_audit"], oracle=oracle
-    )
-
-
-_install_split_leakage_oracle()

@@ -64,11 +64,10 @@ from algorithmproject_spark_spark.queries.qualitymodel import (
     _sql_quality_prefix,
     quality_logit_cols,
 )
-from algorithmproject_spark_spark.registry import REGISTRY, register
+# the canonical heuristic-gate SQL — label lockstep by construction
+from algorithmproject_spark_spark.queries.text import DOC_QUALITY_SCORE_SQL
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
-
-#: the canonical heuristic-gate SQL — label lockstep by construction
-_LBL_SQL = REGISTRY["doc_quality_score"].oracle
 
 E6 = 1_000_000
 
@@ -136,7 +135,7 @@ def _sql_sl_prefix() -> str:
     score via qualitymodel's shared prefix, label via the registered
     heuristic SQL (oracle joins are fine; the Spark side is one scan)."""
     return f"""{_sql_quality_prefix()},
-    sl_lbl AS (SELECT doc_id, keep AS label FROM ({_LBL_SQL})),
+    sl_lbl AS (SELECT doc_id, keep AS label FROM ({DOC_QUALITY_SCORE_SQL})),
     sl AS (
         SELECT q.doc_id, q.lang, q.score_ppm, l.label
         FROM qscore q JOIN sl_lbl l USING (doc_id)
@@ -448,7 +447,7 @@ def _ss_gini(x: str, y: str, n: str) -> str:
     "token_label_gini_topk",
     plan=("scalar_cross",),
     oracle=f"""
-    WITH lbl AS (SELECT doc_id, keep AS label FROM ({_LBL_SQL})),
+    WITH lbl AS (SELECT doc_id, keep AS label FROM ({DOC_QUALITY_SCORE_SQL})),
     tls AS (
         SELECT unnest(list_distinct(string_split(d.text, ' '))) AS token,
                l.label

@@ -51,10 +51,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from algorithmproject_spark_spark.cacheutil import (
     tracked_cache,
     tracked_lazy_local_checkpoint,
-    tracked_local_checkpoint,
 )
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 CAP_ITEMS = 8  # per-basket item cap — bounds pair expansion at K²
@@ -103,9 +102,7 @@ def basket_pairs(baskets: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "copurchase_cosine_topk",
-    oracle=f"""
+COPURCHASE_COSINE_TOPK_SQL = f"""
     WITH capped AS (
         SELECT l_orderkey, p AS l_partkey
         FROM (
@@ -137,7 +134,12 @@ def basket_pairs(baskets: DataFrame) -> DataFrame:
     JOIN ci ci2 ON pairs.pj = ci2.l_partkey
     ORDER BY cos2_e6 DESC, part_i, part_j
     LIMIT {TOPK_PAIRS}
-    """,
+    """
+
+
+@register(
+    "copurchase_cosine_topk",
+    oracle=COPURCHASE_COSINE_TOPK_SQL,
     doc=(
         "item-item co-purchase cosine (capped baskets, integer-exact "
         "cos², top-30) — the CF similarity primitive"
@@ -392,13 +394,11 @@ def supplier_ra_link_prediction(
 # --------------------------------------------------------------------------
 TOPK_RECS = 3
 
-_COPURCHASE_SQL = REGISTRY["copurchase_cosine_topk"].oracle
-
 
 @register(
     "customer_item_recs_topk",
     oracle=f"""
-    WITH sims AS ({_COPURCHASE_SQL}),
+    WITH sims AS ({COPURCHASE_COSINE_TOPK_SQL}),
     sym AS (
         SELECT part_i AS src, part_j AS dst, cos2_e6 FROM sims
         UNION ALL

@@ -22,7 +22,7 @@ segmentation its pipelines would feed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
@@ -73,11 +73,10 @@ def _sql_cuts(rel: str, col: str, prefix: str) -> str:
     """
 
 
-def _register() -> None:
-    @register(
-        "customer_rfm_segments",
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "customer_rfm_segments",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH rfm_a AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS anchor FROM orders),
         rfm_o AS (
             -- recency anchored at the CORPUS max order date (a fixed
@@ -115,65 +114,62 @@ def _register() -> None:
                CAST(MIN(recency_d) AS BIGINT) AS min_recency_d
         FROM rfm_b GROUP BY r_band, f_band, m_band
         """,
-        doc="RFM lifecycle segmentation: per-customer recency/"
-        "frequency/monetary in exact integers, each banded into VALUE "
-        "quartiles via compacted-distribution cut points (no ntile, "
-        "no customer-relation sort), segment grid with counts and "
-        "exact value totals — the canonical commerce segmentation, "
-        "three broadcast 1-row cut scalars + one keyed aggregate",
+    doc="RFM lifecycle segmentation: per-customer recency/"
+    "frequency/monetary in exact integers, each banded into VALUE "
+    "quartiles via compacted-distribution cut points (no ntile, "
+    "no customer-relation sort), segment grid with counts and "
+    "exact value totals — the canonical commerce segmentation, "
+    "three broadcast 1-row cut scalars + one keyed aggregate",
+)
+def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    anchor = orders.agg(F.expr("max(to_date(o_orderdate)) AS anchor"))
+    per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.expr("max(to_date(o_orderdate)) AS last_order"),
+        F.expr("count(1) AS frequency"),
+        F.expr(f"sum({ss_scaled_long('o_totalprice')})").alias("monetary_e2"),
     )
-    def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders")
-        anchor = orders.agg(F.expr("max(to_date(o_orderdate)) AS anchor"))
-        per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.expr("max(to_date(o_orderdate)) AS last_order"),
-            F.expr("count(1) AS frequency"),
-            F.expr(f"sum({ss_scaled_long('o_totalprice')})").alias("monetary_e2"),
+    rfm = (
+        per_cust.crossJoin(F.broadcast(anchor))
+        .selectExpr(
+            "custkey",
+            "CAST(datediff(anchor, last_order) AS BIGINT) AS recency_d",
+            "frequency",
+            "monetary_e2",
         )
-        rfm = (
-            per_cust.crossJoin(F.broadcast(anchor))
-            .selectExpr(
-                "custkey",
-                "CAST(datediff(anchor, last_order) AS BIGINT) AS recency_d",
-                "frequency",
-                "monetary_e2",
-            )
-        )
-        rfm = tracked_cache(rfm)  # feeds three cut aggregations + the banding pass
-        rc = quartile_cuts(rfm, "recency_d").selectExpr(
-            "p25 AS r25", "p50 AS r50", "p75 AS r75"
-        )
-        fc = quartile_cuts(rfm, "frequency").selectExpr(
-            "p25 AS f25", "p50 AS f50", "p75 AS f75"
-        )
-        mc = quartile_cuts(rfm, "monetary_e2").selectExpr(
-            "p25 AS m25", "p50 AS m50", "p75 AS m75"
+    )
+    rfm = tracked_cache(rfm)  # feeds three cut aggregations + the banding pass
+    rc = quartile_cuts(rfm, "recency_d").selectExpr(
+        "p25 AS r25", "p50 AS r50", "p75 AS r75"
+    )
+    fc = quartile_cuts(rfm, "frequency").selectExpr(
+        "p25 AS f25", "p50 AS f50", "p75 AS f75"
+    )
+    mc = quartile_cuts(rfm, "monetary_e2").selectExpr(
+        "p25 AS m25", "p50 AS m50", "p75 AS m75"
+    )
+
+    def ss_band(col: str, pfx: str) -> str:
+        return (
+            f"1 + CAST({col} > {pfx}25 AS INT)"
+            f" + CAST({col} > {pfx}50 AS INT)"
+            f" + CAST({col} > {pfx}75 AS INT) AS {pfx}_band"
         )
 
-        def ss_band(col: str, pfx: str) -> str:
-            return (
-                f"1 + CAST({col} > {pfx}25 AS INT)"
-                f" + CAST({col} > {pfx}50 AS INT)"
-                f" + CAST({col} > {pfx}75 AS INT) AS {pfx}_band"
-            )
-
-        banded = (
-            rfm.crossJoin(F.broadcast(rc))
-            .crossJoin(F.broadcast(fc))
-            .crossJoin(F.broadcast(mc))
-            .selectExpr(
-                "monetary_e2",
-                "recency_d",
-                ss_band("recency_d", "r"),
-                ss_band("frequency", "f"),
-                ss_band("monetary_e2", "m"),
-            )
+    banded = (
+        rfm.crossJoin(F.broadcast(rc))
+        .crossJoin(F.broadcast(fc))
+        .crossJoin(F.broadcast(mc))
+        .selectExpr(
+            "monetary_e2",
+            "recency_d",
+            ss_band("recency_d", "r"),
+            ss_band("frequency", "f"),
+            ss_band("monetary_e2", "m"),
         )
-        return banded.groupBy("r_band", "f_band", "m_band").agg(
-            F.expr("count(1) AS n_customers"),
-            F.expr("sum(monetary_e2) AS segment_value_e2"),
-            F.expr("min(recency_d) AS min_recency_d"),
-        )
-
-
-_register()
+    )
+    return banded.groupBy("r_band", "f_band", "m_band").agg(
+        F.expr("count(1) AS n_customers"),
+        F.expr("sum(monetary_e2) AS segment_value_e2"),
+        F.expr("min(recency_d) AS min_recency_d"),
+    )

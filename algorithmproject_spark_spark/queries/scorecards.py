@@ -29,18 +29,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
-from algorithmproject_spark_spark.registry import REGISTRY, register
+from algorithmproject_spark_spark.queries.text import (
+    DOC_FINGERPRINT_SQL,
+    DOC_QUALITY_SCORE_SQL,
+    doc_fingerprint,
+    doc_quality_score,
+)
+from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
-
-_QUALITY_SQL = REGISTRY["doc_quality_score"].oracle
-_FP_SQL = REGISTRY["doc_fingerprint"].oracle
-
 
 @register(
     "source_quality_profile",
     oracle=f"""
-    WITH q AS ({_QUALITY_SQL}),
-    fp AS ({_FP_SQL}),
+    WITH q AS ({DOC_QUALITY_SCORE_SQL}),
+    fp AS ({DOC_FINGERPRINT_SQL}),
     d AS (SELECT doc_id, source, lang, text FROM documents),
     j AS (
         SELECT d.source, d.lang, q.keep, fp.fingerprint,
@@ -73,10 +75,10 @@ def source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.size(F.split("text", " ")).alias("n_tokens"),
     )
-    q = REGISTRY["doc_quality_score"].fn(spark, sf_dir).select(
+    q = doc_quality_score(spark, sf_dir).select(
         "doc_id", "keep"
     )
-    fp = REGISTRY["doc_fingerprint"].fn(spark, sf_dir).select(
+    fp = doc_fingerprint(spark, sf_dir).select(
         "doc_id", "fingerprint"
     )
     j = docs.join(q, "doc_id").join(fp, "doc_id")

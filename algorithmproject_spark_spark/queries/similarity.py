@@ -45,10 +45,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "knn_bruteforce_cosine",
-    plan=("scalar_cross",),
-    oracle=f"""
+KNN_BRUTEFORCE_COSINE_SQL = f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}),
     scored AS (
         SELECT q.q_id, e.vec_id AS neighbor_id,
@@ -61,7 +58,13 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY q_id ORDER BY cosine_e6 DESC, neighbor_id
         ) AS rk FROM scored
     ) WHERE rk <= {TOP_K}
-    """,
+    """
+
+
+@register(
+    "knn_bruteforce_cosine",
+    plan=("scalar_cross",),
+    oracle=KNN_BRUTEFORCE_COSINE_SQL,
     doc="ANN baseline: brute-force cosine top-k (broadcast query side)",
 )
 def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:

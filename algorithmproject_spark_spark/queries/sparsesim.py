@@ -150,18 +150,14 @@ def _sql_sparse_topk(max_df: int = MAX_DF, top_k: int = TOP_K) -> str:
     """
 
 
-def _register() -> None:
-    @register(
-        "sparse_tfidf_topk_pairs",
-        oracle=_sql_sparse_topk(),
-        doc="Sparse retrieval: per-doc top-5 neighbors by exact "
-        "integer tf·idf bigram dot product via a df-banded "
-        "(2..12) posting-list self-join — both join sides carry "
-        "the band filter, shared-term count and scaled dot "
-        "returned, deterministic (dot desc, doc_b) tiebreak",
-    )
-    def sparse_tfidf_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return sparse_topk_pairs(load_table(spark, sf_dir, "documents"))
-
-
-_register()
+@register(
+    "sparse_tfidf_topk_pairs",
+    oracle=_sql_sparse_topk(),
+    doc="Sparse retrieval: per-doc top-5 neighbors by exact "
+    "integer tf·idf bigram dot product via a df-banded "
+    "(2..12) posting-list self-join — both join sides carry "
+    "the band filter, shared-term count and scaled dot "
+    "returned, deterministic (dot desc, doc_b) tiebreak",
+)
+def sparse_tfidf_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sparse_topk_pairs(load_table(spark, sf_dir, "documents"))

@@ -22,7 +22,7 @@ BIGINT (diffs < 2²², squares < 2⁴⁴).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
@@ -35,10 +35,12 @@ CELL_W = 1 << 14  # grid cell width == search radius (≈0.0156 units)
 TOPK_PAIRS = 20
 
 
-def _fixed(col: Column) -> Column:
-    return F.floor(
-        col.cast("double") * F.lit(float(1 << SCALE_BITS)) + F.lit(0.5)
-    ).cast("long") + F.lit(COORD_OFFSET)
+def _ss_fixed(expr: str) -> str:
+    return (
+        f"CAST(floor(CAST({expr} AS DOUBLE)"
+        f" * {float(1 << SCALE_BITS)!r}D + 0.5D) AS BIGINT)"
+        f" + {COORD_OFFSET}"
+    )
 
 
 def _sql_fixed(expr: str) -> str:
@@ -86,17 +88,10 @@ def grid_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # one-parse text glue (r13): identical expressions, ~180 fewer
     # py4j trips per consumer build
-    def ss_fixed(expr: str) -> str:
-        return (
-            f"CAST(floor(CAST({expr} AS DOUBLE)"
-            f" * {float(1 << SCALE_BITS)!r}D + 0.5D) AS BIGINT)"
-            f" + {COORD_OFFSET}"
-        )
-
     pts = emb.selectExpr(
         "vec_id",
-        f"{ss_fixed('element_at(embedding, 1)')} AS x",
-        f"{ss_fixed('element_at(embedding, 2)')} AS y",
+        f"{_ss_fixed('element_at(embedding, 1)')} AS x",
+        f"{_ss_fixed('element_at(embedding, 2)')} AS y",
     )
     cells = pts.selectExpr(
         "vec_id",

@@ -95,9 +95,7 @@ def doc_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Token statistics per document (training-data pipeline: token counting).
 # --------------------------------------------------------------------------
-@register(
-    "doc_token_stats",
-    oracle="""
+DOC_TOKEN_STATS_SQL = """
     SELECT doc_id,
            len(string_split(text, ' ')) AS n_tokens,
            len(list_distinct(string_split(text, ' '))) AS n_distinct,
@@ -105,7 +103,12 @@ def doc_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(floor((CAST(length(text) AS DOUBLE) / len(string_split(text, ' '))) * 1000000.0 + 0.5) AS BIGINT)
                AS chars_per_token_e6
     FROM documents
-    """,
+    """
+
+
+@register(
+    "doc_token_stats",
+    oracle=DOC_TOKEN_STATS_SQL,
     doc="token counting + type/token stats per doc",
 )
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,9 +133,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # before training (reference analogue: corpus cost filters,
 # PrepData.scala:184-188: content>300 chars, 20<grams<200).
 # --------------------------------------------------------------------------
-@register(
-    "doc_quality_score",
-    oracle=f"""
+DOC_QUALITY_SCORE_SQL = f"""
     SELECT doc_id,
            sw_ratio_e6,
            rep_ratio_e6,
@@ -150,7 +151,12 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS rep_ratio_e6
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
     )
-    """,
+    """
+
+
+@register(
+    "doc_quality_score",
+    oracle=DOC_QUALITY_SCORE_SQL,
     doc="quality gates: stopword ratio / repetition ratio / length band",
 )
 def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,9 +203,7 @@ def _sql_hits(markers: tuple[str, ...]) -> str:
     return f"len(list_filter(toks, t_ -> list_contains({lst}, t_)))"
 
 
-@register(
-    "doc_lang_id",
-    oracle=f"""
+DOC_LANG_ID_SQL = f"""
     SELECT doc_id, lang,
            CASE
              WHEN en_hits >= es_hits AND en_hits >= de_hits THEN 'en'
@@ -214,7 +218,12 @@ def _sql_hits(markers: tuple[str, ...]) -> str:
                {_sql_hits(_LANG_MARKERS["de"])} AS de_hits
         FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents)
     )
-    """,
+    """
+
+
+@register(
+    "doc_lang_id",
+    oracle=DOC_LANG_ID_SQL,
     doc="language-ID n-gram-marker heuristic with deterministic argmax",
 )
 def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,12 +257,15 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Document fingerprinting (training-data pipeline): polynomial rolling
 # hash of the full text — engine-portable exact integers.
 # --------------------------------------------------------------------------
-@register(
-    "doc_fingerprint",
-    oracle=f"""
+DOC_FINGERPRINT_SQL = f"""
     SELECT doc_id, {sql_char_fold_hash("text")} AS fingerprint
     FROM documents
-    """,
+    """
+
+
+@register(
+    "doc_fingerprint",
+    oracle=DOC_FINGERPRINT_SQL,
     doc="rolling-hash document fingerprint (exact cross-engine integers)",
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:

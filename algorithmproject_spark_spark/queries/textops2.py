@@ -17,6 +17,10 @@ from algorithmproject_spark_spark.functions.text import (
     ss_tokenize,
 )
 from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
+from algorithmproject_spark_spark.functions.pos import (
+    sql_pos_bigram_cte,
+    sql_pos_unigram_cte,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -398,8 +402,14 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scales with input splits and the only shuffle is the final count.
 @register(
     "doc_pos_bigrams",
-    plan=("arrow",),
-    oracle=None,  # set below after import to avoid circular fstring clutter
+    oracle=sql_pos_bigram_cte("documents")
+    + """
+    SELECT gram, n FROM (
+        SELECT gram, count(*) AS n FROM grams GROUP BY gram
+    )
+    ORDER BY n DESC, gram
+    LIMIT 40
+    """,
     doc="T6: rule-based lemma+POS tagging, NN+NN/JJ+NN/VB+NN bigram "
     "admission (NewsNgrams.scala:110-130), corpus top-40",
 )
@@ -425,31 +435,6 @@ def doc_pos_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_pos_oracle() -> None:
-    from algorithmproject_spark_spark.functions.pos import sql_pos_bigram_cte
-    from algorithmproject_spark_spark.registry import REGISTRY, QuerySpec
-
-    spec = REGISTRY["doc_pos_bigrams"]
-    sql = (
-        sql_pos_bigram_cte("documents")
-        + """
-    SELECT gram, n FROM (
-        SELECT gram, count(*) AS n FROM grams GROUP BY gram
-    )
-    ORDER BY n DESC, gram
-    LIMIT 40
-    """
-    )
-    # dataclasses.replace, NOT a field-by-field rebuild: keeps every
-    # other spec field (e.g. the declared plan traits) intact
-    from dataclasses import replace
-
-    REGISTRY["doc_pos_bigrams"] = replace(spec, oracle=sql)
-
-
-_install_pos_oracle()
-
-
 # T6 unigram branch: the reference's n-gram output ALSO emits single
 # lemmas, admitted when tagged NN/JJ only (VB deliberately excluded —
 # AppsTextCoreNLPTokens.scala:154, PrepProcess.scala:288). Round 12
@@ -457,7 +442,14 @@ _install_pos_oracle()
 # list was parity-tested but never applied by any engine query).
 @register(
     "doc_pos_unigrams",
-    oracle=None,  # installed below (shares the pos-module CTE builder)
+    oracle=sql_pos_unigram_cte("documents")
+    + """
+    SELECT lem, n FROM (
+        SELECT lem, count(*) AS n FROM u_unis GROUP BY lem
+    )
+    ORDER BY n DESC, lem
+    LIMIT 40
+    """,
     doc="T6 unigram admission: rule-based lemma+POS tagging, NN/JJ "
     "unigram filter (AppsTextCoreNLPTokens.scala:154), corpus top-40",
 )
@@ -482,28 +474,3 @@ def doc_pos_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(40)
     )
 
-
-def _install_pos_uni_oracle() -> None:
-    from dataclasses import replace
-
-    from algorithmproject_spark_spark.functions.pos import (
-        sql_pos_unigram_cte,
-    )
-    from algorithmproject_spark_spark.registry import REGISTRY
-
-    sql = (
-        sql_pos_unigram_cte("documents")
-        + """
-    SELECT lem, n FROM (
-        SELECT lem, count(*) AS n FROM u_unis GROUP BY lem
-    )
-    ORDER BY n DESC, lem
-    LIMIT 40
-    """
-    )
-    REGISTRY["doc_pos_unigrams"] = replace(
-        REGISTRY["doc_pos_unigrams"], oracle=sql
-    )
-
-
-_install_pos_uni_oracle()

@@ -53,7 +53,7 @@ in round 9 with the training path a production curation pipeline needs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.hashing import (
@@ -68,11 +68,11 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import ss_micros
 from algorithmproject_spark_spark.functions.text import ss_stopword_array
-from algorithmproject_spark_spark.queries.modeleval import _LBL_SQL
 from algorithmproject_spark_spark.queries.qualitymodel import (
     QMB_DIM,
     _sql_quality_prefix,
 )
+from algorithmproject_spark_spark.queries.text import DOC_QUALITY_SCORE_SQL
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -491,7 +491,7 @@ _SQL_EVAL_SCORE = f"""te_h AS (
 def _with_lbl(body: str) -> str:
     """Bind ``lbl_all`` (the registered heuristic-label SQL, which also
     exposes the n_tokens / ratio columns the band features read)."""
-    return f"WITH lbl_all AS ({_LBL_SQL}),\n    {body}"
+    return f"WITH lbl_all AS ({DOC_QUALITY_SCORE_SQL}),\n    {body}"
 
 
 def score_with_weights(

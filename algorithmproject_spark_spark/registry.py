@@ -30,11 +30,19 @@ class QuerySpec:
     plan: frozenset = frozenset()  # declared plan traits (PLAN_TRAITS)
 
 
+# Write-once index of every named query. ``register`` is its only
+# writer: a query's oracle, doc and plan traits are fixed at its
+# ``@register`` site and never patched afterwards. Library modules do
+# not read it either — a query that reuses another's oracle or function
+# imports it from the defining module, so the registry's contents do
+# not depend on import order. Readers are the tools, the tests,
+# ``bench.py`` and ``__spark_entry__.py``.
 REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str | None, doc: str = "", plan=()):
-    """Decorator: add a query to the registry.
+    """Decorator: add a query to the registry — the only way an entry
+    is created, and entries are never rewritten.
 
     ``plan`` declares intentional plan shapes the linter would
     otherwise flag — see PLAN_TRAITS. Undeclared traits are lint

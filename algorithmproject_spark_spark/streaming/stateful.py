@@ -193,65 +193,3 @@ def user_profile_stateful(
         outputMode="update",
         timeoutConf=timeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState — Spark 4's successor API to applyInPandasWithState:
-# typed per-key state handles (value/list/map state, TTL, timers) instead
-# of one opaque GroupState tuple. The container lacks `protobuf`, which
-# the API's state-server protocol requires at QUERY START (plan
-# construction is fine), so the end-to-end path is exercised by
-# tests/test_streaming.py when protobuf is importable and contract-pinned
-# otherwise — the applyInPandasWithState twin above stays the executable
-# default here.
-# ---------------------------------------------------------------------------
-def user_profile_tws(events):
-    """Per-user running profile via transformWithStateInPandas: a
-    ValueState (n_events, sum_value) updated per micro-batch. Same
-    semantics as :func:`user_profile_stateful`; typed state + explicit
-    handle lifecycle instead of the GroupState blob."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", LongType()),
-        ]
-    )
-
-    class ProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "profile",
-                StructType(
-                    [
-                        StructField("n", LongType(), True),
-                        StructField("sv", LongType(), True),
-                    ]
-                ),
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, sv = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                sv += int(pdf["value"].sum())
-            self._state.update((n, sv))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [sv]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=ProfileProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -55,8 +55,6 @@ def test_declared_traits_cover_the_old_allowlists():
 
     assert "arrow" in REGISTRY["rake_topk"].plan
     assert "arrow" in REGISTRY["curation_pipeline"].plan
-    assert "arrow" in REGISTRY["doc_pos_bigrams"].plan  # survives the
-    # oracle re-install (dataclasses.replace, not a field rebuild)
     assert "scalar_cross" in REGISTRY["tfidf_top_terms"].plan
     assert "scalar_cross" in REGISTRY["customer_rfm_segments"].plan
     assert "global_sort" in REGISTRY["window_global_rownum"].plan

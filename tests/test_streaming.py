@@ -445,59 +445,6 @@ def test_foreach_batch_exactly_once_sink_end_to_end(spark, tmp_path):
     assert len({r["user_id"] for r in rows}) == len(rows)
 
 
-def test_transform_with_state_profile(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: plan constructs against a
-    streaming source unconditionally; the micro-batch execution runs
-    end-to-end when `protobuf` (the API's state-server protocol dep)
-    is available and is skipped otherwise — the boundary is the
-    missing library, not this operator."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from algorithmproject_spark_spark.streaming.stateful import (
-        user_profile_tws,
-    )
-
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "100")
-        .load()
-        .select(
-            (F.col("value") % 3).alias("user_id"),
-            F.col("value").alias("value"),
-        )
-    )
-    out = user_profile_tws(stream)  # plan construction must succeed
-    assert set(out.schema.fieldNames()) == {"user_id", "n_events", "sum_value"}
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not in container; execution path env-blocked")
-
-    import time
-
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_profile")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 40
-        rows = []
-        while time.time() < deadline:
-            q.processAllAvailable()
-            rows = spark.sql("SELECT * FROM tws_profile").collect()
-            if rows:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert rows and all(r["n_events"] > 0 for r in rows)
-
-
 def test_stream_static_enrichment_join(spark, events_dir):
     """Stream-static join: every micro-batch row is enriched from the
     batch-side dimension with no streaming state; result equals the
